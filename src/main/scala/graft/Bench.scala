@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry point (driver contract): runs every registered query
   * at SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
@@ -13,63 +11,21 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 32)
+    val runs = SessionDefaults.envInt("SPARK_GRAFT_BENCH_RUNS", 3)
     // scale-aware protocol knob (VERDICT r13 item 6): the decade studies
     // pin partitions=32 at every sf for comparability, which converts
     // n·log n sorts into first-spill cliffs at sf10+ and understates AQE.
     // sf10/sf100 boards additionally run with partitions ∝ sf (e.g. 320)
     // so slope adjudications can separate algorithm from protocol; both
     // readings are ledgered in BASELINE.md.
-    val partitions = sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTITIONS", cpus)
-    // Scale-tier session confs (broadcast thresholds, compression-
-    // factor estimate correction, maxResultSize) are LIBRARY defaults:
-    // graft.SessionDefaults derives them from the corpus footprint
-    // (VERDICT r16 item 4 — the engine owns its deployment confs, the
-    // bench merely consumes them). Env-overridable for A/Bs via
-    // SPARK_GRAFT_BCAST / SPARK_GRAFT_BCAST_AQE, resolved inside
-    // SessionDefaults.forDir; SessionDefaultsSpec pins the per-tier
-    // values and the override semantics.
-    val tier = SessionDefaults.forDir(sfDir)
-    val bcastStatic = tier.bcastStatic
-    val spark = SessionDefaults.configure(SparkSession.builder(), tier)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", partitions)
-      // AQE post-shuffle coalescing knobs, MEASURED r16 and pinned at
-      // Spark's defaults: parallelismFirst=false + a 64m advisory
-      // (the guide-§2.2 cluster recipe) was A/B'd at the bench SF and
-      // LOST — it coalesces every mid-size shuffle to one partition
-      // and serializes exactly the stages the fixture board is bound
-      // by (q166 7.5→10.8 s, q28 4.3→5.0 s in the JobStats profile),
-      // while the default parallelismFirst=true already coalesces
-      // KB-sized shuffles to single tasks via minPartitionSize. At the
-      // sf100 tier the default targets bytes/partitions ≈ 30 MB,
-      // inside the guide's band, so one setting serves every tier.
-      // Env-overridable so the A/B stays reproducible.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_PFIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config(Tables.NanosConf, "true")
-      // explicit shuffle-transport integrity confs (reference iterates
-      // codecs per suite and checks CRCs; Spark analogues are context-
-      // static, so they are pinned here and covered by CodecSpec).
-      // Codec default: zstd. ColumnarBench measured it shrinking the
-      // row-major shuffle payload 31-34% vs lz4 at identical content,
-      // and the full-bench A/B was runtime-neutral (63.5s vs 64.3s over
-      // 83 queries — inside container noise); at cluster scale the
-      // shuffle-byte saving is pure win. A/B numbers in BASELINE.md.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.shuffle.checksum.enabled", "true")
-      .config("spark.shuffle.spill.compress", "true")
-      .config("spark.shuffle.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val partitions = SessionDefaults.envInt("SPARK_GRAFT_BENCH_PARTITIONS", cpus)
+    // the one session profile (scale-tier confs derived from the corpus
+    // footprint, zstd shuffle codec, UTC); AQE's coalescing knobs stay
+    // at Spark's defaults, which the r16 A/B measured as the faster
+    // setting at the bench SF (BASELINE.md)
+    val bcastStatic = SessionDefaults.forDir(sfDir).bcastStatic
+    val spark = SessionDefaults.session(sfDir, s"local[$cpus]", partitions)
 
     // (trigger count, median per-batch sec) of each streaming query's
     // last timed run: the honesty annotation — a throttled-trigger
@@ -178,11 +134,9 @@ object Bench {
     // both numbers. A genuinely regressed query stays >2x on the
     // re-run; a load artifact doesn't. Subset runs skip this — their
     // board is a dev probe, not an invariant claim.
-    // ledger baselines are sf0.1 numbers — comparing another SF's board
-    // against them would adjudicate everything (or nothing) spuriously
-    val atLedgerSf = sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+    val ledgerSf = atLedgerSf(sfDir)
     val adjudicated: Seq[(String, Double, Double)] =
-      if (only.nonEmpty || !atLedgerSf) Seq.empty
+      if (only.nonEmpty || !ledgerSf) Seq.empty
       else {
         val baselines = Baselines.parse()
         all.collect {
@@ -204,7 +158,7 @@ object Bench {
     // classifying container windows (216 vs 249 vs a rejected 282 s for
     // identical code). Stamp the board with the anchor queries' ratio to
     // their ledger baseline AT RUN TIME plus a machine verdict, so any
-    // consumer (BoardStats, the driver, a judge) can classify the window
+    // consumer (the driver, a judge) can classify the window
     // without re-deriving it. Anchors are the four stable scan/agg
     // shapes the r14m hand-adjudication used (flat in the quiet run,
     // 30-50% up in the rejected one); threshold 1.2 splits those two
@@ -213,7 +167,7 @@ object Bench {
     val anchorNames = Seq("q01_scan_filter", "q06_groupby_count",
       "q07_tpch_q1", "q104_tpch_q6")
     val anchorRatios: Seq[(String, Double)] =
-      if (!atLedgerSf) Seq.empty
+      if (!ledgerSf) Seq.empty
       else {
         val bl = Baselines.parse()
         val m = all.toMap
@@ -237,13 +191,12 @@ object Bench {
     // the COMPLETE machine-readable board (belt-and-braces against any
     // stdout truncation): target/bench_board.json for tooling plus a
     // TRACKED copy at BENCH_BOARD.json (target/ is gitignored) so every
-    // round's full board is diffable in git history. The tracked copy is
-    // written ONLY on full-registry runs AT THE LEDGER SF — a
-    // SPARK_GRAFT_BENCH_ONLY dev subset (ADVICE r9) or a full run at a
-    // different scale factor (an sf0.01 smoke run did exactly this in
-    // r12) must not silently clobber the committed sf0.1 board.
+    // round's full board is diffable in git history — written only for
+    // the canonical board shape (see [[writesTrackedBoard]]).
+    val fullRegistry = only.isEmpty && excl.isEmpty
     val boardPaths = "target/bench_board.json" ::
-      (if (only.isEmpty && atLedgerSf) List("BENCH_BOARD.json") else Nil)
+      (if (writesTrackedBoard(fullRegistry, sfDir, cpus, partitions))
+        List("BENCH_BOARD.json") else Nil)
     boardPaths.foreach { p =>
       try {
         val out = java.nio.file.Paths.get(p)
@@ -281,4 +234,17 @@ object Bench {
     println(line)
     spark.stop()
   }
+
+  /** Ledger baselines are sf0.1 numbers: comparing another SF's board
+    * against them would adjudicate everything (or nothing) spuriously. */
+  def atLedgerSf(sfDir: String): Boolean =
+    sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+
+  /** Whether a run may overwrite the tracked `BENCH_BOARD.json`: only
+    * the canonical board — the full registry at the ledger SF on 32
+    * cores with one shuffle partition per core. A dev subset, another
+    * SF or an 8-core run writes `target/bench_board.json` alone. */
+  def writesTrackedBoard(fullRegistry: Boolean, sfDir: String, cpus: Int,
+      partitions: Int): Boolean =
+    fullRegistry && atLedgerSf(sfDir) && cpus == 32 && partitions == cpus
 }

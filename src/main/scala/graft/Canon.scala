@@ -37,8 +37,8 @@ object Canon {
   // ------------------------------------------------------- paired longs
   // Exact decimal sums without decimal AGGREGATION buffers (r13h found
   // Spark's DECIMAL(38,12) sum path — JavaBigDecimal per row inside the
-  // hash agg — 7-27x off DuckDB's int128 per core; the paired-longs
-  // prototype graft.DecimalAb measured 4-7.5x recovery, bit-identical).
+  // hash agg — 7-27x off DuckDB's int128 per core; a paired-longs
+  // prototype measured 4-7.5x recovery, bit-identical).
   //
   // Theorem (exactness): let each term t be an exact multiple of 10^-s
   // with |t|·10^s < 2^63. Then u = t·10^s is an exact long; writing

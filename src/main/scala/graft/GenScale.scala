@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator: replicates a fixture scale-factor
@@ -39,21 +39,15 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "target/sf1"
-    val copies = if (args.length > 2) args(2).toInt else 10
+    val copies =
+      if (args.length > 2) SessionDefaults.positiveInt("copies", args(2)) else 10
     // optional 4th arg: comma-separated table subset (e.g. "documents"
     // for the simhash tier-3 horizon corpus — 2000 copies of ONE table
     // instead of 30 GB of all ten)
     val tables: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 32)
+    val spark = SessionDefaults.session(srcDir, s"local[$cpus]", cpus)
 
     def raw(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (r16 optimization round): noise-robust cost profile of
   * registry queries. Wall-clock on this container swings 2-4x between
@@ -10,33 +9,14 @@ import org.apache.spark.sql.SparkSession
   * deterministic for a fixed plan and measure exactly the fixed
   * overheads (actions, stages, task launches) the fixture board is
   * dominated by. `runMain graft.JobStats q1,q2,...` — one warm-up, one
-  * counted run per query, Bench's session confs (env-overridable the
-  * same way).
+  * counted run per query, Bench's session profile.
   */
 object JobStats {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionDefaults.configure(
-      SparkSession.builder(), SessionDefaults.forDir(sfDir))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_PFIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION", "64m"))
-      .config(Tables.NanosConf, "true")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "zstd"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 32)
+    val spark = SessionDefaults.session(sfDir, s"local[$cpus]",
+      SessionDefaults.envInt("SPARK_GRAFT_BENCH_PARTITIONS", cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var jobs = 0

@@ -3,30 +3,20 @@ package graft
 /** Dev tool: write `.explain("formatted")` for the named registry
   * queries to files (`runMain graft.PlanDump outDir suffix q1,q2,...`
   * or `all`) — the r16 optimization round's evidence artifacts
-  * (`plans/r16/<query>_before.txt` / `_after.txt`). Uses the same
-  * session shape as Bench INCLUDING the SessionDefaults scale-tier
-  * confs (ADVICE r16: the tier-aware broadcast thresholds and
-  * fileCompressionFactor change broadcast choices, so plans dumped at
-  * the sf100 tier now match what Bench actually runs), pre-execution
-  * (AQE final plans are ledgered separately via PlanPeek where they
-  * differ materially). SPARK_GRAFT_SF_DIR picks the corpus (default
-  * sf0.1, the bench SF).
+  * (`plans/r16/<query>_before.txt` / `_after.txt`). Uses Bench's
+  * session profile, scale-tier confs included (the tier-aware
+  * broadcast thresholds and fileCompressionFactor change broadcast
+  * choices, so plans dumped at the sf100 tier match what Bench runs),
+  * pre-execution (`Runner --explain` prints the AQE final plan).
+  * SPARK_GRAFT_SF_DIR picks the corpus (default sf0.1, the bench SF).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionDefaults.configure(
-      org.apache.spark.sql.SparkSession.builder(), SessionDefaults.forDir(sfDir))
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 32)
+    val spark = SessionDefaults.session(sfDir, s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query CLI (SURVEY §7's ops-runner analogue of the reference's
   * CLI, cli/src/main/scala/org/apache/celeborn/cli/CelebornCli.scala):
   * run ONE registered query by ID against a data dir and print its
@@ -30,20 +28,14 @@ object Runner {
     }
     val name = pos(0)
     val sfDir = if (pos.length > 1) pos(1) else "/root/testdata/sf0.01"
-    val maxRows = flags.collectFirst { case f if f.startsWith("--rows=") => f.drop(7).toInt }
-      .getOrElse(20)
+    val maxRows = flags.collectFirst {
+      case f if f.startsWith("--rows=") => SessionDefaults.positiveInt("--rows", f.drop(7))
+    }.getOrElse(20)
     require(SparkEntry.queries.contains(name),
       s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 4)
+    val spark = SessionDefaults.session(sfDir, s"local[$cpus]", cpus)
 
     if (flags.contains("--metrics")) { Metrics.install(spark); Metrics.tagQuery(name) }
     val df = SparkEntry.queries(name)(spark, sfDir)

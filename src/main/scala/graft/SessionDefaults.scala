@@ -1,9 +1,16 @@
 package graft
 
-/** Scale-tier session configuration — the LIBRARY's deployment defaults,
-  * not a bench-harness detail (VERDICT r16 item 4: these confs are what
-  * make q105/q21/q62/q72/q87 survive the sf100 tier, so they belong to
-  * the engine; Bench/PlanDump/JobStats are consumers).
+import org.apache.spark.sql.SparkSession
+
+/** The one session profile: every entry point (Bench, Verify, Runner,
+  * PlanDump, JobStats, GenScale) and the test session build their
+  * SparkSession through [[session]], so the answer Verify checks is
+  * computed under the confs Bench times. The profile is the scale-tier
+  * confs (the LIBRARY's deployment defaults — they are what make
+  * q105/q21/q62/q72/q87 survive the sf100 tier) plus a fixed base:
+  * UTC, the nanos-timestamp fixture conf, the UI off and the zstd
+  * shuffle codec. Everything else is Spark's own default (AQE, skew
+  * join, partition coalescing, shuffle checksums and compression).
   *
   * The tier key is the corpus footprint, probed from the on-disk bytes
   * of the largest fact table (`lineitem`):
@@ -63,22 +70,6 @@ object SessionDefaults {
     else if (lineitemBytes > Sf10FloorBytes) Tier("64m", "64m", "1.0")
     else Tier("10m", "10m", "1.0")
 
-  /** [[tierFor]] with the bench A/B override pair applied: an explicit
-    * static override also becomes the adaptive value unless the
-    * adaptive override is itself set (so `SPARK_GRAFT_BCAST=10m` alone
-    * reproduces the plain-Spark plan end to end). */
-  def tierFor(lineitemBytes: Long, overrideStatic: Option[String],
-      overrideAdaptive: Option[String]): Tier = {
-    val base = tierFor(lineitemBytes)
-    overrideStatic match {
-      case Some(s) =>
-        base.copy(bcastStatic = s,
-          bcastAdaptive = overrideAdaptive.getOrElse(s))
-      case None =>
-        base.copy(bcastAdaptive = overrideAdaptive.getOrElse(base.bcastAdaptive))
-    }
-  }
-
   /** On-disk bytes of `$sfDir/lineitem.parquet` — the tier probe.
     * Session-free (callers size the tier BEFORE building the session). */
   def lineitemBytes(sfDir: String): Long = {
@@ -87,14 +78,44 @@ object SessionDefaults {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** Resolve the tier for a corpus directory, env overrides included —
-    * the one-call entry point Bench/PlanDump/JobStats share. */
-  def forDir(sfDir: String): Tier =
-    tierFor(lineitemBytes(sfDir),
-      sys.env.get("SPARK_GRAFT_BCAST"), sys.env.get("SPARK_GRAFT_BCAST_AQE"))
+  /** The tier for a corpus directory. */
+  def forDir(sfDir: String): Tier = tierFor(lineitemBytes(sfDir))
 
   /** Apply a tier's confs to a session builder. */
-  def configure(b: org.apache.spark.sql.SparkSession.Builder,
-      tier: Tier): org.apache.spark.sql.SparkSession.Builder =
-    tier.confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  def configure(b: SparkSession.Builder, tier: Tier): SparkSession.Builder =
+    withConfs(b, tier.confs)
+
+  /** The full profile for a tier: its confs plus the tier-independent
+    * base every session carries. zstd shrank the row-major shuffle
+    * payload 31-34% against the lz4 default at runtime parity
+    * (BASELINE.md, round 5). */
+  def profile(tier: Tier, partitions: Int): Seq[(String, String)] =
+    tier.confs ++ Seq(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.session.timeZone" -> "UTC",
+      Tables.NanosConf -> "true",
+      "spark.ui.enabled" -> "false",
+      "spark.io.compression.codec" -> "zstd")
+
+  /** The only place a SparkSession is built: [[profile]] for `sfDir`'s
+    * tier on `master` with `partitions` shuffle partitions. */
+  def session(sfDir: String, master: String, partitions: Int): SparkSession = {
+    val spark = withConfs(SparkSession.builder().master(master),
+      profile(forDir(sfDir), partitions)).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def withConfs(b: SparkSession.Builder,
+      confs: Seq[(String, String)]): SparkSession.Builder =
+    confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** `raw` as a positive Int, or an error naming `key` and the value. */
+  def positiveInt(key: String, raw: String): Int =
+    raw.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a positive integer, got '$raw'"))
+
+  /** [[positiveInt]] over env var `key`, `default` when it is unset. */
+  def envInt(key: String, default: Int): Int =
+    sys.env.get(key).fold(default)(positiveInt(key, _))
 }

@@ -19,7 +19,7 @@ object Tables {
   /** Fixture quirk (historical): some generator versions write `events.ts`
     * as INT64 TIMESTAMP(NANOS) parquet, which Spark 4 rejects outright
     * (PARQUET_TYPE_ILLEGAL) unless this session conf is set. It must be set
-    * at session CONSTRUCTION (Bench, Verify, and test builders all do) —
+    * at session CONSTRUCTION (SessionDefaults.session does) —
     * schema inference consults only the session conf, so a per-read option
     * cannot express it. Newer fixtures write plain TIMESTAMP(MICROS); the
     * loader below handles either encoding by inspecting the read schema. */
@@ -83,16 +83,10 @@ object Tables {
     * until after the explode. */
   def fanOut(spark: SparkSession, dir: String, name: String,
       keys: org.apache.spark.sql.Column*)(df: DataFrame): DataFrame = {
-    // dev A/B toggles (r17 quiet re-pin protocol): =0 disables the
-    // fan-out outright, _WIDTH pins the repartition width — so the
-    // width-vs-contention A/B runs against one binary
-    if (sys.env.get("SPARK_GRAFT_FANOUT").contains("0")) return df
     val bytes = bytesOf(spark, dir, name)
-    val p = sys.env.get("SPARK_GRAFT_FANOUT_WIDTH").map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
-    // the SESSION's split size, not the 128 MB default — an env override
-    // (SPARK_GRAFT_MAX_PARTITION_BYTES in JobStats) must not make this
-    // guard mis-predict the planned scan splits (ADVICE r16)
+    val p = spark.sparkContext.defaultParallelism
+    // the SESSION's split size, not the 128 MB default, so the guard
+    // predicts the scan's planned splits under any session conf
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val plannedSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     if (bytes <= FanOutCapBytes && plannedSplits < p)
@@ -102,30 +96,6 @@ object Tables {
 
   /** See [[fanOut]]. */
   val FanOutCapBytes: Long = 256L << 20
-
-  /** [[fanOut]] + ONE eager localCheckpoint — for multi-scan iterative
-    * consumers (the refined-quantile family re-reads its base 4-9
-    * times: range init + one scan per bracket pass).
-    *
-    * UNUSED as of r17 — kept as a documented negative result. The r16
-    * round shipped this on noisy-window walls after a bare fanOut made
-    * the family worse (q150 5.4→12.2 s: every pass re-paid the
-    * exchange); the r17 QUIET 32-core JobStats A/B (SPARK_GRAFT_PIN=0
-    * toggle) measured the pin losing to PLAIN re-scans across all
-    * seven call sites — walls 1.3-2.3× worse and summed task time
-    * 10-30× worse (q150: 4.1 s plain vs 111.6 s pinned; q126 0.8 vs
-    * 27.4). Re-reading a column-pruned single-row-group parquet
-    * projection costs ~30 ms a pass; scanning 32 cached checkpoint
-    * partitions costs ~300 ms of task time PER TASK on this container.
-    * Size-capped at [[FanOutCapBytes]] (no-op at sf10+), so reverting
-    * the call sites changed nothing at the scale tiers. */
-  def pinSmall(spark: SparkSession, dir: String, name: String,
-      keys: org.apache.spark.sql.Column*)(df: DataFrame): DataFrame = {
-    val bytes = bytesOf(spark, dir, name)
-    if (bytes <= FanOutCapBytes)
-      fanOut(spark, dir, name, keys: _*)(df).localCheckpoint()
-    else df
-  }
 
   /** `broadcast(df)` only while the backing table's parquet footprint
     * stays under `capBytes` (default 64 MB compressed ≈ a few hundred

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,21 +8,9 @@ object Verify {
     // (dev iteration with tools/check.py; the driver passes exactly two)
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      // same shuffle-integrity confs as Bench (see CodecSpec); zstd per
-      // the round-5 columnar/codec experiment in BASELINE.md
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.shuffle.checksum.enabled", "true")
-      .config("spark.shuffle.spill.compress", "true")
-      .config("spark.shuffle.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 4)
+    // the profile Bench times with, so the checked answer is the timed one
+    val spark = SessionDefaults.session(sfDir, s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // per-query observability export (observed metrics + shuffle bill)
     // + one EXECUTED-plan artifact per query — written to a SIBLING

@@ -970,7 +970,7 @@ object Dedup {
     * verified by exact intersection from the full per-doc sets.
     * Candidate volume both ways is observed (`q160_cands`).
     *
-    * Strategy default, MEASURED at sf0.1 (t = 0.8, warm Prof runs,
+    * Strategy default, MEASURED at sf0.1 (t = 0.8, warm runs,
     * r12 ledger): inverted 3.0 s vs prefix 6.9 s, even though the
     * prefix cuts candidates 6.3× (1,130,536 → 180,718 of a
     * Σ C(df, 2) = 1,265,779 bound). ~1.1 M candidate pair-rows

@@ -148,23 +148,18 @@ object ImageDedup {
     // it replaces, spill-safe at any corpus size — and both join sides
     // read it: decode runs exactly once. Lazy: materialized by the
     // query's own first job, no extra construction-time action.
-    val decoded = imgs.mapPartitions(_.map(r =>
+    val bits = imgs.mapPartitions(_.map(r =>
       ImgBits(r.media_id, dhashBits(r.payload, gridRows, gridCols)))).toDF()
-    // dev A/B toggle (r17 sf100 adjudication): =0 re-plans the decode
-    // on both join sides (the pre-r17 shape)
-    val bits =
-      if (sys.env.get("SPARK_GRAFT_Q97_CKPT").contains("0")) decoded
-      else decoded.localCheckpoint(false)
+      .localCheckpoint(false)
     bandedHammingPairs(spark, bits, gridRows * (gridCols - 1),
       nBands, maxHamming)
   }
 
   /** The pairing stage alone: banded pigeonhole blocking + packed-long
     * hamming verification over (media_id, bits) rows — factored out so
-    * the saturation A/B ([[graft.PhashAb]]) can drive it on synthetic
-    * DISTINCT hashes, where the registry fixture's mod-768 pixel
-    * formula caps the corpus at 256 distinct image classes and makes
-    * the answer itself quadratic. */
+    * it can be driven on synthetic DISTINCT hashes, where the registry
+    * fixture's mod-768 pixel formula caps the corpus at 256 distinct
+    * image classes and makes the answer itself quadratic. */
   def bandedHammingPairs(spark: SparkSession, bits: DataFrame,
       nBits: Int, nBands: Int, maxHamming: Int): DataFrame = {
     require(maxHamming <= nBands - 1,

@@ -128,8 +128,8 @@ object TpchFull {
       // under-estimate text 20-40x), so the hint is explicit and
       // size-conditional: past 3 GB of base-table footprint (~sf300)
       // the build would crowd the 8 GiB relation cap and the join
-      // belongs back in the shuffle path (where bucketed co-location,
-      // TpchJoinAb's third rung, is the real 100-TB answer).
+      // belongs back in the shuffle path (where bucketed co-location
+      // is the real 100-TB answer, OPTIMIZATION_r17.md).
       .join(Tables.broadcastIfUnder(s, dir, "orders", capBytes = 3L << 30)(
           Tables.t(s, dir, "orders")
             .where(col("o_orderdate") >= ts("1995-01-01") &&
@@ -178,10 +178,9 @@ object TpchFull {
     * cost leg substitutes 0.6 × p_retailprice × l_quantity (a fixed
     * margin against the part's list price), keeping the
     * expression-over-4-table-join shape intact. */
-  /** Q106's join/aggregate kernel over EXPLICIT inputs — shared by the
-    * registry entry (plain parquet frames) and [[graft.TpchJoinAb]]'s
-    * bucketed-layout rung (catalog facts bucketed by orderkey), so the
-    * layout A/B measures the identical computation. With the dims
+  /** Q106's join/aggregate kernel over EXPLICIT inputs, so a bucketed
+    * layout (catalog facts bucketed by orderkey) runs the identical
+    * computation as the registry entry's plain parquet frames. With the dims
     * broadcast (the SessionDefaults sf100 thresholds), the lineitem ⋈
     * orders sort-merge is the only fact shuffle left; when BOTH facts
     * arrive bucketed by orderkey, broadcast joins preserve lineitem's

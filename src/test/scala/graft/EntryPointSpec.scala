@@ -1,0 +1,65 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps the single-profile design from drifting back: only
+  * SessionDefaults builds a SparkSession, operator paths read no
+  * environment, and only the canonical board may overwrite the tracked
+  * BENCH_BOARD.json. */
+class EntryPointSpec extends AnyFunSuite {
+  private val main = Paths.get("src/main/scala/graft")
+
+  private def scalaFiles(dir: Path): Seq[Path] = {
+    val s = Files.walk(dir)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
+  /** Code lines of a file: comment and scaladoc lines dropped. */
+  private def code(p: Path): Seq[String] =
+    Files.readAllLines(p).asScala.toSeq.map(_.trim)
+      .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+
+  private def offenders(files: Seq[Path], pattern: String): Seq[String] = {
+    val re = pattern.r
+    for {
+      f <- files
+      l <- code(f) if re.findFirstIn(l).nonEmpty
+    } yield s"$f: $l"
+  }
+
+  test("no SparkSession.builder in src/main outside SessionDefaults") {
+    val files = scalaFiles(main).filterNot(_.getFileName.toString == "SessionDefaults.scala")
+    assert(files.size > 50, "source tree not found")
+    val hits = offenders(files, """SparkSession\s*\.\s*builder""")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no environment reads under operators/, plans/ or in Tables") {
+    val files = scalaFiles(main.resolve("operators")) ++
+      scalaFiles(main.resolve("plans")) :+ main.resolve("Tables.scala")
+    val hits = offenders(files, """sys\.env|System\.getenv""")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("every entry point builds its session through SessionDefaults.session") {
+    for (n <- Seq("Bench", "Verify", "Runner", "PlanDump", "JobStats", "GenScale")) {
+      val src = code(main.resolve(s"$n.scala")).mkString("\n")
+      assert(src.contains("SessionDefaults.session("), n)
+    }
+  }
+
+  test("only the canonical board overwrites BENCH_BOARD.json") {
+    import Bench.writesTrackedBoard
+    val sf01 = "/root/testdata/sf0.1"
+    assert(writesTrackedBoard(fullRegistry = true, sf01, 32, 32))
+    assert(writesTrackedBoard(fullRegistry = true, sf01 + "/", 32, 32))
+    assert(!writesTrackedBoard(fullRegistry = true, sf01, 8, 8), "8-core run")
+    assert(!writesTrackedBoard(fullRegistry = true, sf01, 32, 320), "partitions != cores")
+    assert(!writesTrackedBoard(fullRegistry = false, sf01, 32, 32), "dev subset")
+    assert(!writesTrackedBoard(fullRegistry = true, "/root/testdata/sf0.01", 32, 32))
+    assert(!writesTrackedBoard(fullRegistry = true, "target/sf100", 32, 32))
+  }
+}

@@ -4,22 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxFailures]: task retries ON, like a real cluster
-      // (FaultToleranceSpec injects first-attempt failures and asserts
-      // the retried result is identical)
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosConf, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
   val sf: String = "/root/testdata/sf0.001"
+  // local[threads, maxFailures]: task retries ON, like a real cluster
+  // (FaultToleranceSpec injects first-attempt failures and asserts the
+  // retried result is identical)
+  lazy val spark: SparkSession = SessionDefaults.session(sf, "local[4,2]", 4)
 }
 
 class RelationalSpec extends AnyFunSuite {

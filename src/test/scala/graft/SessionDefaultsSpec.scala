@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The scale-tier conf derivation is library surface (VERDICT r16
-  * item 4): pin the per-tier values, the override semantics, and the
-  * corpus probe so Bench/PlanDump/JobStats stay mere consumers. */
+/** The session profile is library surface: pin the per-tier values, the
+  * tier-independent base, the corpus probe, the test session's use of
+  * the profile, and the fail-fast numeric config parse. */
 class SessionDefaultsSpec extends AnyFunSuite {
   import SessionDefaults._
 
@@ -33,18 +33,6 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(tierFor(Sf100FloorBytes).bcastStatic == "64m")
   }
 
-  test("override semantics: static override propagates to adaptive " +
-      "unless adaptive is itself overridden") {
-    val t1 = tierFor(12L << 30, Some("10m"), None)
-    assert(t1.bcastStatic == "10m" && t1.bcastAdaptive == "10m")
-    val t2 = tierFor(12L << 30, Some("10m"), Some("256m"))
-    assert(t2.bcastStatic == "10m" && t2.bcastAdaptive == "256m")
-    val t3 = tierFor(12L << 30, None, Some("256m"))
-    assert(t3.bcastStatic == "384m" && t3.bcastAdaptive == "256m")
-    // compression-factor correction is tier-keyed, not override-keyed
-    assert(t1.fileCompressionFactor == "6.0")
-  }
-
   test("confs carry every scale-survival key and maxResultSize") {
     val keys = tierFor(0L).confs.map(_._1).toSet
     assert(keys == Set(
@@ -59,5 +47,42 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(b > 0, "fixture lineitem must be found")
     assert(tierFor(b).bcastStatic == "10m", "fixtures are fixture-tier")
     assert(lineitemBytes("/nonexistent") == 0L)
+  }
+
+  test("profile: the four tier keys plus zstd, UTC, nanos and UI off") {
+    val p = profile(tierFor(0L), 7).toMap
+    assert(p.size == profile(tierFor(0L), 7).size, "no key set twice")
+    assert(tierFor(0L).confs.forall { case (k, v) => p(k) == v })
+    assert(p("spark.io.compression.codec") == "zstd")
+    assert(p("spark.sql.session.timeZone") == "UTC")
+    assert(p(Tables.NanosConf) == "true")
+    assert(p("spark.ui.enabled") == "false")
+    assert(p("spark.sql.shuffle.partitions") == "7")
+    // the sf100 tier swaps the tier values and keeps the base
+    val big = profile(tierFor(12L << 30), 320).toMap
+    assert(big("spark.sql.autoBroadcastJoinThreshold") == "384m")
+    assert(big("spark.io.compression.codec") == "zstd")
+  }
+
+  test("the test session carries the profile under the retry master") {
+    val spark = SparkTestSession.spark
+    assert(spark.sparkContext.master == "local[4,2]")
+    // context-level conf: fixed at construction, so the shared session's
+    // per-test SQL conf overrides cannot mask it
+    val conf = spark.sparkContext.getConf
+    profile(forDir(SparkTestSession.sf), 4).foreach { case (k, v) =>
+      assert(conf.get(k) == v, s"$k")
+    }
+  }
+
+  test("positiveInt parses positive values and names the key otherwise") {
+    assert(positiveInt("SPARK_GRAFT_CPUS", "8") == 8)
+    assert(positiveInt("SPARK_GRAFT_CPUS", " 32 ") == 32)
+    for (bad <- Seq("abc", "0", "-3")) {
+      val e = intercept[IllegalArgumentException](
+        positiveInt("SPARK_GRAFT_BENCH_RUNS", bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_RUNS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 }

@@ -6,7 +6,7 @@ Usage: python3 tools/partial_board.py <bench.log> <out.json> <sf_label>
 Bench prints "[bench] done <query> <sec>" per query and writes the board
 only at the end of the run; a run cut at a deadline (the r15 sf100 board)
 still has every completed query's number in the log. This collects them
-into the same {"queries": {...}} shape tools/slopes.py and BoardStats read.
+into the same {"queries": {...}} shape tools/slopes.py reads.
 """
 import json, re, sys
 
