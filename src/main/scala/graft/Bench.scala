@@ -98,8 +98,7 @@ object Bench {
         def median(ts: Seq[Double]): Double = ts.sorted.apply(ts.size / 2)
         try {
           def freshBuild(): String = {
-            val d = java.nio.file.Files
-              .createTempDirectory("graft_bench_idx").toString
+            val d = TempDirs.createTempDirectory("graft_bench_idx")
             IncrementalDedup.buildIndex(base, d); d
           }
           freshBuild() // warm-up

@@ -50,7 +50,7 @@ object GenScale {
     val spark = SessionDefaults.session(srcDir, s"local[$cpus]", cpus)
 
     def raw(name: String): DataFrame =
-      spark.read.parquet(s"$srcDir/$name.parquet")
+      Tables.parquet(spark, s"$srcDir/$name.parquet")
 
     /** One row per (row, copy), copy column `cp` in [0, copies).
       * The repartition runs on the SMALL source BEFORE the explode: the

@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader for the TPC-H-ish star schema + events/documents/
   * embeddings (schemas in FIXTURES.md). One parquet file per table; at
@@ -14,15 +20,54 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** Open a parquet table — one file, or a flat directory of part files —
+    * WITHOUT a Spark job. A bare `spark.read.parquet(path)` infers the
+    * schema with a one-task job per call (36 of the 86 jobs of a tpch
+    * pass); here the driver reads the same single footer that
+    * non-merging inference reads and hands the schema to the reader.
+    * Control-plane metadata stays on the driver, data work goes to the
+    * executors. Not for partitioned layouts: those need partition
+    * discovery's inference, so their read-backs keep `read.parquet`.
+    *
+    * No cache: a footer read costs far less than the inference job it
+    * replaces, so every call re-reads it and a file rewritten
+    * mid-session is opened with its new schema. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The Spark schema of `path`'s first data file by name (`_*` and `.*`
+    * names skipped, as file listing does), read and converted with the
+    * calls Spark's inference task makes: the footer without its row-group
+    * metadata (a small fraction of `ParquetFileReader.open`'s CPU),
+    * converted under the session's parquet confs. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val status = fs.getFileStatus(p) // FileNotFoundException names the path
+    def isData(f: FileStatus) = f.isFile && !f.getPath.getName.startsWith("_") &&
+      !f.getPath.getName.startsWith(".")
+    val file =
+      if (status.isFile) status
+      else fs.listStatus(p).filter(isData).sortBy(_.getPath.getName).headOption
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"no parquet data file in directory: $path"))
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 
   /** Fixture quirk (historical): some generator versions write `events.ts`
     * as INT64 TIMESTAMP(NANOS) parquet, which Spark 4 rejects outright
     * (PARQUET_TYPE_ILLEGAL) unless this session conf is set. It must be set
     * at session CONSTRUCTION (SessionDefaults.session does) —
-    * schema inference consults only the session conf, so a per-read option
-    * cannot express it. Newer fixtures write plain TIMESTAMP(MICROS); the
-    * loader below handles either encoding by inspecting the read schema. */
+    * the footer schema conversion ([[parquet]]) and the scan both consult
+    * only the session conf, so a per-read option cannot express it. Newer
+    * fixtures write plain TIMESTAMP(MICROS); the loader below handles
+    * either encoding by inspecting the read schema. */
   val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** Read `ts` as an instant TIMESTAMP at microsecond precision regardless
@@ -35,7 +80,7 @@ object Tables {
   private def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     val fixed = raw.schema("ts").dataType match {
       case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
@@ -68,7 +113,7 @@ object Tables {
     * task). Repartitioning right after the read unlocks the cores.
     *
     * Scale discipline: only fires while the table's on-disk footprint
-    * is at most `capBytes` (default 256 MB — an exchange of ≤ 256 MB
+    * is at most [[FanOutCapBytes]] (256 MB — an exchange of ≤ 256 MB
     * compressed costs well under a second on every protocol tier) AND
     * the scan would plan fewer splits than the session's parallelism.
     * At sf10+ the fact tables cross the cap and the plan is untouched

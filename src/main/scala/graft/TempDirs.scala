@@ -1,0 +1,25 @@
+package graft
+
+import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+/** Scratch directories for sink round-trips and derived layouts (q02's
+  * re-read, the codec matrix, exports, bucketed and partitioned copies,
+  * stream sources). Every directory handed out is deleted recursively
+  * when the JVM exits, by one shutdown hook for all of them: the
+  * layouts are cached per JVM, so nothing may delete them earlier. */
+object TempDirs {
+  private val created = new ConcurrentLinkedQueue[Path]()
+
+  // registered once, when the object is first used
+  sys.addShutdownHook {
+    created.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+  }
+
+  /** `Files.createTempDirectory(prefix)`, deleted at JVM exit. */
+  def createTempDirectory(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    created.add(d)
+    d.toString
+  }
+}

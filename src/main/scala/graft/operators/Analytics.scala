@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -150,8 +150,7 @@ object Analytics {
     * from the other four) — the layout that makes 100 TB corpora
     * queryable per-language without full scans. */
   private def q44(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_part_sink").toString
+    val out = TempDirs.createTempDirectory("graft_part_sink")
     Tables.t(s, dir, "documents")
       .write.partitionBy("lang").mode("overwrite").parquet(out)
     s.read.parquet(out)

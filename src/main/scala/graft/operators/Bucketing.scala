@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Canon, QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,7 +35,7 @@ object Bucketing {
     layouts.computeIfAbsent(dir, { _ =>
       val tag = Integer.toHexString(dir.hashCode).takeWhile(_ != '-')
       val (ot, ct) = (s"graft_orders_b_$tag", s"graft_customer_b_$tag")
-      val base = java.nio.file.Files.createTempDirectory("graft_bucketed")
+      val base = TempDirs.createTempDirectory("graft_bucketed")
       // repartition by the bucket key first => one file per bucket, so
       // the bucketed scan also preserves the sortBy order within buckets
       Tables.t(s, dir, "orders").repartition(BucketCount, col("o_custkey"))

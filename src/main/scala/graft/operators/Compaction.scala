@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -40,8 +40,7 @@ object Compaction {
     * prove the round trip loses nothing: per-status counts and exact
     * decimal totals over the re-read must equal the source table. */
   private def q65(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_compaction").toString
+    val out = TempDirs.createTempDirectory("graft_compaction")
     compactByRange(Tables.t(s, dir, "orders"), "o_orderkey",
       nFiles = 8, maxRecordsPerFile = 4096L, out = out)
       .groupBy(col("o_orderstatus"))

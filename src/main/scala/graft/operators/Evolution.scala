@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Canon, QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +26,7 @@ object Evolution {
 
   def evolvedLayout(s: SparkSession, dir: String): String =
     layouts.computeIfAbsent(dir, { _ =>
-      val base = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+      val base = TempDirs.createTempDirectory("graft_evolve")
       val o = Tables.t(s, dir, "orders")
       o.where(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))

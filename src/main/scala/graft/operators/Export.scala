@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +57,7 @@ object Export {
   }
 
   private def q76(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_export").toString
+    val out = TempDirs.createTempDirectory("graft_export")
     exportWithManifest(Tables.t(s, dir, "documents"), out)
   }
 

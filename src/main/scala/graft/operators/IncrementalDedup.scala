@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -111,8 +111,7 @@ object IncrementalDedup {
 
   private def q95(s: SparkSession, dir: String): DataFrame = {
     val (base, delta) = baseDeltaSplit(Tables.t(s, dir, "documents"))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_incdedup").toString
+    val idx = TempDirs.createTempDirectory("graft_incdedup")
     buildIndex(base, idx)
     probeIndex(s, delta, idx)
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Canon, QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,7 @@ object Pruning {
 
   def yearPartitionedOrders(s: SparkSession, dir: String): String =
     layouts.computeIfAbsent(dir, { _ =>
-      val out = java.nio.file.Files.createTempDirectory("graft_dpp_orders").toString
+      val out = TempDirs.createTempDirectory("graft_dpp_orders")
       Tables.t(s, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.partitionBy("o_year").mode("overwrite").parquet(out)

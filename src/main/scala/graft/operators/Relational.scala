@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Canon, QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,9 +48,9 @@ object Relational {
   private def q02(s: SparkSession, dir: String): DataFrame = {
     // fresh dir per invocation: concurrent runs (or a parallel bench)
     // must not race on a shared overwrite path
-    val out = java.nio.file.Files.createTempDirectory("graft_sink_q02").toString
+    val out = TempDirs.createTempDirectory("graft_sink_q02")
     q01(s, dir).write.mode("overwrite").parquet(out)
-    s.read.parquet(out).agg(count(lit(1)).as("n"))
+    Tables.parquet(s, out).agg(count(lit(1)).as("n"))
   }
 
   /** Q02 variants: the same round-trip through the other first-class
@@ -60,7 +60,7 @@ object Relational {
     * source's aggregates exactly — a type- or value-mangling round-trip
     * fails the oracle hash. */
   private def q02fmt(fmt: String)(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory(s"graft_sink_q02_$fmt").toString
+    val out = TempDirs.createTempDirectory(s"graft_sink_q02_$fmt")
     val src = q01(s, dir)
     val w = src.write.mode("overwrite")
     val r = s.read.schema(src.schema)
@@ -115,7 +115,7 @@ object Relational {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val writes = ParquetCodecs.map { c =>
       c -> Future {
-        val out = java.nio.file.Files.createTempDirectory(s"graft_codec_$c").toString
+        val out = TempDirs.createTempDirectory(s"graft_codec_$c")
         src.write.mode("overwrite").option("compression", c).parquet(out)
         out
       }

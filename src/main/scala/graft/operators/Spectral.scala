@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -153,7 +153,7 @@ object Spectral {
 
   private def modelFor(s: SparkSession, dir: String): String =
     fittedModels.getOrElseUpdate(dir, {
-      val d = java.nio.file.Files.createTempDirectory("graft_pca").toString
+      val d = TempDirs.createTempDirectory("graft_pca")
       fitComponent(s, sampleOf(Tables.t(s, dir, "embeddings")), d)
       d
     })
@@ -162,7 +162,7 @@ object Spectral {
     * fit benchmark) and persists the model so q101_pca_project reuses
     * it instead of re-deriving the whole fit. */
   private def q101(s: SparkSession, dir: String): DataFrame = {
-    val d = java.nio.file.Files.createTempDirectory("graft_pca").toString
+    val d = TempDirs.createTempDirectory("graft_pca")
     fitComponent(s, sampleOf(Tables.t(s, dir, "embeddings")), d)
     fittedModels(dir) = d
     loadComponent(s, d).orderBy(col("pos").asc_nulls_last)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Canon, QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,7 +55,7 @@ object ZOrder {
     * while the file-skipping evidence lives in ZOrderSpec's scan
     * metrics. */
   private def q79(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val out = TempDirs.createTempDirectory("graft_zorder")
     zorderWrite(Tables.t(s, dir, "lineitem"), out, "l_partkey", "l_suppkey")
     s.read.parquet(out)
       .where(col("l_partkey") < 100 && col("l_suppkey") < 40)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Canon, QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -69,7 +69,7 @@ object RateLimited {
   /** Events of `dir` re-laid-out as 6 parquet files, built once per JVM. */
   def sourceLayout(s: SparkSession, dir: String): String =
     srcLayouts.computeIfAbsent(dir, { _ =>
-      val d = java.nio.file.Files.createTempDirectory("graft_rate_src").toString
+      val d = TempDirs.createTempDirectory("graft_rate_src")
       Tables.t(s, dir, "events").repartition(6).write.mode("overwrite").parquet(d)
       d
     })
@@ -79,7 +79,7 @@ object RateLimited {
     * streams, and each side should scan only its own data). */
   def typedLayout(s: SparkSession, dir: String, eventType: String): String =
     srcLayouts.computeIfAbsent(s"$dir#$eventType", { _ =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft_rate_$eventType").toString
+      val d = TempDirs.createTempDirectory(s"graft_rate_$eventType")
       Tables.t(s, dir, "events")
         .where(org.apache.spark.sql.functions.col("event_type") === eventType)
         .repartition(6).write.mode("overwrite").parquet(d)

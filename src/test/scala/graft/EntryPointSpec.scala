@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the single-profile design from drifting back: only
   * SessionDefaults builds a SparkSession, operator paths read no
-  * environment, and only the canonical board may overwrite the tracked
+  * environment, fixture tables open through Tables without an inference
+  * job, and only the canonical board may overwrite the tracked
   * BENCH_BOARD.json. */
 class EntryPointSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
@@ -41,6 +42,15 @@ class EntryPointSpec extends AnyFunSuite {
     val files = scalaFiles(main.resolve("operators")) ++
       scalaFiles(main.resolve("plans")) :+ main.resolve("Tables.scala")
     val hits = offenders(files, """sys\.env|System\.getenv""")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("fixture tables open through Tables, never a bare read.parquet") {
+    // `spark.read.parquet(s"$dir/$name.parquet")` runs a schema-inference
+    // job per call; Tables.parquet reads the footer on the driver instead
+    val files = scalaFiles(main).filterNot(_.getFileName.toString == "Tables.scala")
+    val hits = offenders(files,
+      """read\s*(\.\s*\w+\([^)]*\)\s*)*\.\s*parquet\(\s*s"\$\{?(dir|srcDir)\b[^"]*\.parquet"""")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

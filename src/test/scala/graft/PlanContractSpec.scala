@@ -29,7 +29,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * After an INTENTIONAL plan change, regenerate with
   *   GRAFT_WRITE_PLAN_CONTRACTS=1 sbt "testOnly graft.PlanContractSpec"
-  * and review the .tsv diff like any other code change.
+  * and review the .tsv diff like any other code change. Write mode
+  * never lowers a stored prejobs budget (see the upper-bound note
+  * below); to lower budgets, strip ` prejobs=N` from the .tsv first and
+  * regenerate in a fresh JVM — the field-upgrade path then records the
+  * fresh-JVM counts.
   *
   * The former blind spot — a query that runs an EAGER side job at
   * DataFrame-construction time exposes only its FINAL plan to the
@@ -47,7 +51,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * a pre-pass, so the FINAL plan has scans=0 — the corpus is read once
   * in the prejobs window and the blocking election is mass-measured). A
   * fact-sized pre-pass sneaking into any constructor now bumps its
-  * prejobs count and fails the diff. (prejobs counts JOBS, not scans:
+  * prejobs count and fails the diff. Opening a fixture table is not a
+  * prejob: `Tables.t` reads the parquet footer on the driver, where a
+  * bare `read.parquet` runs one schema-inference job per open.
+  * (prejobs counts JOBS, not scans:
   * a localCheckpoint materialization and a 1-row head() both count 1 —
   * the budget catches NEW pre-passes, the per-site scaladocs still owe
   * the cost argument.)
