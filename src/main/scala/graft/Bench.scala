@@ -1,12 +1,21 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
+
 /** Benchmark entry point (driver contract): runs every registered query
   * at SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
   *
   * Methodology (BASELINE.md): one warm-up execution per query, then
   * median of 3 timed runs. Queries are materialized through the noop
   * sink so the whole plan executes (a bare count() would let Catalyst
-  * prune the work).
+  * prune the work). Each query's last timed run is also counted under
+  * its own job group: the board's `counts` map carries its jobs,
+  * stages, tasks and summed task time ([[Metrics.GroupCounts]]), which
+  * do not depend on the machine's load the way wall time does.
+  * `SPARK_GRAFT_BENCH_ONLY=q1,q2` counts just those queries.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -32,15 +41,21 @@ object Bench {
     // headline (triggers × batch) must not be misread as engine cost
     val streamDetail = scala.collection.mutable.Map[String, (Int, Double)]()
 
-    def once(name: String): Double = {
+    Metrics.installJobCounter(spark)
+    def groupOf(name: String): String = s"bench $name"
+
+    /** One execution of `name`; with `counted`, under its job group. */
+    def once(name: String, counted: Boolean = false): Double = {
       graft.streaming.StreamMetrics.drain() // clear stale state
+      if (counted)
+        spark.sparkContext.setJobGroup(groupOf(name), groupOf(name), interruptOnCancel = false)
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
-      }
+      } finally if (counted) spark.sparkContext.clearJobGroup()
       val wall = (System.nanoTime() - t0) / 1e9
       graft.streaming.StreamMetrics.peekDetail()
         .foreach(d => streamDetail(name) = d)
@@ -74,7 +89,7 @@ object Bench {
       val warm = if (doWarm) once(name) else 0.0
       val r = if (warm < 0) name -> -1.0
       else {
-        val times = (1 to runs).map(_ => once(name)).sorted
+        val times = (1 to runs).map(i => once(name, counted = i == runs)).sorted
         name -> times(times.size / 2)
       }
       // per-query progress on stderr: a long detached run (the sf10
@@ -116,12 +131,12 @@ object Bench {
         }
       } else Seq.empty
 
+    // one quiet listener bus for every counted run at once
+    val groupCounts = Metrics.takeGroupCounts(names.map(groupOf))
     val all = results ++ extraResults
-    val qs = all.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val (ok, bad) = all.partition(_._2 >= 0)
     val total = ok.map(_._2).sum
-    val failed = bad.map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val failed = bad.map(_._1)
 
     // SELF-ADJUDICATION (VERDICT r11 #2): the closing-ledger invariant
     // "no row above 2x its baseline" was twice asserted from a board
@@ -145,14 +160,8 @@ object Bench {
             (n, v, rerun)
         }
       }
-    val adjJson = adjudicated.map { case (n, board, rerun) =>
-      "\"" + n + s"""":[$board,$rerun]"""
-    }.mkString("{", ",", "}")
-    // Locale.ROOT: f"$v%.3f" uses the JVM default locale — under a
-    // comma-decimal locale (de_DE) it emits "1,234", invalid JSON on
-    // exactly the lines added for driver parsing (ADVICE r10).
-    def ms(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    // seconds rounded to the millisecond for the summary fields
+    def ms(v: Double): Double = math.round(v * 1000) / 1000.0
     // WINDOW STAMP (VERDICT r14 item 6): r14 burned a day hand-
     // classifying container windows (216 vs 249 vs a rejected 282 s for
     // identical code). Stamp the board with the anchor queries' ratio to
@@ -179,14 +188,25 @@ object Bench {
         val rs = anchorRatios.map(_._2).sorted
         if (rs(rs.size / 2) <= 1.2) "quiet" else "noisy"
       }
-    val anchorsJson = anchorRatios.map { case (k, v) =>
-      "\"" + k + "\":" + ms(v)
-    }.mkString("{", ",", "}")
-    val streaming = streamDetail.toSeq.sortBy(_._1).map { case (k, (n, m)) =>
-      "\"" + k + s"""":{"triggers":$n,"batch_median_sec":$m}"""
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"streaming":$streaming,"adjudicated":$adjJson,"anchors":$anchorsJson,"window":"$window","partitions":$partitions,"bcast":"$bcastStatic","sf":"$sfDir"}"""
+    val anchors = ListMap(anchorRatios.map { case (k, v) => k -> ms(v) }: _*)
+    implicit val formats: Formats = DefaultFormats
+    val line = Serialization.write(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> ListMap(all: _*),
+      "failed" -> failed,
+      "streaming" -> ListMap(streamDetail.toSeq.sortBy(_._1).map { case (k, (n, m)) =>
+        k -> ListMap("triggers" -> n, "batch_median_sec" -> m)
+      }: _*),
+      "adjudicated" -> ListMap(adjudicated.map { case (n, board, rerun) =>
+        n -> Seq(board, rerun)
+      }: _*),
+      "anchors" -> anchors, "window" -> window, "partitions" -> partitions,
+      "bcast" -> bcastStatic, "sf" -> sfDir,
+      "counts" -> ListMap(results.collect { case (n, v) if v >= 0 =>
+        val c = groupCounts(groupOf(n))
+        n -> ListMap("jobs" -> c.jobs, "stages" -> c.stages, "tasks" -> c.tasks,
+          "task_ms" -> c.taskMs)
+      }: _*)))
     // the COMPLETE machine-readable board (belt-and-braces against any
     // stdout truncation): target/bench_board.json for tooling plus a
     // TRACKED copy at BENCH_BOARD.json (target/ is gitignored) so every
@@ -209,16 +229,18 @@ object Bench {
     // queries + adjudication summary). This is NOT the driver contract
     // line — it prints BEFORE the full board so the driver's
     // last-metric-line parse never lands on it.
-    val slowest = ok.sortBy(-_._2)
-    val topN = slowest.take(20)
-    val compactQs = topN.map { case (k, v) => "\"" + k + "\":" + ms(v) }
-      .mkString("{", ",", "}")
+    val topN = ok.sortBy(-_._2).take(20)
     val adjTop = adjudicated.take(8)
-    val compactAdj = adjTop.map { case (n, b, r) =>
-      "\"" + n + s"""":[${ms(b)},${ms(r)}]"""
-    }.mkString("{", ",", "}")
-    val compact =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","n_queries":${ok.size},"queries_slowest":$compactQs,"queries_omitted":${ok.size - topN.size},"failed":$failed,"adjudicated":$compactAdj,"adjudicated_omitted":${adjudicated.size - adjTop.size},"anchors":$anchorsJson,"window":"$window","full_board":"BENCH_BOARD.json","sf":"$sfDir"}"""
+    val compact = Serialization.write(ListMap(
+      "metric" -> "total", "value" -> ms(total), "unit" -> "sec",
+      "n_queries" -> ok.size,
+      "queries_slowest" -> ListMap(topN.map { case (k, v) => k -> ms(v) }: _*),
+      "queries_omitted" -> (ok.size - topN.size),
+      "failed" -> failed,
+      "adjudicated" -> ListMap(adjTop.map { case (n, b, r) => n -> Seq(ms(b), ms(r)) }: _*),
+      "adjudicated_omitted" -> (adjudicated.size - adjTop.size),
+      "anchors" -> anchors, "window" -> window,
+      "full_board" -> "BENCH_BOARD.json", "sf" -> sfDir))
     println(compact)
     // LAST metric line = THE driver contract line, carrying the COMPLETE
     // per-query map (VERDICT r16 item 2). History of this contract:

@@ -2,10 +2,13 @@ package graft
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -138,7 +141,7 @@ object Metrics {
     Option(timeline.floorEntry(startMs)).map(_.getValue).getOrElse(fallback)
   }
 
-  private val installed = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private val installed = new AtomicBoolean(false)
   @volatile private var plansDirPath: Option[String] = None
 
   /** The EXECUTED plan, formatted — after the action, so AQE wrappers
@@ -191,18 +194,26 @@ object Metrics {
 
   /** The execution-listener bus is asynchronous: wait until the recorded
     * count is stable across two polls (or timeout) before draining, so a
-    * main() doesn't race its own metrics on the way out. */
-  def awaitQuiesce(timeoutMs: Long = 10000): Unit = {
+    * main() doesn't race its own metrics on the way out. 50 ms polls: the
+    * idle cost per tagged query is ~100-150 ms, which across Verify's ~90
+    * tags stays negligible next to the queries. */
+  def awaitQuiesce(timeoutMs: Long = 10000): Unit =
+    quiesce(timeoutMs, pollMs = 50)(buffer.size())
+
+  /** Listener events are posted by the time an action returns but
+    * delivered asynchronously: poll `read` until it gives the same value
+    * on two polls running after a change, or `timeoutMs` passes, and
+    * return the last value read. */
+  private def quiesce[A](timeoutMs: Long, pollMs: Long)(read: => A): A = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    var last = -1
+    var last = read
     var stable = 0
-    // 50 ms polls: the idle cost per tagged query is ~100-150 ms, which
-    // across Verify's ~90 tags stays negligible next to the queries
     while (System.currentTimeMillis() < deadline && stable < 2) {
-      val n = buffer.size()
-      if (n == last) stable += 1 else { stable = 0; last = n }
-      Thread.sleep(50)
+      Thread.sleep(pollMs)
+      val cur = read
+      if (cur == last) stable += 1 else { stable = 0; last = cur }
     }
+    last
   }
 
   /** Drain and return everything recorded since the last drain. */
@@ -213,14 +224,17 @@ object Metrics {
     out.toSeq
   }
 
-  // ------------------------------------------------ eager-job counter
+  // ------------------------------------------------ job-group counters
   // The plan contracts' documented blind spot (r13, cb3e18d): a query
   // that runs an EAGER job at DataFrame-CONSTRUCTION time (an election
   // head(), a refined-quantile bracket pass, a localCheckpoint, a fit)
-  // exposes only its final plan to the shape walk. This counter makes
-  // those pre-passes a CONTRACTED number: PlanContractSpec snapshots it
-  // around each query's constructor and records `prejobs=N`, so a
-  // fact-sized pre-pass can no longer hide outside the plan.
+  // exposes only its final plan to the shape walk. Counting jobs per
+  // group makes those pre-passes a CONTRACTED number: PlanContractSpec
+  // counts them around each query's constructor and records
+  // `prejobs=N`, so a fact-sized pre-pass can no longer hide outside the
+  // plan. Bench counts a query's whole run the same way: jobs, stages,
+  // tasks and summed task time are deterministic for a fixed plan, where
+  // wall time on a shared machine swings 2-4x between windows.
 
   // Counting is per JOB GROUP, not global: the test suite runs suites
   // concurrently in one JVM, so a global counter would attribute a
@@ -228,46 +242,79 @@ object Metrics {
   // calling thread's job group to the jobs it submits (including
   // broadcast/AQE stage submissions, which capture local properties),
   // so a unique group wrapped around a constructor isolates its jobs.
-  private val groupJobs =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong]()
-  private val jobListenerInstalled =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  /** Register the Spark-scheduler job counter once per JVM. */
+  /** Scheduler work started under one job group. `stages` and `tasks`
+    * count completed stages and their tasks: a stage a job skips (its
+    * shuffle output is reused) runs nothing and counts nothing. */
+  final case class GroupCounts(jobs: Long, stages: Long, tasks: Long, taskMs: Long) {
+    def +(o: GroupCounts): GroupCounts =
+      GroupCounts(jobs + o.jobs, stages + o.stages, tasks + o.tasks, taskMs + o.taskMs)
+  }
+
+  private final class Counter {
+    val jobs, stages, tasks, taskMs = new AtomicLong()
+    def counts: GroupCounts = GroupCounts(jobs.get, stages.get, tasks.get, taskMs.get)
+  }
+
+  private val JobGroupKey = "spark.jobGroup.id"
+  private val groupCounters = new ConcurrentHashMap[String, Counter]()
+  /** stage id -> job group of the job that listed it */
+  private val stageGroups = new ConcurrentHashMap[Int, String]()
+  /** job group -> the group its work is counted under (see [[countUnderCaller]]) */
+  private val foldedInto = new ConcurrentHashMap[String, String]()
+  private val jobListenerInstalled = new AtomicBoolean(false)
+
+  private def counter(group: String): Counter =
+    groupCounters.computeIfAbsent(group, _ => new Counter)
+
+  private def stageCounter(stageId: Int): Option[Counter] =
+    Option(stageGroups.get(stageId)).map(counter)
+
+  /** Register the job-group counter once per JVM. */
   def installJobCounter(spark: SparkSession): Unit =
     if (jobListenerInstalled.compareAndSet(false, true))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            val g = Option(js.properties)
-              .map(_.getProperty("spark.jobGroup.id")).orNull
-            if (g != null)
-              groupJobs.computeIfAbsent(g,
-                _ => new java.util.concurrent.atomic.AtomicLong(0))
-                .incrementAndGet()
-            ()
+      spark.sparkContext.addSparkListener(new SparkListener {
+        override def onJobStart(js: SparkListenerJobStart): Unit =
+          Option(js.properties).flatMap(p => Option(p.getProperty(JobGroupKey)))
+            .foreach { g =>
+              counter(g).jobs.incrementAndGet()
+              js.stageIds.foreach(stageGroups.put(_, g))
+            }
+        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
+          stageCounter(sc.stageInfo.stageId).foreach { c =>
+            c.stages.incrementAndGet()
+            c.tasks.addAndGet(sc.stageInfo.numTasks)
           }
-        })
+        override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+          if (te.taskInfo != null)
+            stageCounter(te.stageId).foreach(_.taskMs.addAndGet(te.taskInfo.duration))
+      })
 
-  /** Number of jobs started under job group `group`, read AFTER the
-    * async listener bus has gone quiet for it (two stable 20 ms polls
-    * or `timeoutMs`): events are posted by the time the eager action
-    * returns but delivered asynchronously. The group's entry is
-    * removed on read (single-use measurement windows). */
-  def jobsInGroupQuiesced(group: String, timeoutMs: Long = 2000): Long = {
-    def cur = Option(groupJobs.get(group)).map(_.get()).getOrElse(0L)
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last = -1L
-    var stable = 0
-    while (System.currentTimeMillis() < deadline && stable < 2) {
-      val n = cur
-      if (n == last) stable += 1 else { stable = 0; last = n }
-      Thread.sleep(20)
+  /** Count the work of job group `group` under the calling thread's job
+    * group, if it has one. A stream runs its micro-batches under its own
+    * group (its `runId`), so this is how a streaming query's batches land
+    * in the window of the caller that started it. */
+  def countUnderCaller(sc: SparkContext, group: String): Unit =
+    Option(sc.getLocalProperty(JobGroupKey)).foreach(foldedInto.put(group, _))
+
+  /** The counts of each of `groups`, read once the listener bus has gone
+    * quiet for them (two stable 20 ms polls or `timeoutMs`). Entries are
+    * removed on read: each group is a single-use measurement window. */
+  def takeGroupCounts(groups: Seq[String],
+      timeoutMs: Long = 5000): Map[String, GroupCounts] = {
+    val zero = GroupCounts(0, 0, 0, 0)
+    def members(g: String): Seq[String] =
+      g +: foldedInto.asScala.collect { case (from, `g`) => from }.toSeq
+    def read: Map[String, GroupCounts] = groups.map { g =>
+      g -> members(g).flatMap(m => Option(groupCounters.get(m))).map(_.counts)
+        .foldLeft(zero)(_ + _)
+    }.toMap
+    val out = quiesce(timeoutMs, pollMs = 20)(read)
+    groups.flatMap(members).foreach { m =>
+      groupCounters.remove(m)
+      foldedInto.remove(m)
+      stageGroups.values().removeIf(_ == m)
     }
-    val n = cur
-    groupJobs.remove(group)
-    n
+    out
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session profile: every entry point (Bench, Verify, Runner,
-  * PlanDump, JobStats, GenScale) and the test session build their
+  * PlanDump, GenScale) and the test session build their
   * SparkSession through [[session]], so the answer Verify checks is
   * computed under the confs Bench times. The profile is the scale-tier
   * confs (the LIBRARY's deployment defaults — they are what make

@@ -108,7 +108,7 @@ object Tables {
     * files, so a scan stage is ONE task regardless of core count, and
     * everything Spark fuses into it — tokenize/explode/melt plus the
     * partial aggregation of every text operator — runs serial (r16
-    * JobStats: q166's timed run was 14 s of task time across 15
+    * job/stage/task counts: q166's timed run was 14 s of task time across 15
     * single-task stages; q28's 60-sum simhash aggregation 3.7 s in one
     * task). Repartitioning right after the read unlocks the cores.
     *

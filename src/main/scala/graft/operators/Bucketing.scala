@@ -23,19 +23,14 @@ object Bucketing {
 
   private val BucketCount = 8
 
-  /** One bucketed copy of (orders, customer) per sf dir per JVM —
-    * building the layout is ingest work, not the operator under test.
+  /** One bucketed copy of (orders, customer) per sf dir per JVM.
     * External tables (explicit temp path) so the in-memory catalog owns
-    * only metadata and nothing is written into the repo's warehouse dir. */
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Returns (ordersTable, customerTable) catalog names for `dir`. */
-  def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    layouts.computeIfAbsent(dir, { _ =>
-      val tag = Integer.toHexString(dir.hashCode).takeWhile(_ != '-')
-      val (ot, ct) = (s"graft_orders_b_$tag", s"graft_customer_b_$tag")
-      val base = TempDirs.createTempDirectory("graft_bucketed")
+    * only metadata and nothing is written into the repo's warehouse dir.
+    * Returns (ordersTable, customerTable) catalog names for `dir`. */
+  def bucketedTables(s: SparkSession, dir: String): (String, String) = {
+    val tag = Integer.toHexString(dir.hashCode).takeWhile(_ != '-')
+    val (ot, ct) = (s"graft_orders_b_$tag", s"graft_customer_b_$tag")
+    TempDirs.layout(dir, "graft_bucketed") { base =>
       // repartition by the bucket key first => one file per bucket, so
       // the bucketed scan also preserves the sortBy order within buckets
       Tables.t(s, dir, "orders").repartition(BucketCount, col("o_custkey"))
@@ -46,8 +41,9 @@ object Bucketing {
         .write.mode("overwrite")
         .bucketBy(BucketCount, "c_custkey").sortBy("c_custkey")
         .option("path", s"$base/customer").saveAsTable(ct)
-      (ot, ct)
-    })
+    }
+    (ot, ct)
+  }
 
   /** The co-located join both tables were bucketed for: per-segment
     * order stats. Broadcast suppressed via merge hint so the plan is the

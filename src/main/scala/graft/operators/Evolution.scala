@@ -20,13 +20,9 @@ object Evolution {
 
   /** Two-generation layout per sf dir per JVM: even order keys written
     * with the v1 schema (3 columns), odd keys with v2 (adds
-    * o_orderstatus). Building the layout is ingest work, memoized like
-    * the bucketed tables. */
-  private val layouts = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * o_orderstatus). */
   def evolvedLayout(s: SparkSession, dir: String): String =
-    layouts.computeIfAbsent(dir, { _ =>
-      val base = TempDirs.createTempDirectory("graft_evolve")
+    TempDirs.layout(dir, "graft_evolve") { base =>
       val o = Tables.t(s, dir, "orders")
       o.where(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -35,8 +31,7 @@ object Evolution {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"))
         .write.mode("overwrite").parquet(s"$base/gen=2")
-      base
-    })
+    }
 
   /** q54: merged-schema read over both generations; v1 rows surface the
     * evolved column as NULL and aggregate alongside v2 rows. */

@@ -22,20 +22,13 @@ import org.apache.spark.sql.functions._
   */
 object Pruning {
 
-  /** The year-partitioned orders layout, built once per (JVM, sf dir) —
-    * input preparation, not the operator under test (same memoization
-    * contract as RateLimited.sourceLayout). */
-  private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** The year-partitioned orders layout, built once per (JVM, sf dir). */
   def yearPartitionedOrders(s: SparkSession, dir: String): String =
-    layouts.computeIfAbsent(dir, { _ =>
-      val out = TempDirs.createTempDirectory("graft_dpp_orders")
+    TempDirs.layout(dir, "graft_dpp_orders") { out =>
       Tables.t(s, dir, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.partitionBy("o_year").mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** q77: ship-years of returned lineitems decide which order-year
     * partitions exist at all for the aggregate — the fact side scans

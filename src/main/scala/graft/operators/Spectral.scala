@@ -107,14 +107,6 @@ object Spectral {
 
   // ---- fit-once / project-many split (the q95 build/probe discipline) --
 
-  /** Model dirs already fitted this JVM, keyed by corpus dir: the
-    * project half reuses the power half's fit instead of re-deriving
-    * the sample covariance + power iterations (r12 VERDICT #2). Keyed
-    * by dir so distinct fixtures never share a model; fixtures are
-    * immutable within a session, so per-JVM reuse cannot go stale. */
-  private val fittedModels =
-    new scala.collection.concurrent.TrieMap[String, String]()
-
   /** PUBLIC API — fit the top component on a bounded sample and persist
     * it under `modelDir` as a 64-row parquet (pos, loading, eig): the
     * build half. Run once per corpus version; projections read it. */
@@ -151,20 +143,21 @@ object Spectral {
         col("vec_id").asc_nulls_last)
       .limit(SampleN)
 
+  /** The model dir of corpus `dir`, fitted on first use per JVM: the
+    * project half reuses the power half's fit instead of re-deriving
+    * the sample covariance + power iterations (r12 VERDICT #2). Keyed
+    * by dir so distinct fixtures never share a model; fixtures are
+    * immutable within a session, so per-JVM reuse cannot go stale. */
   private def modelFor(s: SparkSession, dir: String): String =
-    fittedModels.getOrElseUpdate(dir, {
-      val d = TempDirs.createTempDirectory("graft_pca")
+    TempDirs.layout(dir, "graft_pca") { d =>
       fitComponent(s, sampleOf(Tables.t(s, dir, "embeddings")), d)
-      d
-    })
+    }
 
   /** q101_pca_power: the FIT half. Always refits (this entry is the
-    * fit benchmark) and persists the model so q101_pca_project reuses
-    * it instead of re-deriving the whole fit. */
+    * fit benchmark), into the model dir q101_pca_project reads. */
   private def q101(s: SparkSession, dir: String): DataFrame = {
-    val d = TempDirs.createTempDirectory("graft_pca")
+    val d = TempDirs.layout(dir, "graft_pca")(_ => ())
     fitComponent(s, sampleOf(Tables.t(s, dir, "embeddings")), d)
-    fittedModels(dir) = d
     loadComponent(s, d).orderBy(col("pos").asc_nulls_last)
   }
 

@@ -59,32 +59,23 @@ object RateLimited {
     * (3+ micro-batches), aggregated in complete mode — the final answer
     * must equal the plain batch aggregate (DuckDB oracle). The >=3
     * micro-batch progress assertion lives in StreamingSpec. */
-  /** The 6-file re-layout of `events` is input preparation, not the
-    * operator under test — memoize it per sf dir so repeated bench
-    * iterations (and other streaming queries, e.g. q51) measure the
-    * throttled read, not the rewrite. */
-  private val srcLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Events of `dir` re-laid-out as 6 parquet files, built once per JVM. */
+  /** Events of `dir` re-laid-out as 6 parquet files, built once per JVM
+    * (and shared with other streaming queries, e.g. q75), so repeated
+    * bench iterations measure the throttled read, not the rewrite. */
   def sourceLayout(s: SparkSession, dir: String): String =
-    srcLayouts.computeIfAbsent(dir, { _ =>
-      val d = TempDirs.createTempDirectory("graft_rate_src")
+    TempDirs.layout(dir, "graft_rate_src") { d =>
       Tables.t(s, dir, "events").repartition(6).write.mode("overwrite").parquet(d)
-      d
-    })
+    }
 
   /** One event type of `dir` as its own 6-file stream source (a "topic"
     * per type — the two sides of a stream-stream join are independent
     * streams, and each side should scan only its own data). */
   def typedLayout(s: SparkSession, dir: String, eventType: String): String =
-    srcLayouts.computeIfAbsent(s"$dir#$eventType", { _ =>
-      val d = TempDirs.createTempDirectory(s"graft_rate_$eventType")
+    TempDirs.layout(dir, s"graft_rate_$eventType") { d =>
       Tables.t(s, dir, "events")
         .where(org.apache.spark.sql.functions.col("event_type") === eventType)
         .repartition(6).write.mode("overwrite").parquet(d)
-      d
-    })
+    }
 
   private def q49(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.t(s, dir, "events")

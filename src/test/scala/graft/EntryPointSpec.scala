@@ -5,8 +5,8 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Keeps the single-profile design from drifting back: only
-  * SessionDefaults builds a SparkSession, operator paths read no
-  * environment, fixture tables open through Tables without an inference
+  * SessionDefaults builds a SparkSession, operator and streaming paths
+  * read no environment, fixture tables open through Tables without an inference
   * job, and only the canonical board may overwrite the tracked
   * BENCH_BOARD.json. */
 class EntryPointSpec extends AnyFunSuite {
@@ -40,7 +40,8 @@ class EntryPointSpec extends AnyFunSuite {
 
   test("no environment reads under operators/, plans/ or in Tables") {
     val files = scalaFiles(main.resolve("operators")) ++
-      scalaFiles(main.resolve("plans")) :+ main.resolve("Tables.scala")
+      scalaFiles(main.resolve("plans")) ++ scalaFiles(main.resolve("streaming")) :+
+      main.resolve("Tables.scala")
     val hits = offenders(files, """sys\.env|System\.getenv""")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
@@ -55,7 +56,7 @@ class EntryPointSpec extends AnyFunSuite {
   }
 
   test("every entry point builds its session through SessionDefaults.session") {
-    for (n <- Seq("Bench", "Verify", "Runner", "PlanDump", "JobStats", "GenScale")) {
+    for (n <- Seq("Bench", "Verify", "Runner", "PlanDump", "GenScale")) {
       val src = code(main.resolve(s"$n.scala")).mkString("\n")
       assert(src.contains("SessionDefaults.session("), n)
     }

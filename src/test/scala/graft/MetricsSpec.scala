@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.graftinject.ListenerSync
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -91,5 +95,40 @@ class MetricsSpec extends AnyFunSuite {
     assert(txt.contains("== Physical Plan ==") && txt.contains("Final Plan"),
       s"artifact is not an executed adaptive plan:\n${txt.take(300)}")
     Metrics.install(spark) // detach the plans sink for later suites
+  }
+
+  test("job-group counts equal a global listener's over the same window") {
+    // the per-group counter must count what a plain global listener
+    // counts, including the jobs AQE and broadcast threads submit
+    Metrics.installJobCounter(spark)
+    val (jobs, stages, tasks) = (new AtomicLong, new AtomicLong, new AtomicLong)
+    val global = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        tasks.addAndGet(sc.stageInfo.numTasks)
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(global)
+    try {
+      ListenerSync.waitUntilEmpty(sc, 30000)
+      Seq(jobs, stages, tasks).foreach(_.set(0))
+      val group = s"metrics-spec-counts-${System.nanoTime()}"
+      sc.setJobGroup(group, "counter equivalence", interruptOnCancel = false)
+      try {
+        val orders = Tables.t(spark, sf, "orders")
+        assert(orders.groupBy("o_orderstatus").count().collect().nonEmpty)
+        val joined = orders
+          .join(broadcast(Tables.t(spark, sf, "customer")), col("o_custkey") === col("c_custkey"))
+          .groupBy("c_mktsegment").agg(sum("o_totalprice"))
+        assert(joined.collect().nonEmpty)
+        assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+      } finally sc.clearJobGroup()
+      ListenerSync.waitUntilEmpty(sc, 30000)
+      val c = Metrics.takeGroupCounts(Seq(group))(group)
+      assert(c.jobs > 2 && c.stages > 2 && c.taskMs >= 0, c)
+      assert((c.jobs, c.stages, c.tasks) == ((jobs.get, stages.get, tasks.get)), c)
+    } finally sc.removeSparkListener(global)
   }
 }

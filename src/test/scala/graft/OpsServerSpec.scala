@@ -126,6 +126,31 @@ class OpsServerSpec extends AnyFunSuite {
     } finally running.stop()
   }
 
+  test("baseline takes board seconds from queries, not the anchors ratios") {
+    // the window stamp keys its anchor ratios by query name too; a board
+    // time read from `anchors` would report a ratio as seconds
+    val dir = Files.createTempDirectory("graft_ops_anchors")
+    val ledger = dir.resolve("BASELINE.md")
+    Files.writeString(ledger,
+      """|| Query | sf | sec/query (baseline) | config | recorded |
+         ||---|---|---|---|---|
+         || q104_tpch_q6 | 0.1 | 0.2 | `local[32]` | r1 |
+         |""".stripMargin)
+    val board = dir.resolve("board.json")
+    Files.writeString(board,
+      """{"metric":"total","value":0.204,"queries":{"q104_tpch_q6":0.204},""" +
+        """"anchors":{"q104_tpch_q6":1.215},"window":"noisy",""" +
+        """"counts":{"q104_tpch_q6":{"jobs":4,"stages":4,"tasks":4,"task_ms":90}}}""")
+    val running = ops.OpsServer.start(0,
+      benchPaths = Seq(board.toString), baselinePath = ledger.toString)
+    try {
+      val body = get(HttpClient.newHttpClient(), running.port, "/api/v1/baseline").body()
+      assert(body.contains(
+        """{"id":"q104_tpch_q6","baseline":0.200,"board":0.204,"ratio":1.020}"""), body)
+      assert(body.contains(""""n_board":1"""), body)
+    } finally running.stop()
+  }
+
   test("baseline endpoint reads the REAL ledger against the tracked board") {
     // non-hermetic on purpose: the repo's own BASELINE.md + BENCH_BOARD
     // must join (this is the exact curl an operator runs from the root)
