@@ -1,8 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import scala.collection.immutable.ListMap
 
 import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.JsonMethods.parse
 import org.json4s.jackson.Serialization
 
 /** Benchmark entry point (driver contract): runs every registered query
@@ -16,6 +19,11 @@ import org.json4s.jackson.Serialization
   * stages, tasks and summed task time ([[Metrics.GroupCounts]]), which
   * do not depend on the machine's load the way wall time does.
   * `SPARK_GRAFT_BENCH_ONLY=q1,q2` counts just those queries.
+  *
+  * The recorded sf0.1 baseline is itself a board: [[BaselineFile]]
+  * holds one `queries` map of seconds, read by [[boardQueries]] like any
+  * board this writes. It feeds the >2× re-run adjudication and the
+  * window stamp's anchor ratios here, and OpsServer `/api/v1/baseline`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -67,16 +75,11 @@ object Bench {
     }
 
     // dev knob: SPARK_GRAFT_BENCH_ONLY=q51_stream_stream_join,... times a
-    // subset; SPARK_GRAFT_BENCH_EXCLUDE=... drops names (e.g. the
-    // streaming entries from a scale-decade run, whose headline is
-    // steady-state trigger time, not corpus scale); the driver leaves
-    // both unset and gets the full registry
+    // subset; the driver leaves it unset and gets the full registry
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val excl = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)) && !excl.contains(n))
+      .filter(n => only.forall(_.contains(n)))
     // A failed query reports -1.0 and is EXCLUDED from the headline total
     // (and listed under "failed") rather than silently corrupting it; a
     // failed warm-up skips the timed runs entirely.
@@ -131,8 +134,8 @@ object Bench {
         }
       } else Seq.empty
 
-    // one quiet listener bus for every counted run at once
-    val groupCounts = Metrics.takeGroupCounts(names.map(groupOf))
+    // one listener-bus barrier for every counted run at once
+    val groupCounts = Metrics.takeGroupCounts(spark, names.map(groupOf))
     val all = results ++ extraResults
     val (ok, bad) = all.partition(_._2 >= 0)
     val total = ok.map(_._2).sum
@@ -142,46 +145,41 @@ object Bench {
     // "no row above 2x its baseline" was twice asserted from a board
     // recorded under load and twice walked back by a judge's quiet
     // re-run. Machine-verify it instead: after the full board, re-run
-    // (median-of-3) every query whose board time exceeds 2x its latest
-    // ledger baseline (Baselines parses BASELINE.md directly, so a
-    // re-baselining addendum is picked up on its next run) and report
-    // both numbers. A genuinely regressed query stays >2x on the
-    // re-run; a load artifact doesn't. Subset runs skip this — their
-    // board is a dev probe, not an invariant claim.
-    val ledgerSf = atLedgerSf(sfDir)
+    // (median-of-3) every query whose board time exceeds 2x its baseline
+    // in BENCH_BASELINE.json and report both numbers. A genuinely
+    // regressed query stays >2x on the re-run; a load artifact doesn't.
+    // Subset runs skip this — their board is a dev probe, not an
+    // invariant claim.
+    val baselines =
+      if (atLedgerSf(sfDir)) boardQueries(Paths.get(BaselineFile))
+      else Map.empty[String, Double]
     val adjudicated: Seq[(String, Double, Double)] =
-      if (only.nonEmpty || !ledgerSf) Seq.empty
-      else {
-        val baselines = Baselines.parse()
-        all.collect {
-          case (n, v) if v >= 0 && baselines.get(n).exists(b => v > 2 * b) =>
-            val times = (1 to runs).map(_ => once(n)).filter(_ >= 0).sorted
-            val rerun = if (times.isEmpty) -1.0 else times(times.size / 2)
-            (n, v, rerun)
-        }
+      if (only.nonEmpty) Seq.empty
+      else all.collect {
+        case (n, v) if v >= 0 && baselines.get(n).exists(b => v > 2 * b) =>
+          val times = (1 to runs).map(_ => once(n)).filter(_ >= 0).sorted
+          val rerun = if (times.isEmpty) -1.0 else times(times.size / 2)
+          (n, v, rerun)
       }
     // seconds rounded to the millisecond for the summary fields
     def ms(v: Double): Double = math.round(v * 1000) / 1000.0
     // WINDOW STAMP (VERDICT r14 item 6): r14 burned a day hand-
     // classifying container windows (216 vs 249 vs a rejected 282 s for
     // identical code). Stamp the board with the anchor queries' ratio to
-    // their ledger baseline AT RUN TIME plus a machine verdict, so any
+    // their recorded baseline AT RUN TIME plus a machine verdict, so any
     // consumer (the driver, a judge) can classify the window
     // without re-deriving it. Anchors are the four stable scan/agg
     // shapes the r14m hand-adjudication used (flat in the quiet run,
     // 30-50% up in the rejected one); threshold 1.2 splits those two
     // observed clusters. Ratios are only meaningful against the sf0.1
-    // ledger, so other SFs (and boards missing the anchors) stamp "n/a".
+    // baseline, so other SFs (and boards missing the anchors) stamp "n/a".
     val anchorNames = Seq("q01_scan_filter", "q06_groupby_count",
       "q07_tpch_q1", "q104_tpch_q6")
-    val anchorRatios: Seq[(String, Double)] =
-      if (!ledgerSf) Seq.empty
-      else {
-        val bl = Baselines.parse()
-        val m = all.toMap
-        anchorNames.flatMap(n =>
-          for { v <- m.get(n) if v >= 0; b <- bl.get(n) } yield (n, v / b))
-      }
+    val anchorRatios: Seq[(String, Double)] = {
+      val m = all.toMap
+      anchorNames.flatMap(n =>
+        for { v <- m.get(n) if v >= 0; b <- baselines.get(n) } yield (n, v / b))
+    }
     val window =
       if (anchorRatios.size < 3) "n/a"
       else {
@@ -208,23 +206,8 @@ object Bench {
           "task_ms" -> c.taskMs)
       }: _*)))
     // the COMPLETE machine-readable board (belt-and-braces against any
-    // stdout truncation): target/bench_board.json for tooling plus a
-    // TRACKED copy at BENCH_BOARD.json (target/ is gitignored) so every
-    // round's full board is diffable in git history — written only for
-    // the canonical board shape (see [[writesTrackedBoard]]).
-    val fullRegistry = only.isEmpty && excl.isEmpty
-    val boardPaths = "target/bench_board.json" ::
-      (if (writesTrackedBoard(fullRegistry, sfDir, cpus, partitions))
-        List("BENCH_BOARD.json") else Nil)
-    boardPaths.foreach { p =>
-      try {
-        val out = java.nio.file.Paths.get(p)
-        Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.writeString(out, line + "\n")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] board write to $p failed: ${e.getMessage}")
-      }
-    }
+    // stdout truncation)
+    val fullBoard = writeBoard(line, boardPaths(only.isEmpty, sfDir, cpus, partitions))
     // FIRST metric line: a compact human-readable headline (slowest
     // queries + adjudication summary). This is NOT the driver contract
     // line — it prints BEFORE the full board so the driver's
@@ -240,7 +223,7 @@ object Bench {
       "adjudicated" -> ListMap(adjTop.map { case (n, b, r) => n -> Seq(ms(b), ms(r)) }: _*),
       "adjudicated_omitted" -> (adjudicated.size - adjTop.size),
       "anchors" -> anchors, "window" -> window,
-      "full_board" -> "BENCH_BOARD.json", "sf" -> sfDir))
+      "full_board" -> fullBoard.orNull, "sf" -> sfDir))
     println(compact)
     // LAST metric line = THE driver contract line, carrying the COMPLETE
     // per-query map (VERDICT r16 item 2). History of this contract:
@@ -256,16 +239,50 @@ object Bench {
     spark.stop()
   }
 
-  /** Ledger baselines are sf0.1 numbers: comparing another SF's board
-    * against them would adjudicate everything (or nothing) spuriously. */
+  /** The recorded per-query sf0.1 seconds, in the board shape. A re-pin
+    * edits it, or copies a quiet canonical board's `queries` into it. */
+  val BaselineFile = "BENCH_BASELINE.json"
+
+  /** Per-query seconds of a board (or of [[BaselineFile]]): its `queries`
+    * object, and nothing else (the `anchors` map also keys ratios by
+    * query name). A missing or unparsable file gives no times. */
+  def boardQueries(p: Path): Map[String, Double] = {
+    implicit val formats: Formats = DefaultFormats
+    scala.util.Try(parse(Files.readString(p)) \ "queries")
+      .map(_.extractOrElse[Map[String, Double]](Map.empty)).getOrElse(Map.empty)
+  }
+
+  /** Baselines are sf0.1 numbers: comparing another SF's board against
+    * them would adjudicate everything (or nothing) spuriously. */
   def atLedgerSf(sfDir: String): Boolean =
     sfDir.replaceAll("/+$", "").endsWith("sf0.1")
 
-  /** Whether a run may overwrite the tracked `BENCH_BOARD.json`: only
-    * the canonical board — the full registry at the ledger SF on 32
-    * cores with one shuffle partition per core. A dev subset, another
-    * SF or an 8-core run writes `target/bench_board.json` alone. */
-  def writesTrackedBoard(fullRegistry: Boolean, sfDir: String, cpus: Int,
-      partitions: Int): Boolean =
-    fullRegistry && atLedgerSf(sfDir) && cpus == 32 && partitions == cpus
+  /** Where a run writes its board, in order: `target/bench_board.json`
+    * for tooling, then the tracked `BENCH_BOARD.json` (target/ is
+    * gitignored, so every canonical board stays diffable in git history)
+    * for the canonical board only — the full registry at the ledger SF
+    * on 32 cores with one shuffle partition per core. A dev subset,
+    * another SF or an 8-core run writes `target/bench_board.json` alone.
+    * The compact line's `full_board` names the last path written. */
+  def boardPaths(fullRegistry: Boolean, sfDir: String, cpus: Int,
+      partitions: Int): List[String] =
+    "target/bench_board.json" ::
+      (if (fullRegistry && atLedgerSf(sfDir) && cpus == 32 && partitions == cpus)
+        List("BENCH_BOARD.json") else Nil)
+
+  /** Write the board `line` to each of `paths` in order and return the
+    * last one written, which the compact line names as `full_board`. A
+    * failed write is logged and skipped. */
+  def writeBoard(line: String, paths: Seq[String]): Option[String] =
+    paths.filter { p =>
+      try {
+        val out = Paths.get(p)
+        Option(out.getParent).foreach(Files.createDirectories(_))
+        Files.writeString(out, line + "\n")
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] board write to $p failed: ${e.getMessage}")
+        false
+      }
+    }.lastOption
 }

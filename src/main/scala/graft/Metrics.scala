@@ -7,7 +7,11 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
+import org.json4s.{JBool, JDecimal, JDouble, JLong, JNull, JObject, JString, JValue}
+import org.json4s.jackson.JsonMethods.compact
+
 import org.apache.spark.SparkContext
+import org.apache.spark.graftsync.ListenerSync
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -47,26 +51,26 @@ object Metrics {
       spillBytes: Long,
       observed: Map[String, Map[String, Any]]) {
 
-    private def jsonVal(v: Any): String = v match {
-      case null => "null"
-      case s: String => "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      case u: org.apache.spark.unsafe.types.UTF8String => jsonVal(u.toString)
-      case n: java.lang.Number => n.toString
-      case b: Boolean => b.toString
-      case other => jsonVal(other.toString)
+    /** An observed value: numbers stay numbers, anything else is text
+      * (a `UTF8String` included). */
+    private def jvalue(v: Any): JValue = v match {
+      case null => JNull
+      case n @ (_: java.lang.Double | _: java.lang.Float) =>
+        JDouble(n.asInstanceOf[Number].doubleValue)
+      case n: java.lang.Number => JDecimal(BigDecimal(n.toString))
+      case b: Boolean => JBool(b)
+      case other => JString(other.toString)
     }
 
-    def toJson: String = {
-      val obs = observed.toSeq.sortBy(_._1).map { case (point, kv) =>
-        val inner = kv.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k":${jsonVal(v)}""" }.mkString("{", ",", "}")
-        s""""$point":$inner"""
-      }.mkString("{", ",", "}")
-      s"""{"query":"$query","durationMs":$durationMs,"outputRows":$outputRows,""" +
-        s""""shuffleBytesWritten":$shuffleBytesWritten,""" +
-        s""""shuffleRecordsWritten":$shuffleRecordsWritten,"spillBytes":$spillBytes,""" +
-        s""""observed":$obs}"""
-    }
+    def toJson: String = compact(JObject(
+      "query" -> JString(query), "durationMs" -> JLong(durationMs),
+      "outputRows" -> JLong(outputRows),
+      "shuffleBytesWritten" -> JLong(shuffleBytesWritten),
+      "shuffleRecordsWritten" -> JLong(shuffleRecordsWritten),
+      "spillBytes" -> JLong(spillBytes),
+      "observed" -> JObject(observed.toList.sortBy(_._1).map { case (point, kv) =>
+        point -> JObject(kv.toList.sortBy(_._1).map { case (k, v) => k -> jvalue(v) })
+      })))
   }
 
   /** Expand the physical plan through AQE wrappers so exchange metrics
@@ -192,29 +196,12 @@ object Metrics {
       spark.listenerManager.register(listener)
   }
 
-  /** The execution-listener bus is asynchronous: wait until the recorded
-    * count is stable across two polls (or timeout) before draining, so a
-    * main() doesn't race its own metrics on the way out. 50 ms polls: the
-    * idle cost per tagged query is ~100-150 ms, which across Verify's ~90
-    * tags stays negligible next to the queries. */
-  def awaitQuiesce(timeoutMs: Long = 10000): Unit =
-    quiesce(timeoutMs, pollMs = 50)(buffer.size())
-
-  /** Listener events are posted by the time an action returns but
-    * delivered asynchronously: poll `read` until it gives the same value
-    * on two polls running after a change, or `timeoutMs` passes, and
-    * return the last value read. */
-  private def quiesce[A](timeoutMs: Long, pollMs: Long)(read: => A): A = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    var last = read
-    var stable = 0
-    while (System.currentTimeMillis() < deadline && stable < 2) {
-      Thread.sleep(pollMs)
-      val cur = read
-      if (cur == last) stable += 1 else { stable = 0; last = cur }
-    }
-    last
-  }
+  /** The execution listener runs on the asynchronous listener bus: wait
+    * until the bus has delivered every event of the actions run so far
+    * (or timeout) before draining, so a main() doesn't race its own
+    * metrics on the way out. */
+  def awaitQuiesce(spark: SparkSession, timeoutMs: Long = 10000): Unit =
+    ListenerSync.waitUntilEmpty(spark.sparkContext, timeoutMs)
 
   /** Drain and return everything recorded since the last drain. */
   def drain(): Seq[QueryMetric] = {
@@ -297,19 +284,19 @@ object Metrics {
   def countUnderCaller(sc: SparkContext, group: String): Unit =
     Option(sc.getLocalProperty(JobGroupKey)).foreach(foldedInto.put(group, _))
 
-  /** The counts of each of `groups`, read once the listener bus has gone
-    * quiet for them (two stable 20 ms polls or `timeoutMs`). Entries are
-    * removed on read: each group is a single-use measurement window. */
-  def takeGroupCounts(groups: Seq[String],
+  /** The counts of each of `groups`, read once the listener bus has
+    * delivered every event posted so far (or `timeoutMs` passed). Entries
+    * are removed on read: each group is a single-use measurement window. */
+  def takeGroupCounts(spark: SparkSession, groups: Seq[String],
       timeoutMs: Long = 5000): Map[String, GroupCounts] = {
     val zero = GroupCounts(0, 0, 0, 0)
     def members(g: String): Seq[String] =
       g +: foldedInto.asScala.collect { case (from, `g`) => from }.toSeq
-    def read: Map[String, GroupCounts] = groups.map { g =>
+    ListenerSync.waitUntilEmpty(spark.sparkContext, timeoutMs)
+    val out = groups.map { g =>
       g -> members(g).flatMap(m => Option(groupCounters.get(m))).map(_.counts)
         .foldLeft(zero)(_ + _)
     }.toMap
-    val out = quiesce(timeoutMs, pollMs = 20)(read)
     groups.flatMap(members).foreach { m =>
       groupCounters.remove(m)
       foldedInto.remove(m)

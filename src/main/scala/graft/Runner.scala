@@ -68,7 +68,7 @@ object Runner {
       println(Metrics.executedPlanString(canon.queryExecution))
     }
     if (flags.contains("--metrics")) {
-      Metrics.awaitQuiesce()
+      Metrics.awaitQuiesce(spark)
       Metrics.drain().foreach(m => println("metrics: " + m.toJson))
     }
     spark.stop()

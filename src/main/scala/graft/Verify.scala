@@ -33,7 +33,7 @@ object Verify {
     }
     val json = Serialization.write(SparkEntry.oracleSql)(DefaultFormats)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    Metrics.awaitQuiesce() // async listener bus: let metrics.jsonl flush
+    Metrics.awaitQuiesce(spark) // async listener bus: let metrics.jsonl flush
     spark.stop()
   }
 }

@@ -4,8 +4,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
-import org.json4s.{DefaultFormats, Formats, JString}
-import org.json4s.jackson.JsonMethods.{compact, parse}
+import org.json4s.JString
+import org.json4s.jackson.JsonMethods.compact
 
 /** Minimal READ-ONLY operations surface (round-10, VERDICT r9 "What's
   * missing" item 1): the reference ships a generated REST API plus a
@@ -23,7 +23,7 @@ import org.json4s.jackson.JsonMethods.{compact, parse}
   *   GET /api/v1/queries              registered query ids (+ oracle flag)
   *   GET /api/v1/queries/{id}/sql     the registered DuckDB oracle SQL
   *   GET /api/v1/bench                the bench board JSON (newest copy)
-  *   GET /api/v1/baseline             ledger baselines ⋈ current board, as ratios
+  *   GET /api/v1/baseline             recorded baselines ⋈ canonical board, as ratios
   *   GET /api/v1/correctness          latest driver CORRECTNESS_r*.json
   *   GET /api/v1/metrics              metrics.jsonl from the last Verify
   *   GET /api/v1/plans                available executed-plan artifacts
@@ -68,7 +68,8 @@ object OpsServer {
     } else notFound(ex, p.toString)
 
   /** First existing candidate wins — lets the tracked board and the
-    * target/ working copy both satisfy /metrics. */
+    * target/ working copy both satisfy /metrics, and gives /baseline the
+    * tracked canonical board, which a dev subset run never writes. */
   private def firstOf(paths: Seq[String]): Option[Path] =
     paths.map(Paths.get(_)).find(Files.isRegularFile(_))
 
@@ -107,21 +108,12 @@ object OpsServer {
     graft.SparkEntry.queries.keys.map(k => k -> oracles.get(k)).toMap
   }
 
-  /** Per-query seconds of a bench board: its `queries` object, and
-    * nothing else (the `anchors` map also keys ratios by query name). A
-    * board that does not parse gives no times. */
-  private[ops] def boardQueryTimes(p: Path): Map[String, Double] = {
-    implicit val formats: Formats = DefaultFormats
-    scala.util.Try(parse(Files.readString(p, UTF_8)) \ "queries")
-      .map(_.extractOrElse[Map[String, Double]](Map.empty)).getOrElse(Map.empty)
-  }
-
   def start(port: Int,
       benchPaths: Seq[String] = Seq("BENCH_BOARD.json", "target/bench_board.json"),
       metricsPaths: Seq[String] = Seq("target/verify_plans/metrics.jsonl"),
       plansDir: String = "target/verify_plans",
       correctnessDir: String = ".",
-      baselinePath: String = "BASELINE.md"): Running = {
+      baselinePath: String = graft.Bench.BaselineFile): Running = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
 
     server.createContext("/api/v1/health", (ex: HttpExchange) =>
@@ -154,15 +146,17 @@ object OpsServer {
 
     // the operator question "am I regressed?" previously required
     // cross-reading 1,700 lines of ledger markdown against the board
-    // JSON (VERDICT r11 #6); here it is one curl: every query's latest
-    // recorded sf0.1 baseline joined with the newest board time, as a
-    // computed ratio, worst first
+    // JSON (VERDICT r11 #6); here it is one curl: every query's recorded
+    // sf0.1 baseline joined with the first existing board of
+    // `benchPaths` (the tracked canonical board, not a newer dev subset),
+    // as a computed ratio, worst first. Both sides are boards, read by
+    // Bench.boardQueries.
     server.createContext("/api/v1/baseline", (ex: HttpExchange) => {
-      val baselines = graft.Baselines.parse(Paths.get(baselinePath))
+      val baselines = graft.Bench.boardQueries(Paths.get(baselinePath))
       if (baselines.isEmpty) notFound(ex, s"$baselinePath (no parsable baselines)")
       else {
-        val boardPath = newestOf(benchPaths)
-        val board = boardPath.map(boardQueryTimes).getOrElse(Map.empty)
+        val boardPath = firstOf(benchPaths)
+        val board = boardPath.map(graft.Bench.boardQueries).getOrElse(Map.empty)
         def r3(v: Double): String =
           String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
         val rows = (baselines.keySet ++ board.keySet).toSeq

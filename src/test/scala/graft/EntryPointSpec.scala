@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the single-profile design from drifting back: only
   * SessionDefaults builds a SparkSession, operator and streaming paths
   * read no environment, fixture tables open through Tables without an inference
-  * job, and only the canonical board may overwrite the tracked
-  * BENCH_BOARD.json. */
+  * job, only the canonical board may overwrite the tracked
+  * BENCH_BOARD.json, and no code reads the BASELINE.md prose ledger. */
 class EntryPointSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -63,14 +63,35 @@ class EntryPointSpec extends AnyFunSuite {
   }
 
   test("only the canonical board overwrites BENCH_BOARD.json") {
-    import Bench.writesTrackedBoard
+    // the last path written is also the compact line's `full_board`
+    // pointer, so a run that skips the tracked board points at its own
+    def lastBoard(fullRegistry: Boolean, sfDir: String, cpus: Int, partitions: Int) = {
+      val paths = Bench.boardPaths(fullRegistry, sfDir, cpus, partitions)
+      assert(paths.head == "target/bench_board.json", paths)
+      paths.last
+    }
+    val (tracked, own) = ("BENCH_BOARD.json", "target/bench_board.json")
     val sf01 = "/root/testdata/sf0.1"
-    assert(writesTrackedBoard(fullRegistry = true, sf01, 32, 32))
-    assert(writesTrackedBoard(fullRegistry = true, sf01 + "/", 32, 32))
-    assert(!writesTrackedBoard(fullRegistry = true, sf01, 8, 8), "8-core run")
-    assert(!writesTrackedBoard(fullRegistry = true, sf01, 32, 320), "partitions != cores")
-    assert(!writesTrackedBoard(fullRegistry = false, sf01, 32, 32), "dev subset")
-    assert(!writesTrackedBoard(fullRegistry = true, "/root/testdata/sf0.01", 32, 32))
-    assert(!writesTrackedBoard(fullRegistry = true, "target/sf100", 32, 32))
+    assert(lastBoard(fullRegistry = true, sf01, 32, 32) == tracked)
+    assert(lastBoard(fullRegistry = true, sf01 + "/", 32, 32) == tracked)
+    assert(lastBoard(fullRegistry = true, sf01, 8, 8) == own, "8-core run")
+    assert(lastBoard(fullRegistry = true, sf01, 32, 320) == own, "partitions != cores")
+    assert(lastBoard(fullRegistry = false, sf01, 32, 32) == own, "dev subset")
+    assert(lastBoard(fullRegistry = true, "/root/testdata/sf0.01", 32, 32) == own)
+    assert(lastBoard(fullRegistry = true, "target/sf100", 32, 32) == own)
+    val dir = Files.createTempDirectory("graft_boards")
+    val (a, b) = (dir.resolve("a.json").toString, dir.resolve("b/board.json").toString)
+    assert(Bench.writeBoard("{}", Seq(a, b)) == Some(b))
+    // a path under a regular file cannot be written: the pointer stays on a
+    assert(Bench.writeBoard("{}", Seq(a, s"$a/board.json")) == Some(a))
+  }
+
+  test("no code in src/main reads the BASELINE.md ledger") {
+    // baselines are the board-shaped BENCH_BASELINE.json; the prose
+    // ledger is for people, and a path literal naming it is a reader
+    val files = scalaFiles(Paths.get("src/main"))
+    assert(files.size > 50, "source tree not found")
+    val hits = offenders(files, """"[^"]*BASELINE\.md""")
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

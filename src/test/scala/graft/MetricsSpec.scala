@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.graftinject.ListenerSync
+import org.apache.spark.graftsync.ListenerSync
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,7 +25,7 @@ class MetricsSpec extends AnyFunSuite {
     val rows = df.collect()
     assert(rows.nonEmpty)
 
-    Metrics.awaitQuiesce()
+    Metrics.awaitQuiesce(spark)
     val ms = Metrics.drain().filter(_.query == "metrics_spec_probe")
     assert(ms.nonEmpty, "listener recorded no metric for the tagged query")
     val m = ms.last
@@ -47,7 +47,7 @@ class MetricsSpec extends AnyFunSuite {
     Metrics.drain()
     Metrics.tagQuery("q62_probe")
     SparkEntry.queries("q62_fuzzy_join")(spark, sf).collect()
-    Metrics.awaitQuiesce()
+    Metrics.awaitQuiesce(spark)
     val ms = Metrics.drain().filter(_.query == "q62_probe")
     assert(ms.exists(_.observed.contains("fuzzy_candidates")),
       s"fuzzy_candidates observation missing: ${ms.map(_.observed.keys)}")
@@ -72,7 +72,7 @@ class MetricsSpec extends AnyFunSuite {
     Metrics.tagQuery("rapid_c")
     val c = t.select(count(lit(1))).collect()
     assert(c.nonEmpty)
-    Metrics.awaitQuiesce()
+    Metrics.awaitQuiesce(spark)
     val ms = Metrics.drain().filter(_.query.startsWith("rapid_"))
     assert(ms.map(_.query).toSet == Set("rapid_a", "rapid_b", "rapid_c"),
       s"tags recorded: ${ms.map(_.query)}")
@@ -88,7 +88,7 @@ class MetricsSpec extends AnyFunSuite {
     Metrics.drain()
     Metrics.tagQuery("plan_probe")
     Tables.t(spark, sf, "orders").groupBy("o_orderstatus").count().collect()
-    Metrics.awaitQuiesce()
+    Metrics.awaitQuiesce(spark)
     val f = java.nio.file.Paths.get(plansDir, "plan_probe.plan.txt")
     assert(java.nio.file.Files.exists(f), s"no plan artifact at $f")
     val txt = java.nio.file.Files.readString(f)
@@ -125,10 +125,29 @@ class MetricsSpec extends AnyFunSuite {
         assert(joined.collect().nonEmpty)
         assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
       } finally sc.clearJobGroup()
-      ListenerSync.waitUntilEmpty(sc, 30000)
-      val c = Metrics.takeGroupCounts(Seq(group))(group)
+      val c = Metrics.takeGroupCounts(spark, Seq(group))(group)
       assert(c.jobs > 2 && c.stages > 2 && c.taskMs >= 0, c)
       assert((c.jobs, c.stages, c.tasks) == ((jobs.get, stages.get, tasks.get)), c)
     } finally sc.removeSparkListener(global)
+  }
+
+  test("a metrics line parses back with a quoted, backslashed tag and typed observations") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val name = """tag "quoted" C:\dir\q"""
+    val m = Metrics.QueryMetric(name, 5, 1, 0, 0, 0, Map("p" -> Map(
+      "n" -> java.lang.Long.valueOf(3), "avg" -> java.lang.Double.valueOf(1.5),
+      "label" -> org.apache.spark.unsafe.types.UTF8String.fromString("a\"b"),
+      "dec" -> new java.math.BigDecimal("2.50"))))
+    val j = parse(m.toJson)
+    assert(j \ "query" == JString(name), m.toJson)
+    assert(j \ "durationMs" == JInt(5), m.toJson)
+    val obs = j \ "observed" \ "p"
+    assert(obs \ "n" == JInt(3) && obs \ "avg" == JDouble(1.5) &&
+      obs \ "dec" == JDouble(2.5), m.toJson)
+    assert(obs \ "label" == JString("a\"b"), m.toJson)
+    val keys = j match { case JObject(fs) => fs.map(_._1); case _ => Nil }
+    assert(keys == List("query", "durationMs", "outputRows", "shuffleBytesWritten",
+      "shuffleRecordsWritten", "spillBytes", "observed"), keys)
   }
 }

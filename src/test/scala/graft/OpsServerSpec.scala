@@ -18,7 +18,7 @@ class OpsServerSpec extends AnyFunSuite {
     val board = dir.resolve("board.json")
     Files.writeString(board, """{"metric":"total","value":1.0}""")
     val metrics = dir.resolve("metrics.jsonl")
-    Files.writeString(metrics, """{"query":"q07_tpch_q1","wallMs":42}""" + "\n")
+    Files.writeString(metrics, """{"query":"q07_tpch_q1","durationMs":42}""" + "\n")
     // two correctness rounds: /correctness must pick r10 numerically
     // (r10 > r9 by round number, not lexicographically)
     Files.writeString(dir.resolve("CORRECTNESS_r9.json"), """{"round":9}""")
@@ -68,7 +68,7 @@ class OpsServerSpec extends AnyFunSuite {
   test("bench, metrics, and plan artifacts are served read-only") {
     withServer { (port, c) =>
       assert(get(c, port, "/api/v1/bench").body().contains("\"metric\":\"total\""))
-      assert(get(c, port, "/api/v1/metrics").body().contains("\"wallMs\":42"))
+      assert(get(c, port, "/api/v1/metrics").body().contains("\"durationMs\":42"))
       assert(get(c, port, "/api/v1/plans").body() == """{"plans":["q07_tpch_q1"]}""")
       assert(get(c, port, "/api/v1/plans/q07_tpch_q1").body().contains("Physical Plan"))
       assert(get(c, port, "/api/v1/plans/other").statusCode() == 404)
@@ -90,14 +90,9 @@ class OpsServerSpec extends AnyFunSuite {
 
   test("baseline joins ledger baselines with the board as worst-first ratios") {
     val dir = Files.createTempDirectory("graft_ops_baseline")
-    val ledger = dir.resolve("BASELINE.md")
+    val ledger = dir.resolve("baseline.json")
     Files.writeString(ledger,
-      """|| Query | sf | sec/query (baseline) | config | recorded |
-         ||---|---|---|---|---|
-         || q_fast | 0.1 | 1.0 | `local[32]` | r1 |
-         || q_slow | 0.1 | 0.5 | `local[32]` | r1 |
-         || q_unrun | 0.1 | 2.0 | `local[32]` | r1 |
-         |""".stripMargin)
+      """{"queries":{"q_fast":1.0,"q_slow":0.5,"q_unrun":2.0}}""")
     val board = dir.resolve("board.json")
     // q_slow at 3x its baseline; q_extra has no ledger row; the
     // streaming object and adjudication array must NOT parse as times
@@ -130,12 +125,8 @@ class OpsServerSpec extends AnyFunSuite {
     // the window stamp keys its anchor ratios by query name too; a board
     // time read from `anchors` would report a ratio as seconds
     val dir = Files.createTempDirectory("graft_ops_anchors")
-    val ledger = dir.resolve("BASELINE.md")
-    Files.writeString(ledger,
-      """|| Query | sf | sec/query (baseline) | config | recorded |
-         ||---|---|---|---|---|
-         || q104_tpch_q6 | 0.1 | 0.2 | `local[32]` | r1 |
-         |""".stripMargin)
+    val ledger = dir.resolve("baseline.json")
+    Files.writeString(ledger, """{"queries":{"q104_tpch_q6":0.2}}""")
     val board = dir.resolve("board.json")
     Files.writeString(board,
       """{"metric":"total","value":0.204,"queries":{"q104_tpch_q6":0.204},""" +
@@ -152,8 +143,8 @@ class OpsServerSpec extends AnyFunSuite {
   }
 
   test("baseline endpoint reads the REAL ledger against the tracked board") {
-    // non-hermetic on purpose: the repo's own BASELINE.md + BENCH_BOARD
-    // must join (this is the exact curl an operator runs from the root)
+    // non-hermetic on purpose: the repo's own BENCH_BASELINE.json +
+    // BENCH_BOARD must join (the exact curl an operator runs from the root)
     val running = ops.OpsServer.start(0)
     try {
       val body = get(HttpClient.newHttpClient(), running.port, "/api/v1/baseline").body()
@@ -161,6 +152,29 @@ class OpsServerSpec extends AnyFunSuite {
       assert(n >= SparkEntry.queries.size,
         s"ledger parse found only $n baselines for ${SparkEntry.queries.size} queries")
       assert(body.contains("\"id\":\"q07_tpch_q1\""))
+    } finally running.stop()
+  }
+
+  test("baseline joins the canonical board, not a newer subset board") {
+    // a SPARK_GRAFT_BENCH_ONLY run refreshes only the second path; the
+    // join must keep reading the tracked canonical board listed first
+    val dir = Files.createTempDirectory("graft_ops_subset")
+    val ledger = dir.resolve("baseline.json")
+    Files.writeString(ledger, """{"queries":{"q_a":1.0,"q_b":1.0,"q_c":1.0}}""")
+    val tracked = dir.resolve("tracked.json")
+    val subset = dir.resolve("subset.json")
+    Files.writeString(tracked, """{"queries":{"q_a":1.1,"q_b":0.9,"q_c":1.0}}""")
+    Files.writeString(subset, """{"queries":{"q_a":5.0}}""")
+    Files.setLastModifiedTime(tracked,
+      java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(subset).toMillis - 60000))
+    val running = ops.OpsServer.start(0,
+      benchPaths = Seq(tracked.toString, subset.toString), baselinePath = ledger.toString)
+    try {
+      val r = get(HttpClient.newHttpClient(), running.port, "/api/v1/baseline")
+      assert(r.body().contains(""""n_board":3"""), r.body())
+      assert(r.body().contains(""""over_2x":0"""), r.body())
+      assert(r.headers().firstValue("X-Graft-Board-Path").get == tracked.toString)
     } finally running.stop()
   }
 

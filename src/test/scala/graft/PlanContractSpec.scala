@@ -171,7 +171,7 @@ class PlanContractSpec extends AnyFunSuite {
     val df =
       try SparkEntry.queries(name)(spark, sf)
       finally spark.sparkContext.clearJobGroup()
-    val pre = Metrics.takeGroupCounts(Seq(group))(group).jobs.toInt
+    val pre = Metrics.takeGroupCounts(spark, Seq(group))(group).jobs.toInt
     shapeOf(df).copy(prejobs = pre)
   }
 

@@ -17,7 +17,7 @@ class TablesSpec extends AnyFunSuite {
     spark.sparkContext.setJobGroup(group, "tables open", interruptOnCancel = false)
     try open
     finally spark.sparkContext.clearJobGroup()
-    Metrics.takeGroupCounts(Seq(group))(group).jobs
+    Metrics.takeGroupCounts(spark, Seq(group))(group).jobs
   }
 
   test("footer schema equals Spark's inferred schema for every fixture table") {

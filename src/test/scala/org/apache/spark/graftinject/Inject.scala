@@ -71,14 +71,6 @@ object ShuffleCrypto {
   }
 }
 
-/** Test-only reach into the private[spark] listener bus: SpillSpec must
-  * drain queued SparkListenerTaskEnd events before reading its spill
-  * accumulator, and `SparkContext.listenerBus` is not public API. */
-object ListenerSync {
-  def waitUntilEmpty(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
-    sc.listenerBus.waitUntilEmpty(timeoutMs)
-}
-
 object Inject {
   /** Throw a fetch failure for a REAL shuffle id (a made-up id crashes the
     * DAGScheduler's event loop: shuffleIdToMapStage lookup fails). A null
