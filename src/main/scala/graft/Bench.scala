@@ -14,16 +14,18 @@ import org.json4s.jackson.Serialization
   * Methodology (BASELINE.md): one warm-up execution per query, then
   * median of 3 timed runs. Queries are materialized through the noop
   * sink so the whole plan executes (a bare count() would let Catalyst
-  * prune the work). Each query's last timed run is also counted under
-  * its own job group: the board's `counts` map carries its jobs,
-  * stages, tasks and summed task time ([[Metrics.GroupCounts]]), which
-  * do not depend on the machine's load the way wall time does.
+  * prune the work). Each query's last timed run is also a
+  * [[Metrics.measured]] window: the board's `counts` map carries its
+  * [[Metrics.QueryRecord]] (jobs, stages, tasks, summed task time,
+  * shuffle and spill), numbers that do not depend on the machine's load
+  * the way wall time does.
   * `SPARK_GRAFT_BENCH_ONLY=q1,q2` counts just those queries.
   *
   * The recorded sf0.1 baseline is itself a board: [[BaselineFile]]
   * holds one `queries` map of seconds, read by [[boardQueries]] like any
   * board this writes. It feeds the >2× re-run adjudication and the
-  * window stamp's anchor ratios here, and OpsServer `/api/v1/baseline`.
+  * window stamp's anchor ratios of a [[canonical]] run, and OpsServer
+  * `/api/v1/baseline`.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -49,21 +51,17 @@ object Bench {
     // headline (triggers × batch) must not be misread as engine cost
     val streamDetail = scala.collection.mutable.Map[String, (Int, Double)]()
 
-    Metrics.installJobCounter(spark)
-    def groupOf(name: String): String = s"bench $name"
-
-    /** One execution of `name`; with `counted`, under its job group. */
+    /** One execution of `name`; with `counted`, in its metrics window. */
     def once(name: String, counted: Boolean = false): Double = {
       graft.streaming.StreamMetrics.drain() // clear stale state
-      if (counted)
-        spark.sparkContext.setJobGroup(groupOf(name), groupOf(name), interruptOnCancel = false)
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
+      def run(): Unit = SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
+      val t0 = System.nanoTime()
+      try if (counted) Metrics.measured(spark, name)(run()) else run()
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
-      } finally if (counted) spark.sparkContext.clearJobGroup()
+      }
       val wall = (System.nanoTime() - t0) / 1e9
       graft.streaming.StreamMetrics.peekDetail()
         .foreach(d => streamDetail(name) = d)
@@ -135,7 +133,7 @@ object Bench {
       } else Seq.empty
 
     // one listener-bus barrier for every counted run at once
-    val groupCounts = Metrics.takeGroupCounts(spark, names.map(groupOf))
+    val records = Metrics.take(spark, names)
     val all = results ++ extraResults
     val (ok, bad) = all.partition(_._2 >= 0)
     val total = ok.map(_._2).sum
@@ -150,9 +148,7 @@ object Bench {
     // regressed query stays >2x on the re-run; a load artifact doesn't.
     // Subset runs skip this — their board is a dev probe, not an
     // invariant claim.
-    val baselines =
-      if (atLedgerSf(sfDir)) boardQueries(Paths.get(BaselineFile))
-      else Map.empty[String, Double]
+    val baselines = baselinesFor(sfDir, cpus, partitions)
     val adjudicated: Seq[(String, Double, Double)] =
       if (only.nonEmpty) Seq.empty
       else all.collect {
@@ -171,8 +167,9 @@ object Bench {
     // without re-deriving it. Anchors are the four stable scan/agg
     // shapes the r14m hand-adjudication used (flat in the quiet run,
     // 30-50% up in the rejected one); threshold 1.2 splits those two
-    // observed clusters. Ratios are only meaningful against the sf0.1
-    // baseline, so other SFs (and boards missing the anchors) stamp "n/a".
+    // observed clusters. Ratios are only meaningful against a run of the
+    // baseline's own protocol, so any other run (and a board missing the
+    // anchors) stamps "n/a".
     val anchorNames = Seq("q01_scan_filter", "q06_groupby_count",
       "q07_tpch_q1", "q104_tpch_q6")
     val anchorRatios: Seq[(String, Double)] = {
@@ -201,9 +198,7 @@ object Bench {
       "anchors" -> anchors, "window" -> window, "partitions" -> partitions,
       "bcast" -> bcastStatic, "sf" -> sfDir,
       "counts" -> ListMap(results.collect { case (n, v) if v >= 0 =>
-        val c = groupCounts(groupOf(n))
-        n -> ListMap("jobs" -> c.jobs, "stages" -> c.stages, "tasks" -> c.tasks,
-          "task_ms" -> c.taskMs)
+        n -> records(n).toJValue
       }: _*)))
     // the COMPLETE machine-readable board (belt-and-braces against any
     // stdout truncation)
@@ -252,22 +247,30 @@ object Bench {
       .map(_.extractOrElse[Map[String, Double]](Map.empty)).getOrElse(Map.empty)
   }
 
-  /** Baselines are sf0.1 numbers: comparing another SF's board against
-    * them would adjudicate everything (or nothing) spuriously. */
-  def atLedgerSf(sfDir: String): Boolean =
-    sfDir.replaceAll("/+$", "").endsWith("sf0.1")
+  /** The protocol [[BaselineFile]] was recorded under: sf0.1 on 32
+    * cores with one shuffle partition per core. Comparing another SF,
+    * core count or partitioning with it would adjudicate everything (or
+    * nothing) spuriously: a 4-core run reads noisy from core count alone. */
+  def canonical(sfDir: String, cpus: Int, partitions: Int): Boolean =
+    sfDir.replaceAll("/+$", "").endsWith("sf0.1") && cpus == 32 && partitions == cpus
+
+  /** The baseline seconds a run is compared with: none off the
+    * [[canonical]] protocol. */
+  def baselinesFor(sfDir: String, cpus: Int, partitions: Int): Map[String, Double] =
+    if (canonical(sfDir, cpus, partitions)) boardQueries(Paths.get(BaselineFile))
+    else Map.empty
 
   /** Where a run writes its board, in order: `target/bench_board.json`
     * for tooling, then the tracked `BENCH_BOARD.json` (target/ is
     * gitignored, so every canonical board stays diffable in git history)
-    * for the canonical board only — the full registry at the ledger SF
-    * on 32 cores with one shuffle partition per core. A dev subset,
-    * another SF or an 8-core run writes `target/bench_board.json` alone.
+    * for the canonical board only — the full registry under the
+    * [[canonical]] protocol. A dev subset, another SF or an 8-core run
+    * writes `target/bench_board.json` alone.
     * The compact line's `full_board` names the last path written. */
   def boardPaths(fullRegistry: Boolean, sfDir: String, cpus: Int,
       partitions: Int): List[String] =
     "target/bench_board.json" ::
-      (if (fullRegistry && atLedgerSf(sfDir) && cpus == 32 && partitions == cpus)
+      (if (fullRegistry && canonical(sfDir, cpus, partitions))
         List("BENCH_BOARD.json") else Nil)
 
   /** Write the board `line` to each of `paths` in order and return the

@@ -22,6 +22,14 @@ object Canon {
   def dsum(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(28, scale))).cast("double")
 
+  /** Order-independent sum of arbitrary double terms — the moment sums
+    * (x, x², x·y) of the correlation and regression operators: each
+    * addend is rounded to 12 decimal places and accumulated exactly in
+    * decimal(38,12). The oracle side is CAST(SUM(CAST(t AS
+    * DECIMAL(38,12))) AS DOUBLE). */
+  def exactSum(c: Column): Column =
+    sum(c.cast("decimal(38,12)")).cast("double")
+
   /** Deterministic average: exact decimal sum divided by count, rounded.
     * (Spark's avg(double) merges partial sums in partition order — not
     * reproducible against a sequential oracle.) */

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Single-query CLI (SURVEY §7's ops-runner analogue of the reference's
   * CLI, cli/src/main/scala/org/apache/celeborn/cli/CelebornCli.scala):
   * run ONE registered query by ID against a data dir and print its
@@ -13,9 +15,10 @@ package graft
   * BEFORE execution (the static guess), `--explain` prints the EXECUTED
   * adaptive plan after the run (`isFinalPlan=true`, materialized
   * stages — what AQE actually did), `--sql` prints the registered
-  * DuckDB oracle SQL if one exists, `--metrics` prints the per-query
-  * observability line (observed metric points + shuffle bytes/records +
-  * spill — see [[Metrics]]).
+  * DuckDB oracle SQL if one exists, `--metrics` prints the query's one
+  * [[Metrics.QueryRecord]] line (jobs, stages, tasks, observed metric
+  * points, shuffle bytes/records, spill), counted over everything from
+  * construction to the printed rows.
   */
 object Runner {
   def main(args: Array[String]): Unit = {
@@ -37,7 +40,14 @@ object Runner {
     val cpus = SessionDefaults.envInt("SPARK_GRAFT_CPUS", 4)
     val spark = SessionDefaults.session(sfDir, s"local[$cpus]", cpus)
 
-    if (flags.contains("--metrics")) { Metrics.install(spark); Metrics.tagQuery(name) }
+    Metrics.measured(spark, name)(run(spark, name, sfDir, flags, maxRows))
+    if (flags.contains("--metrics"))
+      println("metrics: " + Metrics.take(spark, Seq(name))(name).toJson)
+    spark.stop()
+  }
+
+  private def run(spark: SparkSession, name: String, sfDir: String,
+      flags: Array[String], maxRows: Int): Unit = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     if (flags.contains("--plan")) df.explain("formatted")
     if (flags.contains("--sql"))
@@ -67,10 +77,5 @@ object Runner {
       println("-- executed plan (adaptive, final) --")
       println(Metrics.executedPlanString(canon.queryExecution))
     }
-    if (flags.contains("--metrics")) {
-      Metrics.awaitQuiesce(spark)
-      Metrics.drain().foreach(m => println("metrics: " + m.toJson))
-    }
-    spark.stop()
   }
 }

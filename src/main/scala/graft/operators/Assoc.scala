@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.Canon.exactSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,9 +39,6 @@ import org.apache.spark.sql.functions._
   * independence cannot leak a negative χ² into the √.
   */
 object Assoc {
-
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(38,12)")).cast("double")
 
   /** PUBLIC API — per-group Pearson correlation matrix over the given
     * numeric columns of `base` (group column `g`): one row per
@@ -89,7 +87,7 @@ object Assoc {
       case None =>
         complete.groupBy(col("g")).agg(
           count(lit(1)).cast("double").as("n"),
-          sumTerms.map { case (nm, t, _) => dsum(t).as(nm) }: _*)
+          sumTerms.map { case (nm, t, _) => exactSum(t).as(nm) }: _*)
     }
     val pairRows = cols.combinations(2).map { case Seq(a, b) =>
       struct(lit(a).as("col_x"), lit(b).as("col_y"),
@@ -283,8 +281,8 @@ object Assoc {
   def autocorr(series: DataFrame, maxLag: Int): DataFrame = {
     val s = series.select(col("g"), col("d"), col("x")).localCheckpoint()
     val tot = s.groupBy(col("g")).agg(
-      count(lit(1)).as("n"), dsum(col("x")).as("sx"),
-      dsum(col("x") * col("x")).as("sxx"))
+      count(lit(1)).as("n"), exactSum(col("x")).as("sx"),
+      exactSum(col("x") * col("x")).as("sxx"))
     // equi-join on (g, d + lag): the lag target date is projected on
     // the probe side so this is a hash/sort join on the day key, never
     // a per-group day×day cross join
@@ -295,8 +293,8 @@ object Assoc {
       .join(s.select(col("g"), col("d").as("d2"), col("x").as("x2")),
         Seq("g", "d2"))
     pairs.groupBy(col("g"), col("lag"))
-      .agg(count(lit(1)).as("n_pairs"), dsum(col("x") * col("x2")).as("sxy"),
-        dsum(col("x")).as("sa"), dsum(col("x2")).as("sb"))
+      .agg(count(lit(1)).as("n_pairs"), exactSum(col("x") * col("x2")).as("sxy"),
+        exactSum(col("x")).as("sa"), exactSum(col("x2")).as("sb"))
       .join(tot, "g")
       .select(col("g"), col("lag"), col("n").as("n_days"), col("n_pairs"),
         (col("sx") / col("n")).as("xbar"), col("sxy"), col("sa"), col("sb"),

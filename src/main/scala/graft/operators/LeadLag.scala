@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Canon.exactSum
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,9 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object LeadLag {
 
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(38,12)")).cast("double")
-
   /** PUBLIC API — lead–lag screen over a (g, day, x) daily frame: for
     * every ordered-by-name pair (ga < gb), the per-lag Pearson corr of
     * (a_t, b_{t+lag}) for lag in [−maxLag, maxLag]; emits the peak-
@@ -58,10 +56,10 @@ object LeadLag {
       .withColumn("lag", col("lag").cast("long"))
       .groupBy(col("ga"), col("gb"), col("lag"))
       .agg(count(lit(1)).as("n"),
-        dsum(col("xa")).as("sa"), dsum(col("xb")).as("sb"),
-        dsum(col("xa") * col("xa")).as("saa"),
-        dsum(col("xb") * col("xb")).as("sbb"),
-        dsum(col("xa") * col("xb")).as("sab"))
+        exactSum(col("xa")).as("sa"), exactSum(col("xb")).as("sb"),
+        exactSum(col("xa") * col("xa")).as("saa"),
+        exactSum(col("xb") * col("xb")).as("sbb"),
+        exactSum(col("xa") * col("xb")).as("sab"))
       .select(col("ga"), col("gb"), col("lag"), col("n"),
         when((col("n") * col("saa") - col("sa") * col("sa")) *
           (col("n") * col("sbb") - col("sb") * col("sb")) > 0,

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import graft.Canon.exactSum
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,8 +44,6 @@ object Ols {
     * for arbitrary inputs. */
   def olsByGroup(base: DataFrame,
       pairedScales: Option[(Int, Int)] = None): DataFrame = {
-    def dsum(c: org.apache.spark.sql.Column) =
-      sum(c.cast("decimal(38,12)")).cast("double")
     val moments = pairedScales match {
       case Some((sx, sy)) =>
         import graft.Canon.{psumAggs, psumDouble, pterm}
@@ -64,10 +63,10 @@ object Ols {
       case None =>
         base.groupBy(col("g"))
           .agg(count(lit(1)).cast("double").as("n"),
-            dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-            dsum(col("x") * col("x")).as("sxx"),
-            dsum(col("y") * col("y")).as("syy"),
-            dsum(col("x") * col("y")).as("sxy"))
+            exactSum(col("x")).as("sx"), exactSum(col("y")).as("sy"),
+            exactSum(col("x") * col("x")).as("sxx"),
+            exactSum(col("y") * col("y")).as("syy"),
+            exactSum(col("x") * col("y")).as("sxy"))
     }
     moments
       .withColumn("dx", col("n") * col("sxx") - col("sx") * col("sx"))

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd cosine similarity over two ArrayType(FloatType)
   * columns.
@@ -20,21 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * semantics.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with FloatVectorPair {
 
-  // ExpectsInputTypes/AbstractDataType are private[sql] in Spark 4.1.2, so
-  // validate input types manually with public API only.
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) => true
-      case _                       => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float> arguments, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
   override def nullSafeEval(a: Any, b: Any): Any = {

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native codegen'd squared-L2 distance over two ArrayType(FloatType)
   * columns — the PQ assignment/encode hot path (graft.operators.Pq
@@ -18,19 +16,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * tier as [[CosineSimilarity]]: performance, not new semantics.
   */
 case class L2Squared(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with FloatVectorPair {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) => true
-      case _                       => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float> arguments, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "l2_sq"
 
   override def nullSafeEval(a: Any, b: Any): Any = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, Tables}
+import graft.Canon.exactSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,9 +35,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamAssoc {
 
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(38,12)")).cast("double")
-
   /** The six scalar moment aggregates shared by both legs. Callers
     * MUST pre-filter to complete (x, y) pairs — n counts rows while
     * the sums skip NULLs, so an unfiltered incomplete pair would
@@ -44,10 +42,10 @@ object StreamAssoc {
     * the SQL mirror apply the same complete-pair filter. */
   private def momentAggs: Seq[Column] = Seq(
     count(lit(1)).as("n"),
-    dsum(col("x")).as("sx"), dsum(col("y")).as("sy"),
-    dsum(col("x") * col("x")).as("sxx"),
-    dsum(col("y") * col("y")).as("syy"),
-    dsum(col("x") * col("y")).as("sxy"))
+    exactSum(col("x")).as("sx"), exactSum(col("y")).as("sy"),
+    exactSum(col("x") * col("x")).as("sxx"),
+    exactSum(col("y") * col("y")).as("syy"),
+    exactSum(col("x") * col("y")).as("sxy"))
 
   /** The shared closed form: corr from the six moments, 9-dp rounded,
     * NULL when either side is degenerate (zero variance). */

@@ -33,10 +33,10 @@ object StreamMetrics {
     * (not the sum) discounts the first batch's one-time costs (state
     * store init, streaming-plan codegen) and stray GC spikes, which a
     * 3-4-batch AvailableNow run cannot amortize the way a long-lived
-    * stream does. The stream's micro-batch jobs, run under its own job
-    * group (`runId`), are counted under the caller's job group. */
+    * stream does. (The stream's micro-batch jobs need no call: they
+    * inherit the starting thread's job tags, so a `Metrics.measured`
+    * window around the start counts them.) */
   private[streaming] def record(q: StreamingQuery): Unit = {
-    graft.Metrics.countUnderCaller(q.sparkSession.sparkContext, q.runId.toString)
     val batches = q.recentProgress.iterator.map { p =>
       Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L)
     }.toSeq.sorted

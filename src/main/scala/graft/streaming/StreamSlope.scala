@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, Tables}
+import graft.Canon.exactSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,16 +34,13 @@ import org.apache.spark.sql.functions._
   */
 object StreamSlope {
 
-  private def dsum(c: Column): Column =
-    sum(c.cast("decimal(38,12)")).cast("double")
-
   /** The five scalar moment aggregates shared by both legs; `t` is
     * seconds within the (UTC-day) bucket. */
   private def momentAggs: Seq[Column] = Seq(
     count(lit(1)).as("n"),
-    dsum(col("t")).as("st"), dsum(col("v")).as("sv"),
-    dsum(col("t") * col("t")).as("stt"),
-    dsum(col("t") * col("v")).as("stv"))
+    exactSum(col("t")).as("st"), exactSum(col("v")).as("sv"),
+    exactSum(col("t") * col("t")).as("stt"),
+    exactSum(col("t") * col("v")).as("stv"))
 
   /** The shared closed form: slope (metric units per second) from the
     * five moments, 12-dp rounded, NULL on a degenerate time axis. */

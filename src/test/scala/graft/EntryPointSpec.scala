@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * SessionDefaults builds a SparkSession, operator and streaming paths
   * read no environment, fixture tables open through Tables without an inference
   * job, only the canonical board may overwrite the tracked
-  * BENCH_BOARD.json, and no code reads the BASELINE.md prose ledger. */
+  * BENCH_BOARD.json or meet the baselines, only Metrics listens to the
+  * scheduler, and no code reads the BASELINE.md prose ledger. */
 class EntryPointSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -79,11 +80,28 @@ class EntryPointSpec extends AnyFunSuite {
     assert(lastBoard(fullRegistry = false, sf01, 32, 32) == own, "dev subset")
     assert(lastBoard(fullRegistry = true, "/root/testdata/sf0.01", 32, 32) == own)
     assert(lastBoard(fullRegistry = true, "target/sf100", 32, 32) == own)
+    // the same protocol gates the baseline comparisons: a run on other
+    // cores or partitions is neither adjudicated nor window-stamped
+    assert(Bench.baselinesFor(sf01, 4, 4).isEmpty, "4-core run")
+    assert(Bench.baselinesFor(sf01, 32, 320).isEmpty, "partitions != cores")
+    assert(Bench.baselinesFor(sf01, 32, 32).nonEmpty, "canonical run")
     val dir = Files.createTempDirectory("graft_boards")
     val (a, b) = (dir.resolve("a.json").toString, dir.resolve("b/board.json").toString)
     assert(Bench.writeBoard("{}", Seq(a, b)) == Some(b))
     // a path under a regular file cannot be written: the pointer stays on a
     assert(Bench.writeBoard("{}", Seq(a, s"$a/board.json")) == Some(a))
+  }
+
+  test("only Metrics registers a listener, and no code sets a job group") {
+    // one listener attributes work to queries by job tag windows; a
+    // second listener or a job group is a second attribution path
+    val files = scalaFiles(Paths.get("src/main"))
+    assert(files.size > 50, "source tree not found")
+    val listeners = offenders(files.filterNot(_.getFileName.toString == "Metrics.scala"),
+      """addSparkListener|listenerManager\s*\.\s*register|QueryExecutionListener""")
+    assert(listeners.isEmpty, listeners.mkString("\n"))
+    val groups = offenders(files, """setJobGroup""")
+    assert(groups.isEmpty, groups.mkString("\n"))
   }
 
   test("no code in src/main reads the BASELINE.md ledger") {

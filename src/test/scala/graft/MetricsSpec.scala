@@ -1,106 +1,101 @@
 package graft
 
+import java.util.concurrent.{CyclicBarrier, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.graftsync.ListenerSync
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftsync.ListenerSync
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Per-query metrics export (VERDICT r4 missing #3): the listener must
-  * surface (a) the operators' own `.observe()` points and (b) the
+/** Per-query metrics (VERDICT r4 missing #3): a measurement window must
+  * surface (a) the operators' own `.observe()` points, (b) the
   * plan-level shuffle bill — the numbers a 100 TB capacity plan starts
-  * from, mirroring the per-shuffle metering the reference's workers do. */
+  * from, mirroring the per-shuffle metering the reference's workers do —
+  * and (c) the scheduler work of everything it started, and nothing
+  * else. */
 class MetricsSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  private def unique(name: String): String = s"$name-${System.nanoTime()}"
+
+  /** Run `body` in a fresh window and return its record. */
+  private def record(name: String)(body: => Any): Metrics.QueryRecord = {
+    val w = unique(name)
+    Metrics.measured(spark, w)(body)
+    Metrics.take(spark, Seq(w))(w)
+  }
+
   test("observed metric points and shuffle bytes surface per query") {
-    Metrics.install(spark)
-    Metrics.drain() // discard anything from earlier suites
-
-    Metrics.tagQuery("metrics_spec_probe")
-    val df = Tables.t(spark, sf, "orders")
-      .observe("probe_point", count(lit(1)).as("n_input"))
-      .groupBy("o_orderstatus").count()
-    val rows = df.collect()
-    assert(rows.nonEmpty)
-
-    Metrics.awaitQuiesce(spark)
-    val ms = Metrics.drain().filter(_.query == "metrics_spec_probe")
-    assert(ms.nonEmpty, "listener recorded no metric for the tagged query")
-    val m = ms.last
+    val m = record("metrics_spec_probe") {
+      val df = Tables.t(spark, sf, "orders")
+        .observe("probe_point", count(lit(1)).as("n_input"))
+        .groupBy("o_orderstatus").count()
+      assert(df.collect().nonEmpty)
+    }
     // the observe() point came through with its value
-    assert(m.observed.contains("probe_point"))
+    assert(m.observed.contains("probe_point"), m)
     assert(m.observed("probe_point")("n_input").toString.toLong === 1500L)
     // the groupBy shuffled: a nonzero shuffle bill must be metered
     assert(m.shuffleRecordsWritten > 0, s"no shuffle records metered: $m")
     assert(m.shuffleBytesWritten > 0, s"no shuffle bytes metered: $m")
-    assert(m.durationMs >= 0)
+    assert(m.durationMs >= 0 && m.jobs > 0)
     // JSON line renders without throwing and carries the query id
-    assert(m.toJson.contains("\"query\":\"metrics_spec_probe\""))
+    assert(m.toJson.contains("\"query\":\"metrics_spec_probe-"))
   }
 
   test("fuzzy join candidate guard is visible through the export") {
     // q62's .observe("fuzzy_candidates") is the scale guard the verdict
     // asked to watch — prove the export makes it externally observable
-    Metrics.install(spark)
-    Metrics.drain()
-    Metrics.tagQuery("q62_probe")
-    SparkEntry.queries("q62_fuzzy_join")(spark, sf).collect()
-    Metrics.awaitQuiesce(spark)
-    val ms = Metrics.drain().filter(_.query == "q62_probe")
-    assert(ms.exists(_.observed.contains("fuzzy_candidates")),
-      s"fuzzy_candidates observation missing: ${ms.map(_.observed.keys)}")
+    val m = record("q62_probe")(SparkEntry.queries("q62_fuzzy_join")(spark, sf).collect())
+    assert(m.observed.contains("fuzzy_candidates"),
+      s"fuzzy_candidates observation missing: ${m.observed.keys}")
   }
 
-  test("attribution is by query start time: rapid tag switches cannot misattribute") {
-    // The r5 design read a single volatile tag at DELIVERY time and
-    // therefore had to drain the bus on every switch (with a documented
-    // residual race past the timeout). Attribution now keys on the
-    // execution's planning start against the tag timeline — so tagging
-    // the next query immediately, with the previous one's events still
-    // in flight, must still attribute each execution correctly.
-    Metrics.install(spark)
-    Metrics.drain()
+  test("back-to-back windows cannot misattribute") {
+    // each window is closed and the next opened with the previous one's
+    // events still in flight on the listener bus (no take in between):
+    // every execution must still land in the window that ran it
     val t = Tables.t(spark, sf, "orders")
-    Metrics.tagQuery("rapid_a")
-    val a = t.groupBy("o_orderstatus").count()
-    a.collect()
-    Metrics.tagQuery("rapid_b") // no awaitQuiesce between switches
-    val b = t.groupBy("o_orderpriority").count()
-    b.collect()
-    Metrics.tagQuery("rapid_c")
-    val c = t.select(count(lit(1))).collect()
-    assert(c.nonEmpty)
-    Metrics.awaitQuiesce(spark)
-    val ms = Metrics.drain().filter(_.query.startsWith("rapid_"))
-    assert(ms.map(_.query).toSet == Set("rapid_a", "rapid_b", "rapid_c"),
-      s"tags recorded: ${ms.map(_.query)}")
-    // the three executions landed under three DIFFERENT tags — a stale
-    // volatile tag would have collapsed at least two into one name
-    assert(ms.groupBy(_.query).forall(_._2.size == 1),
-      s"duplicate attributions: ${ms.map(_.query)}")
+    val names @ Seq(na, nb, nc) = Seq("rapid_a", "rapid_b", "rapid_c").map(unique)
+    val a = Metrics.measured(spark, na)(t.groupBy("o_orderstatus").count().collect())
+    val b = Metrics.measured(spark, nb)(t.groupBy("o_orderpriority").count().collect())
+    val c = Metrics.measured(spark, nc)(t.select(count(lit(1))).collect())
+    val ms = Metrics.take(spark, names)
+    assert(names.filter(n => ms(n).jobs > 0 && ms(n).outputRows >= 0).toSet == names.toSet,
+      s"windows recorded: $ms")
+    // the three executions landed in three DIFFERENT windows — each
+    // record's last output row count is its own collect's
+    assert(Seq(a, b, c).map(_.length.toLong) == names.map(ms(_).outputRows),
+      s"misattributed executions: $ms")
+    assert(a.length != b.length && b.length != c.length)
   }
 
   test("executed-plan artifacts are dumped per query tag") {
     val plansDir = java.nio.file.Files.createTempDirectory("graft_plans").toString
     Metrics.install(spark, plansDir = Some(plansDir))
-    Metrics.drain()
-    Metrics.tagQuery("plan_probe")
-    Tables.t(spark, sf, "orders").groupBy("o_orderstatus").count().collect()
-    Metrics.awaitQuiesce(spark)
-    val f = java.nio.file.Paths.get(plansDir, "plan_probe.plan.txt")
+    val w = unique("plan_probe")
+    try {
+      Metrics.measured(spark, w)(
+        Tables.t(spark, sf, "orders").groupBy("o_orderstatus").count().collect())
+      Metrics.take(spark, Seq(w))
+    } finally Metrics.install(spark) // detach the plans sink for later suites
+    val f = java.nio.file.Paths.get(plansDir, s"$w.plan.txt")
     assert(java.nio.file.Files.exists(f), s"no plan artifact at $f")
     val txt = java.nio.file.Files.readString(f)
     assert(txt.contains("== Physical Plan ==") && txt.contains("Final Plan"),
       s"artifact is not an executed adaptive plan:\n${txt.take(300)}")
-    Metrics.install(spark) // detach the plans sink for later suites
   }
 
-  test("job-group counts equal a global listener's over the same window") {
-    // the per-group counter must count what a plain global listener
-    // counts, including the jobs AQE and broadcast threads submit
-    Metrics.installJobCounter(spark)
+  test("window counts equal a global listener's over the same window") {
+    // the window must count what a plain global listener counts,
+    // including the jobs AQE and broadcast threads submit
     val (jobs, stages, tasks) = (new AtomicLong, new AtomicLong, new AtomicLong)
     val global = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -114,9 +109,7 @@ class MetricsSpec extends AnyFunSuite {
     try {
       ListenerSync.waitUntilEmpty(sc, 30000)
       Seq(jobs, stages, tasks).foreach(_.set(0))
-      val group = s"metrics-spec-counts-${System.nanoTime()}"
-      sc.setJobGroup(group, "counter equivalence", interruptOnCancel = false)
-      try {
+      val c = record("counter equivalence") {
         val orders = Tables.t(spark, sf, "orders")
         assert(orders.groupBy("o_orderstatus").count().collect().nonEmpty)
         val joined = orders
@@ -124,30 +117,77 @@ class MetricsSpec extends AnyFunSuite {
           .groupBy("c_mktsegment").agg(sum("o_totalprice"))
         assert(joined.collect().nonEmpty)
         assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
-      } finally sc.clearJobGroup()
-      val c = Metrics.takeGroupCounts(spark, Seq(group))(group)
+      }
       assert(c.jobs > 2 && c.stages > 2 && c.taskMs >= 0, c)
       assert((c.jobs, c.stages, c.tasks) == ((jobs.get, stages.get, tasks.get)), c)
     } finally sc.removeSparkListener(global)
+  }
+
+  test("two windows run at once on two threads each hold only their own work") {
+    val orders = Tables.t(spark, sf, "orders")
+    def byStatus: DataFrame = orders.observe("status_point", count(lit(1)).as("n"))
+      .groupBy("o_orderstatus").count()
+    def byCustomer: DataFrame = orders.observe("customer_point", count(lit(1)).as("n"))
+      .groupBy("o_custkey").agg(sum("o_totalprice")).select(count(lit(1)))
+    // each query alone first: the counts a concurrent run must reproduce
+    val solo = Seq(record("solo_status")(byStatus.collect()),
+      record("solo_customer")(byCustomer.collect()))
+    val barrier = new CyclicBarrier(2)
+    val names = Seq(unique("status"), unique("customer"))
+    val runs = names.zip(Seq(() => byStatus, () => byCustomer)).map { case (n, q) =>
+      Future(Metrics.measured(spark, n) {
+        barrier.await(60, TimeUnit.SECONDS)
+        q().collect()
+      })
+    }
+    runs.foreach(Await.result(_, Duration(120, TimeUnit.SECONDS)))
+    val both = Metrics.take(spark, names)
+    val Seq(status, customer) = names.map(both)
+    assert(status.observed.keySet == Set("status_point"), status)
+    assert(customer.observed.keySet == Set("customer_point"), customer)
+    names.map(both).zip(solo).foreach { case (c, s) =>
+      assert((c.jobs, c.stages, c.tasks, c.outputRows) == ((s.jobs, s.stages, s.tasks, s.outputRows)),
+        s"concurrent $c vs solo $s")
+    }
+  }
+
+  test("a stream started inside a window counts its micro-batch jobs there") {
+    // no StreamMetrics.record call: the stream's thread inherits the
+    // window's job tag, so its micro-batches land in the window
+    val ev = Tables.t(spark, sf, "events")
+    val src = java.nio.file.Files.createTempDirectory("graft_metrics_stream").toString
+    ev.repartition(3).write.mode("overwrite").parquet(src)
+    val table = s"metrics_stream_${System.nanoTime()}"
+    var batches = 0
+    val m = record("stream") {
+      val q = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
+        .groupBy("event_type").count()
+        .writeStream.format("memory").queryName(table)
+        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      batches = q.recentProgress.length
+    }
+    assert(batches >= 3, s"expected >=3 micro-batches, got $batches")
+    assert(m.jobs >= batches && m.stages >= batches && m.tasks >= batches, m)
   }
 
   test("a metrics line parses back with a quoted, backslashed tag and typed observations") {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.parse
     val name = """tag "quoted" C:\dir\q"""
-    val m = Metrics.QueryMetric(name, 5, 1, 0, 0, 0, Map("p" -> Map(
+    val m = Metrics.QueryRecord(name, 5, 1, 2, 3, 4, 6, 0, 0, 0, Map("p" -> Map(
       "n" -> java.lang.Long.valueOf(3), "avg" -> java.lang.Double.valueOf(1.5),
       "label" -> org.apache.spark.unsafe.types.UTF8String.fromString("a\"b"),
       "dec" -> new java.math.BigDecimal("2.50"))))
     val j = parse(m.toJson)
     assert(j \ "query" == JString(name), m.toJson)
-    assert(j \ "durationMs" == JInt(5), m.toJson)
+    assert(j \ "durationMs" == JInt(5) && j \ "taskMs" == JInt(6), m.toJson)
     val obs = j \ "observed" \ "p"
     assert(obs \ "n" == JInt(3) && obs \ "avg" == JDouble(1.5) &&
       obs \ "dec" == JDouble(2.5), m.toJson)
     assert(obs \ "label" == JString("a\"b"), m.toJson)
     val keys = j match { case JObject(fs) => fs.map(_._1); case _ => Nil }
-    assert(keys == List("query", "durationMs", "outputRows", "shuffleBytesWritten",
-      "shuffleRecordsWritten", "spillBytes", "observed"), keys)
+    assert(keys == List("query", "durationMs", "outputRows", "jobs", "stages", "tasks",
+      "taskMs", "shuffleBytesWritten", "shuffleRecordsWritten", "spillBytes", "observed"), keys)
   }
 }

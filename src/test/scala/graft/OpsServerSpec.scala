@@ -131,7 +131,7 @@ class OpsServerSpec extends AnyFunSuite {
     Files.writeString(board,
       """{"metric":"total","value":0.204,"queries":{"q104_tpch_q6":0.204},""" +
         """"anchors":{"q104_tpch_q6":1.215},"window":"noisy",""" +
-        """"counts":{"q104_tpch_q6":{"jobs":4,"stages":4,"tasks":4,"task_ms":90}}}""")
+        """"counts":{"q104_tpch_q6":{"query":"q104_tpch_q6","jobs":4,"stages":4,"tasks":4,"taskMs":90}}}""")
     val running = ops.OpsServer.start(0,
       benchPaths = Seq(board.toString), baselinePath = ledger.toString)
     try {

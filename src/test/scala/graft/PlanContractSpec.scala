@@ -156,22 +156,17 @@ class PlanContractSpec extends AnyFunSuite {
       s"scans=$scans dpp=$dpp bloom=$bloom gwin=$gwin prejobs=$prejobs"
   }
 
-  /** Construct the query under a unique job group and count the EAGER
+  /** Construct the query in a unique metrics window and count the EAGER
     * Spark jobs its constructor runs (election head()s, refined-
     * quantile bracket passes, localCheckpoints, fits) — the r13
     * blind spot, now a contracted number: a fact-sized pre-pass
     * slipping into a constructor shows up as a prejobs bump even
-    * though the returned plan reads clean. The group isolates the
-    * window from concurrently running suites. */
+    * though the returned plan reads clean. The window isolates the
+    * constructor from concurrently running suites. */
   private def measure(name: String): Shape = {
-    Metrics.installJobCounter(spark)
-    val group = s"prejobs-$name-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, s"prejobs window $name",
-      interruptOnCancel = false)
-    val df =
-      try SparkEntry.queries(name)(spark, sf)
-      finally spark.sparkContext.clearJobGroup()
-    val pre = Metrics.takeGroupCounts(spark, Seq(group))(group).jobs.toInt
+    val window = s"prejobs-$name-${System.nanoTime()}"
+    val df = Metrics.measured(spark, window)(SparkEntry.queries(name)(spark, sf))
+    val pre = Metrics.take(spark, Seq(window))(window).jobs.toInt
     shapeOf(df).copy(prejobs = pre)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.graftsync.ListenerSync
+import org.apache.spark.sql.graftsync.ListenerSync
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._

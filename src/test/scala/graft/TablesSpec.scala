@@ -10,14 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class TablesSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** Jobs started while `open` runs, counted under a unique job group. */
+  /** Jobs started while `open` runs, counted in a unique metrics window. */
   private def jobsStartedBy(open: => Any): Long = {
-    Metrics.installJobCounter(spark)
-    val group = s"tables-open-${System.nanoTime()}"
-    spark.sparkContext.setJobGroup(group, "tables open", interruptOnCancel = false)
-    try open
-    finally spark.sparkContext.clearJobGroup()
-    Metrics.takeGroupCounts(spark, Seq(group))(group).jobs
+    val window = s"tables-open-${System.nanoTime()}"
+    Metrics.measured(spark, window)(open)
+    Metrics.take(spark, Seq(window))(window).jobs
   }
 
   test("footer schema equals Spark's inferred schema for every fixture table") {

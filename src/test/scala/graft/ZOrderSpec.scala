@@ -38,7 +38,7 @@ class ZOrderSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     try {
       action
-      org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(spark.sparkContext, 30000)
+      org.apache.spark.sql.graftsync.ListenerSync.waitUntilEmpty(spark.sparkContext, 30000)
     } finally spark.sparkContext.removeSparkListener(l)
     n.get()
   }
