@@ -14,11 +14,13 @@ import org.json4s.jackson.Serialization
   * Methodology (BASELINE.md): one warm-up execution per query, then
   * median of 3 timed runs. Queries are materialized through the noop
   * sink so the whole plan executes (a bare count() would let Catalyst
-  * prune the work). Each query's last timed run is also a
-  * [[Metrics.measured]] window: the board's `counts` map carries its
+  * prune the work). Every run (warm-up, timed, adjudication re-run) is
+  * its own [[Metrics.measured]] window, taken as soon as the run ends:
+  * a stream's seconds are the record's steady-state `streamMs`, and the
+  * board's `counts` map carries each query's last timed
   * [[Metrics.QueryRecord]] (jobs, stages, tasks, summed task time,
-  * shuffle and spill), numbers that do not depend on the machine's load
-  * the way wall time does.
+  * shuffle, spill and micro-batches), numbers that do not depend on the
+  * machine's load the way wall time does.
   * `SPARK_GRAFT_BENCH_ONLY=q1,q2` counts just those queries.
   *
   * The recorded sf0.1 baseline is itself a board: [[BaselineFile]]
@@ -46,30 +48,26 @@ object Bench {
     val bcastStatic = SessionDefaults.forDir(sfDir).bcastStatic
     val spark = SessionDefaults.session(sfDir, s"local[$cpus]", partitions)
 
-    // (trigger count, median per-batch sec) of each streaming query's
-    // last timed run: the honesty annotation — a throttled-trigger
-    // headline (triggers × batch) must not be misread as engine cost
-    val streamDetail = scala.collection.mutable.Map[String, (Int, Double)]()
-
-    /** One execution of `name`; with `counted`, in its metrics window. */
-    def once(name: String, counted: Boolean = false): Double = {
-      graft.streaming.StreamMetrics.drain() // clear stale state
-      def run(): Unit = SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+    /** One execution of `name` in its own metrics window: its seconds
+      * (-1 if it failed) and its record. */
+    def once(name: String): (Double, Metrics.QueryRecord) = {
       val t0 = System.nanoTime()
-      try if (counted) Metrics.measured(spark, name)(run()) else run()
-      catch { case e: Throwable =>
+      val ok = try {
+        Metrics.measured(spark, name)(SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save())
+        true
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        return -1.0
+        false
       }
       val wall = (System.nanoTime() - t0) / 1e9
-      graft.streaming.StreamMetrics.peekDetail()
-        .foreach(d => streamDetail(name) = d)
-      // Streaming queries report steady-state processing time (summed
-      // micro-batch triggerExecution) instead of wall clock: trigger
-      // scheduling waits made q51 swing >2x run-to-run with no plan
-      // change. Batch queries have no recorded stream → wall clock.
-      graft.streaming.StreamMetrics.drain().getOrElse(wall)
+      val record = Metrics.take(spark, Seq(name))(name)
+      // Streaming queries report steady-state processing time (median
+      // micro-batch triggerExecution × batches) instead of wall clock:
+      // trigger scheduling waits made q51 swing >2x run-to-run with no
+      // plan change. Batch queries ran no micro-batch → wall clock.
+      val seconds = if (record.triggers > 0) record.streamMs / 1e3 else wall
+      (if (ok) seconds else -1.0, record)
     }
 
     // dev knob: SPARK_GRAFT_BENCH_ONLY=q51_stream_stream_join,... times a
@@ -86,18 +84,21 @@ object Bench {
     // little (JIT is warm from earlier queries; the first-read footer
     // cache matters less than the scan itself at that scale)
     val doWarm = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0"
-    val results = names.map { name =>
-      val warm = if (doWarm) once(name) else 0.0
-      val r = if (warm < 0) name -> -1.0
+    // (name -> median seconds, the last timed run's record)
+    val timed = names.map { name =>
+      val warm = if (doWarm) once(name)._1 else 0.0
+      val r = if (warm < 0) (name -> -1.0, None)
       else {
-        val times = (1 to runs).map(i => once(name, counted = i == runs)).sorted
-        name -> times(times.size / 2)
+        val runsOf = (1 to runs).map(_ => once(name))
+        val times = runsOf.map(_._1).sorted
+        (name -> times(times.size / 2), Some(runsOf.last._2))
       }
       // per-query progress on stderr: a long detached run (the sf10
       // decade board) stays observable and partially recoverable
-      System.err.println(f"[bench] done ${r._1} ${r._2}%.3f")
+      System.err.println(f"[bench] done $name ${r._1._2}%.3f")
       r
     }
+    val results = timed.map(_._1)
 
     // q95's split timing (see IncrementalDedup.baseDeltaSplit): the
     // registry entry re-times build+probe fused; production pays build
@@ -132,8 +133,6 @@ object Bench {
         }
       } else Seq.empty
 
-    // one listener-bus barrier for every counted run at once
-    val records = Metrics.take(spark, names)
     val all = results ++ extraResults
     val (ok, bad) = all.partition(_._2 >= 0)
     val total = ok.map(_._2).sum
@@ -153,7 +152,7 @@ object Bench {
       if (only.nonEmpty) Seq.empty
       else all.collect {
         case (n, v) if v >= 0 && baselines.get(n).exists(b => v > 2 * b) =>
-          val times = (1 to runs).map(_ => once(n)).filter(_ >= 0).sorted
+          val times = (1 to runs).map(_ => once(n)._1).filter(_ >= 0).sorted
           val rerun = if (times.isEmpty) -1.0 else times(times.size / 2)
           (n, v, rerun)
       }
@@ -189,16 +188,13 @@ object Bench {
       "metric" -> "total", "value" -> total, "unit" -> "sec",
       "queries" -> ListMap(all: _*),
       "failed" -> failed,
-      "streaming" -> ListMap(streamDetail.toSeq.sortBy(_._1).map { case (k, (n, m)) =>
-        k -> ListMap("triggers" -> n, "batch_median_sec" -> m)
-      }: _*),
       "adjudicated" -> ListMap(adjudicated.map { case (n, board, rerun) =>
         n -> Seq(board, rerun)
       }: _*),
       "anchors" -> anchors, "window" -> window, "partitions" -> partitions,
       "bcast" -> bcastStatic, "sf" -> sfDir,
-      "counts" -> ListMap(results.collect { case (n, v) if v >= 0 =>
-        n -> records(n).toJValue
+      "counts" -> ListMap(timed.collect { case ((n, v), Some(r)) if v >= 0 =>
+        n -> r.toJValue
       }: _*)))
     // the COMPLETE machine-readable board (belt-and-braces against any
     // stdout truncation)

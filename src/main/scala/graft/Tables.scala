@@ -102,44 +102,42 @@ object Tables {
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
-  /** Post-read fan-out for unsplittable small inputs (optimization
-    * guide §2.5 "one huge unsplittable file … repartition immediately
-    * after the read"): the fixture tables are single-row-group parquet
-    * files, so a scan stage is ONE task regardless of core count, and
-    * everything Spark fuses into it — tokenize/explode/melt plus the
-    * partial aggregation of every text operator — runs serial (r16
-    * job/stage/task counts: q166's timed run was 14 s of task time across 15
-    * single-task stages; q28's 60-sum simhash aggregation 3.7 s in one
-    * task). Repartitioning right after the read unlocks the cores.
+  /** The documents table fanned out by `doc_id` right after the read
+    * (optimization guide §2.5 "one huge unsplittable file … repartition
+    * immediately after the read"): the fixture tables are
+    * single-row-group parquet files, so a scan stage is ONE task
+    * regardless of core count, and everything Spark fuses into it —
+    * tokenize/shingle explode plus the partial aggregation of every text
+    * operator — runs serial (r16 job/stage/task counts: q166's timed run
+    * was 14 s of task time across 15 single-task stages; q28's 60-sum
+    * simhash aggregation 3.7 s in one task). Repartitioning right after
+    * the read unlocks the cores.
     *
     * Scale discipline: only fires while the table's on-disk footprint
     * is at most [[FanOutCapBytes]] (256 MB — an exchange of ≤ 256 MB
     * compressed costs well under a second on every protocol tier) AND
     * the scan would plan fewer splits than the session's parallelism.
-    * At sf10+ the fact tables cross the cap and the plan is untouched
-    * — the sf100 board shapes keep their measured slopes. With `keys`,
-    * partitioning is BY KEY, which downstream per-key aggregations
-    * satisfy as a clustered distribution (subset rule), so the
-    * repartition REPLACES the aggregation's own exchange instead of
-    * adding one — and it moves the compact un-exploded rows where the
-    * replaced exchange moved the exploded ones (§2.3: shuffle the
-    * light form). Keyless fan-out is round-robin for skew-free spread
-    * ahead of melt/explode stages whose aggregation keys don't exist
-    * until after the explode. */
-  def fanOut(spark: SparkSession, dir: String, name: String,
-      keys: org.apache.spark.sql.Column*)(df: DataFrame): DataFrame = {
-    val bytes = bytesOf(spark, dir, name)
+    * At sf10+ the table crosses the cap and the plan is untouched — the
+    * sf100 board shapes keep their measured slopes. The partitioning is
+    * BY `doc_id`, which every downstream per-doc aggregation satisfies as
+    * a clustered distribution (subset rule), so the repartition REPLACES
+    * the aggregation's own exchange instead of adding one — and it moves
+    * the compact un-exploded rows where the replaced exchange moved the
+    * exploded ones (§2.3: shuffle the light form). */
+  def fannedDocuments(spark: SparkSession, dir: String): DataFrame = {
+    val docs = t(spark, dir, "documents")
+    val bytes = bytesOf(spark, dir, "documents")
     val p = spark.sparkContext.defaultParallelism
     // the SESSION's split size, not the 128 MB default, so the guard
     // predicts the scan's planned splits under any session conf
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     val plannedSplits = math.max(1L, (bytes + maxSplit - 1) / maxSplit)
     if (bytes <= FanOutCapBytes && plannedSplits < p)
-      if (keys.isEmpty) df.repartition(p) else df.repartition(p, keys: _*)
-    else df
+      docs.repartition(p, org.apache.spark.sql.functions.col("doc_id"))
+    else docs
   }
 
-  /** See [[fanOut]]. */
+  /** See [[fannedDocuments]]. */
   val FanOutCapBytes: Long = 256L << 20
 
   /** `broadcast(df)` only while the backing table's parquet footprint

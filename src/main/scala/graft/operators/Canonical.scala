@@ -55,9 +55,8 @@ object Canonical {
 
   /** Q122: canonicalize q55's n-gram Jaccard clusters over documents. */
   private def q122(s: SparkSession, dir: String): DataFrame = {
-    // doc_id fan-out: see Tables.fanOut (no-op past the 256 MB cap)
-    val docs = Tables.fanOut(s, dir, "documents", col("doc_id"))(
-      Tables.t(s, dir, "documents"))
+    // doc_id fan-out: see Tables.fannedDocuments (no-op past the 256 MB cap)
+    val docs = Tables.fannedDocuments(s, dir)
     val edges = Dedup.ngramJaccardPairs(docs, 0.5)
       .select(col("d1").as("src"), col("d2").as("dst"))
     val cc = Clusters.connectedComponents(edges)

@@ -108,9 +108,8 @@ object Clusters {
     * {45, 267, 413} that only a transitive clustering collapses. */
   private def q55(s: SparkSession, dir: String): DataFrame = {
     // doc_id fan-out: parallel shingle explode, exchange count unchanged
-    // (Tables.fanOut — no-op past the 256 MB cap)
-    val docs = Tables.fanOut(s, dir, "documents", col("doc_id"))(
-      Tables.t(s, dir, "documents"))
+    // (Tables.fannedDocuments — no-op past the 256 MB cap)
+    val docs = Tables.fannedDocuments(s, dir)
     val edges = Dedup.ngramJaccardPairs(docs, 0.5)
       .select(col("d1").as("src"), col("d2").as("dst"))
     val cc = connectedComponents(edges)
@@ -183,8 +182,7 @@ object Clusters {
   }
 
   private def q163(s: SparkSession, dir: String): DataFrame =
-    containmentKeep(Tables.fanOut(s, dir, "documents", col("doc_id"))(
-      Tables.t(s, dir, "documents")))
+    containmentKeep(Tables.fannedDocuments(s, dir))
 
   /** Independent oracle: exact string-shingle containment edges (with
     * the engine's dfCap mirrored via the shared

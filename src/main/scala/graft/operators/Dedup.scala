@@ -111,17 +111,6 @@ object Dedup {
       .distinct()
 
 
-  /** Fixture-tier fan-out of the documents table keyed by doc_id (see
-    * [[Tables.fanOut]]): parallelizes the tokenize/shingle explode that
-    * Spark otherwise fuses into the single-row-group scan task, and the
-    * doc_id partitioning is REUSED by every per-doc aggregation
-    * downstream (clustered-distribution subset rule), so no exchange is
-    * added — the aggregation's own exchange moves earlier and carries
-    * the compact un-exploded rows. No-op past the 256 MB cap. */
-  private def fannedDocs(s: SparkSession, dir: String): DataFrame =
-    Tables.fanOut(s, dir, "documents", col("doc_id"))(
-      Tables.t(s, dir, "documents"))
-
   /** Exact dedup: per-language doc counts, distinct texts, duplicates. */
   private def q26(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
@@ -192,7 +181,7 @@ object Dedup {
   }
 
   private def q27(s: SparkSession, dir: String): DataFrame =
-    minhashPairs(fannedDocs(s, dir))
+    minhashPairs(Tables.fannedDocuments(s, dir))
 
   /** Exhaustive-exact oracle via an inverted index (any pair with
     * jac > 0 shares a shingle, so no candidate is missed — equivalent to
@@ -328,7 +317,7 @@ object Dedup {
   private val PrefixFilterMinThreshold = 0.7
 
   private def q28ngram(s: SparkSession, dir: String): DataFrame =
-    ngramJaccardPairs(fannedDocs(s, dir))
+    ngramJaccardPairs(Tables.fannedDocuments(s, dir))
 
   private val q28ngramSql = Dedup.jaccardOracleSql(0.5)
 
@@ -596,7 +585,7 @@ object Dedup {
     * worst surviving slope at 15.2x/decade; the forced single-band path
     * stays spec-only via [[simhashPairs]]'s explicit parameters). */
   private def q28simhash(s: SparkSession, dir: String): DataFrame =
-    simhashPairsAuto(fannedDocs(s, dir))
+    simhashPairsAuto(Tables.fannedDocuments(s, dir))
 
   /** Fixed Manku combination-blocking twin (10 bands, q = 2 → 45
     * probes of 4096-key compound keys): SAME 60-bit hash, SAME
@@ -605,7 +594,7 @@ object Dedup {
     * the elected one — the decade studies compare the election's pick
     * against this fixed alternative. */
   private def q28simhashCombo(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(fannedDocs(s, dir), keyBlocks = 2)
+    simhashPairs(Tables.fannedDocuments(s, dir), keyBlocks = 2)
 
   /** The wide-sketch variant on the board: 96-bit simhash, 8×12-bit
     * bands (4096 keys/band — saturation deferred 64x vs the 60-bit
@@ -613,7 +602,7 @@ object Dedup {
     * the 97-column bit-sum aggregate inside whole-stage codegen's
     * 100-field default; past it the aggregate drops out of codegen. */
   private def q28simhashWide(s: SparkSession, dir: String): DataFrame =
-    simhashPairs(fannedDocs(s, dir), maxHamming = 7,
+    simhashPairs(Tables.fannedDocuments(s, dir), maxHamming = 7,
       nBands = 8, bandBits = 12)
 
   /** nBits-bit simhash per doc from token counts, as two 60-bit words
@@ -1132,7 +1121,7 @@ object Dedup {
   }
 
   private def q160(s: SparkSession, dir: String): DataFrame =
-    containmentPairs(fannedDocs(s, dir))
+    containmentPairs(Tables.fannedDocuments(s, dir))
 
   /** Shared oracle CTE chain for the containment family (exact string
     * shingles — the q27 trust argument: xxhash64 preserves set

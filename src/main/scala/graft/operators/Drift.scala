@@ -44,20 +44,23 @@ object Drift {
 
   private val B = RobustStats.B
 
+  /** The shared range pass, as (range, binned rows): the per-group
+    * (g, lo, hi) range over BOTH periods, checkpointed (scan 1), and
+    * `base` with each row's [[RobustStats.binOf]] under it (scan 2). */
+  private def binnedByRange(base: DataFrame): (DataFrame, DataFrame) = {
+    val rng = base.groupBy(col("g")) // ----------------------- scan 1
+      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
+      .localCheckpoint()
+    (rng, base.join(broadcast(rng), Seq("g")) // --------------- scan 2
+      .withColumn("bin", RobustStats.binOf))
+  }
+
   /** PUBLIC API — per-group drift profile of a (g, period, x) frame,
     * period ∈ {0 = baseline snapshot, 1 = new snapshot}:
     * (g, n_a, n_b, tvd, chi2, drift_at). */
   def histDrift(base: DataFrame): DataFrame = {
-    val rng = base.groupBy(col("g")) // ----------------------- scan 1
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      .localCheckpoint()
-    val binOf =
-      when(col("hi") === col("lo"), lit(0))
-        .otherwise(least(floor((col("x") - col("lo")) /
-          ((col("hi") - col("lo")) / lit(B.toDouble))).cast("int"),
-          lit(B - 1)))
-    val binned = base.join(broadcast(rng), Seq("g")) // -------- scan 2
-      .withColumn("bin", binOf)
+    val (rng, withBin) = binnedByRange(base)
+    val binned = withBin
       .groupBy(col("g"), col("bin"))
       .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("ca"),
         sum(when(col("period") === 1, 1L).otherwise(0L)).as("cb"))
@@ -247,16 +250,7 @@ object Drift {
     * rows, never corpus rows. All arithmetic +−×÷/abs on exact counts
     * → DuckDB replays the full series bit-for-bit. */
   def driftSeries(base: DataFrame): DataFrame = {
-    val rng = base.groupBy(col("g")) // ----------------------- scan 1
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      .localCheckpoint()
-    val binOf =
-      when(col("hi") === col("lo"), lit(0))
-        .otherwise(least(floor((col("x") - col("lo")) /
-          ((col("hi") - col("lo")) / lit(B.toDouble))).cast("int"),
-          lit(B - 1)))
-    val hist = base.join(broadcast(rng), Seq("g")) // ---------- scan 2
-      .withColumn("bin", binOf)
+    val hist = binnedByRange(base)._2
       .groupBy(col("g"), col("bucket"), col("bin"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
@@ -350,16 +344,8 @@ object Drift {
     * cumulative counts divided once at the end — DuckDB replays D and
     * the peak edge bit-for-bit. */
   def ksTest(base: DataFrame): DataFrame = {
-    val rng = base.groupBy(col("g")) // ----------------------- scan 1
-      .agg(min(col("x")).as("lo"), max(col("x")).as("hi"))
-      .localCheckpoint()
-    val binOf =
-      when(col("hi") === col("lo"), lit(0))
-        .otherwise(least(floor((col("x") - col("lo")) /
-          ((col("hi") - col("lo")) / lit(B.toDouble))).cast("int"),
-          lit(B - 1)))
-    val binned = base.join(broadcast(rng), Seq("g")) // -------- scan 2
-      .withColumn("bin", binOf)
+    val (rng, withBin) = binnedByRange(base)
+    val binned = withBin
       .groupBy(col("g"), col("bin"))
       .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("ca"),
         sum(when(col("period") === 1, 1L).otherwise(0L)).as("cb"))

@@ -47,7 +47,7 @@ object RobustStats {
     * a degenerate group (hi == lo, w = 0) puts all mass in bin 0 —
     * without the guard (x-lo)/w is 0/0 = NaN and floor(NaN) faults
     * under ANSI (both engines). */
-  private def binOf: Column =
+  private[operators] def binOf: Column =
     when(col("hi") === col("lo"), lit(0))
       .otherwise(least(floor((col("x") - col("lo")) / widthCol).cast("int"),
         lit(B - 1)))

@@ -19,6 +19,11 @@ import org.apache.spark.sql.types.StructType
   * At 100 TB the throttle is what keeps a backfill from admitting the
   * whole corpus into one micro-batch: state stores and shuffles stay
   * sized to `maxFilesPerTrigger × maxPartitionBytes`, not to the corpus.
+  *
+  * Streams here and in [[StreamJoin]] run to completion through one
+  * memory-sink runner, [[toMemory]]. They report nothing themselves: a
+  * stream started inside a [[graft.Metrics.measured]] window counts its
+  * micro-batch jobs and batch times there.
   */
 object RateLimited {
 
@@ -31,27 +36,37 @@ object RateLimited {
       .parquet(srcDir)
 
   /** Run `agg` over a throttled stream of `srcDir` to completion
-    * (AvailableNow: drain everything pending, honoring the throttle,
-    * then stop) and return (result table, number of non-empty batches). */
+    * (complete mode, see [[toMemory]]) and return (result table, number
+    * of non-empty batches). */
   def runThrottled(s: SparkSession, srcDir: String, schema: StructType,
-      maxFilesPerTrigger: Int, statePartitions: Int = 8)
-      (agg: DataFrame => DataFrame): (DataFrame, Int) = {
-    // state partitioning is captured from spark.sql.shuffle.partitions at
-    // query start; every micro-batch commits one agg state store per
-    // partition, so scope it to the streaming state size (tiny here) and
-    // restore after — see StreamJoin.clickPurchasePairs for the same knob
+      maxFilesPerTrigger: Int)(agg: DataFrame => DataFrame): (DataFrame, Int) =
+    toMemory(s, "complete")(agg(throttledStream(s, srcDir, schema, maxFilesPerTrigger)))
+
+  /** Shuffle partitions of the streams [[toMemory]] runs. State
+    * partitioning is captured from spark.sql.shuffle.partitions at query
+    * START and every micro-batch commits one state store per partition
+    * (4 for a stream-stream join): at local test scale 32 partitions ×
+    * 3 batches is pure commit overhead, so the conf is scoped down for
+    * the stream's lifetime and restored after. On a real cluster this is
+    * the knob sized to executor count (state stores spread across
+    * workers). */
+  private val StatePartitions = 8
+
+  /** Run `stream` to completion into a fresh memory table (AvailableNow:
+    * drain everything pending, honoring the source's throttle, then
+    * stop) under [[StatePartitions]] shuffle partitions, and return
+    * (the table, number of non-empty batches). */
+  private[streaming] def toMemory(s: SparkSession, outputMode: String)
+      (stream: => DataFrame): (DataFrame, Int) = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    s.conf.set(key, statePartitions.toString)
+    s.conf.set(key, StatePartitions.toString)
     try {
-      val tbl = "graft_rate_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg(throttledStream(s, srcDir, schema, maxFilesPerTrigger))
-        .writeStream.format("memory").queryName(tbl)
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
+      val tbl = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = stream.writeStream.format("memory").queryName(tbl)
+        .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      StreamMetrics.record(q)
-      val batches = q.recentProgress.count(_.numInputRows > 0)
-      (s.table(tbl), batches)
+      (s.table(tbl), q.recentProgress.count(_.numInputRows > 0))
     } finally s.conf.set(key, prev)
   }
 

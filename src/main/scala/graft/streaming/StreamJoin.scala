@@ -3,7 +3,6 @@ package graft.streaming
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream event-time join: click→purchase attribution where the
   * purchase follows the click by the same user within 5 minutes, both
@@ -24,54 +23,36 @@ import org.apache.spark.sql.streaming.Trigger
   * everything and stay bit-equal to the batch oracle; a production
   * deployment sets the delay to its lateness SLA (minutes), shrinking
   * state by the same factor.
+  *
+  * The join runs through [[RateLimited.toMemory]] (state partitions
+  * scoped down for the stream's lifetime); its micro-batch times reach
+  * the caller's metrics window with no call from here.
   */
 object StreamJoin {
 
   /** Clicks ⋈ purchases as two independent watermarked throttled file
     * streams (a "topic" per side — each scans only its own events);
     * returns the joined pairs via a memory sink (append mode — the only
-    * mode stream-stream inner joins support). */
+    * mode stream-stream inner joins support; see
+    * [[RateLimited.toMemory]]). */
   def clickPurchasePairs(s: SparkSession, clickSrc: String, purchaseSrc: String,
-      schema: org.apache.spark.sql.types.StructType,
-      watermarkDelay: String, maxFilesPerTrigger: Int,
-      statePartitions: Int = 8): DataFrame = {
-    // State partitioning is captured from spark.sql.shuffle.partitions at
-    // query START and each micro-batch commits 4 join state stores per
-    // partition — at local test scale 32 partitions × 3 batches × 4
-    // stores is pure commit overhead, so scope the conf down for the
-    // stream's lifetime and restore after. On a real cluster this is the
-    // knob sized to executor count (state stores spread across workers).
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, statePartitions.toString)
-    try clickPurchasePairsInner(s, clickSrc, purchaseSrc, schema,
-      watermarkDelay, maxFilesPerTrigger)
-    finally s.conf.set(key, prev)
-  }
-
-  private def clickPurchasePairsInner(s: SparkSession,
-      clickSrc: String, purchaseSrc: String,
       schema: org.apache.spark.sql.types.StructType,
       watermarkDelay: String, maxFilesPerTrigger: Int): DataFrame = {
     def side(src: String, tsAlias: String) =
       RateLimited.throttledStream(s, src, schema, maxFilesPerTrigger)
         .select(col("user_id"), col("ts").as(tsAlias), col("event_id"))
         .withWatermark(tsAlias, watermarkDelay)
-    val clicks = side(clickSrc, "click_ts")
-      .withColumnRenamed("event_id", "click_id")
-    val purchases = side(purchaseSrc, "p_ts")
-      .withColumnRenamed("user_id", "p_user")
-      .withColumnRenamed("event_id", "purchase_id")
-    val joined = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("p_ts") > col("click_ts") &&
-        col("p_ts") <= col("click_ts") + expr("INTERVAL 5 MINUTES"))
-    val tbl = "graft_ssj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = joined.writeStream.format("memory").queryName(tbl)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    StreamMetrics.record(q)
-    s.table(tbl)
+    RateLimited.toMemory(s, "append") {
+      val clicks = side(clickSrc, "click_ts")
+        .withColumnRenamed("event_id", "click_id")
+      val purchases = side(purchaseSrc, "p_ts")
+        .withColumnRenamed("user_id", "p_user")
+        .withColumnRenamed("event_id", "purchase_id")
+      clicks.join(purchases,
+        col("user_id") === col("p_user") &&
+          col("p_ts") > col("click_ts") &&
+          col("p_ts") <= col("click_ts") + expr("INTERVAL 5 MINUTES"))
+    }._1
   }
 
   /** q51: per-user-bucket attribution counts over the streamed pairs,

@@ -93,12 +93,14 @@ class EntryPointSpec extends AnyFunSuite {
   }
 
   test("only Metrics registers a listener, and no code sets a job group") {
-    // one listener attributes work to queries by job tag windows; a
-    // second listener or a job group is a second attribution path
+    // one listener attributes work to queries by job tag windows,
+    // streams' micro-batch progress included; a second listener (a
+    // streaming one too) or a job group is a second attribution path
     val files = scalaFiles(Paths.get("src/main"))
     assert(files.size > 50, "source tree not found")
     val listeners = offenders(files.filterNot(_.getFileName.toString == "Metrics.scala"),
-      """addSparkListener|listenerManager\s*\.\s*register|QueryExecutionListener""")
+      """addSparkListener|listenerManager\s*\.\s*register|QueryExecutionListener|""" +
+        """streams\s*\.\s*addListener|StreamingQueryListener""")
     assert(listeners.isEmpty, listeners.mkString("\n"))
     val groups = offenders(files, """setJobGroup""")
     assert(groups.isEmpty, groups.mkString("\n"))

@@ -152,30 +152,41 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("a stream started inside a window counts its micro-batch jobs there") {
-    // no StreamMetrics.record call: the stream's thread inherits the
-    // window's job tag, so its micro-batches land in the window
+    // no call from the stream's code: its thread inherits the window's
+    // job tag, so its micro-batch jobs and their progress land there
     val ev = Tables.t(spark, sf, "events")
     val src = java.nio.file.Files.createTempDirectory("graft_metrics_stream").toString
     ev.repartition(3).write.mode("overwrite").parquet(src)
     val table = s"metrics_stream_${System.nanoTime()}"
-    var batches = 0
+    var progress = Array.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
     val m = record("stream") {
       val q = spark.readStream.schema(ev.schema).option("maxFilesPerTrigger", 1).parquet(src)
         .groupBy("event_type").count()
         .writeStream.format("memory").queryName(table)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      batches = q.recentProgress.length
+      progress = q.recentProgress
     }
+    val batches = progress.length
     assert(batches >= 3, s"expected >=3 micro-batches, got $batches")
     assert(m.jobs >= batches && m.stages >= batches && m.tasks >= batches, m)
+    // the steady-state rule over the run's own progress: sorted
+    // triggerExecution times, median d(n/2), median × n
+    val durations = progress.map(_.durationMs.get("triggerExecution").longValue).sorted
+    val median = durations(batches / 2)
+    assert((m.triggers, m.batchMedianMs, m.streamMs) == ((batches.toLong, median, median * batches)),
+      s"$m vs ${durations.mkString(",")}")
+    // a batch window runs no micro-batch
+    val batch = record("batch")(ev.groupBy("event_type").count().collect())
+    assert(batch.jobs > 0 && batch.triggers == 0 && batch.batchMedianMs == 0 &&
+      batch.streamMs == 0, batch)
   }
 
   test("a metrics line parses back with a quoted, backslashed tag and typed observations") {
     import org.json4s._
     import org.json4s.jackson.JsonMethods.parse
     val name = """tag "quoted" C:\dir\q"""
-    val m = Metrics.QueryRecord(name, 5, 1, 2, 3, 4, 6, 0, 0, 0, Map("p" -> Map(
+    val m = Metrics.QueryRecord(name, 5, 1, 2, 3, 4, 6, 0, 0, 0, 0, 0, 0, Map("p" -> Map(
       "n" -> java.lang.Long.valueOf(3), "avg" -> java.lang.Double.valueOf(1.5),
       "label" -> org.apache.spark.unsafe.types.UTF8String.fromString("a\"b"),
       "dec" -> new java.math.BigDecimal("2.50"))))
@@ -188,6 +199,7 @@ class MetricsSpec extends AnyFunSuite {
     assert(obs \ "label" == JString("a\"b"), m.toJson)
     val keys = j match { case JObject(fs) => fs.map(_._1); case _ => Nil }
     assert(keys == List("query", "durationMs", "outputRows", "jobs", "stages", "tasks",
-      "taskMs", "shuffleBytesWritten", "shuffleRecordsWritten", "spillBytes", "observed"), keys)
+      "taskMs", "shuffleBytesWritten", "shuffleRecordsWritten", "spillBytes",
+      "triggers", "batchMedianMs", "streamMs", "observed"), keys)
   }
 }
