@@ -116,6 +116,18 @@ object Canon {
       col(s"${name}__lo"))
       .cast(DecimalType(37 - scale, 0)) * tenNeg(scale)
 
+  /** One exact, order-independent per-group sum of `c`, named `name`:
+    * the aggregate columns to pass to `agg`, and the column that turns
+    * them into the DECIMAL sum after it. `pairedScale = Some(s)` takes
+    * the paired-longs path ([[psumAggs]] of [[pterm]]`(c, s)`,
+    * recombined by [[psumDecimal]]; the caller owes its bounds); `None`
+    * a plain `sum(c.cast(decimal))`, which needs no recombining. */
+  def exactDecimalSum(c: Column, name: String, decimal: String,
+      pairedScale: Option[Int]): (Seq[Column], Column) = pairedScale match {
+    case Some(sc) => (psumAggs(pterm(c, sc), name), psumDecimal(name, sc))
+    case None => (Seq(sum(c.cast(decimal)).as(name)), col(name))
+  }
+
   /** Recombined exact sum as DOUBLE — the drop-in replacement for
     * `sum(t.cast(decimal)).cast("double")`. */
   def psumDouble(name: String, scale: Int): Column =

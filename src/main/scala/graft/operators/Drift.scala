@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -55,39 +55,61 @@ object Drift {
       .withColumn("bin", RobustStats.binOf))
   }
 
-  /** PUBLIC API — per-group drift profile of a (g, period, x) frame,
-    * period ∈ {0 = baseline snapshot, 1 = new snapshot}:
-    * (g, n_a, n_b, tvd, chi2, drift_at). */
-  def histDrift(base: DataFrame): DataFrame = {
-    val (rng, withBin) = binnedByRange(base)
-    val binned = withBin
-      .groupBy(col("g"), col("bin"))
+  /** Both periods' row counts per (g, `key`) from ONE scan of a frame
+    * carrying `period` ∈ {0, 1} (conditional sums, not a scan per
+    * period): (g, key, ca, cb). */
+  private def periodCounts(rows: DataFrame, key: String): DataFrame =
+    rows.groupBy(col("g"), col(key))
       .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("ca"),
         sum(when(col("period") === 1, 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint() // ≤B·|groups| rows; reused by agg + peak
-    val tot = binned.groupBy(col("g"))
+
+  /** Per-group period totals (g, na, nb) of [[periodCounts]]'s frame; a
+    * group missing either period is dropped (drift against an empty
+    * snapshot is undefined). */
+  private def periodTotals(counts: DataFrame): DataFrame =
+    counts.groupBy(col("g"))
       .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
       .where(col("na") > 0 && col("nb") > 0)
-    val rates = binned.join(broadcast(tot), Seq("g"))
+
+  /** [[periodCounts]]'s frame with its group totals and each key's
+    * period rates pa, pb and their gap d = |pa − pb|. */
+  private def periodRates(counts: DataFrame): DataFrame =
+    counts.join(broadcast(periodTotals(counts)), Seq("g"))
       .withColumn("pa", col("ca").cast("double") / col("na").cast("double"))
       .withColumn("pb", col("cb").cast("double") / col("nb").cast("double"))
       .withColumn("d", abs(col("pa") - col("pb")))
-    val agg = rates.groupBy(col("g"))
-      .agg(min(col("na")).as("n_a"), min(col("nb")).as("n_b"),
+
+  /** Per-group (n_a, n_b, `extra`…, tvd, chi2) of [[periodRates]]'s
+    * frame: TVD = ½·Σd and the symmetrized χ² = Σ(pa−pb)²/(pa+pb). */
+  private def divergences(rates: DataFrame, extra: Column*): DataFrame =
+    rates.groupBy(col("g"))
+      .agg(min(col("na")).as("n_a"), (min(col("nb")).as("n_b") +: extra) ++ Seq(
         // decimal-accumulated: the ≤B-row double folds must be
         // order-independent for oracle parity (Canon.dsum discipline)
         round(lit(0.5) * sum(col("d").cast("decimal(38,12)")).cast("double"), 6)
           .as("tvd"),
         round(sum(((col("pa") - col("pb")) * (col("pa") - col("pb")) /
           (col("pa") + col("pb"))).cast("decimal(38,12)")).cast("double"), 6)
-          .as("chi2"))
-    val wpk = Window.partitionBy(col("g"))
-      .orderBy(col("d").desc_nulls_last, col("bin").asc_nulls_last)
-    val peak = rates.join(broadcast(rng), Seq("g"))
-      .withColumn("rk", row_number().over(wpk)).where(col("rk") === 1)
+          .as("chi2")): _*)
+
+  /** Each group's row with the largest gap `d`, ties to the lowest
+    * `key` (deterministic on both engines). */
+  private def peak(rows: DataFrame, key: String): DataFrame =
+    rows.withColumn("rk", row_number().over(Window.partitionBy(col("g"))
+        .orderBy(col("d").desc_nulls_last, col(key).asc_nulls_last)))
+      .where(col("rk") === 1)
+
+  /** PUBLIC API — per-group drift profile of a (g, period, x) frame,
+    * period ∈ {0 = baseline snapshot, 1 = new snapshot}:
+    * (g, n_a, n_b, tvd, chi2, drift_at). */
+  def histDrift(base: DataFrame): DataFrame = {
+    val (rng, withBin) = binnedByRange(base)
+    val rates = periodRates(periodCounts(withBin, "bin")
+      .localCheckpoint()) // ≤B·|groups| rows; reused by agg + peak
+    val driftAt = peak(rates.join(broadcast(rng), Seq("g")), "bin")
       .select(col("g"), round(col("lo") + (col("hi") - col("lo")) /
         lit(B.toDouble) * col("bin").cast("double"), 6).as("drift_at"))
-    agg.join(peak, Seq("g"))
+    divergences(rates).join(driftAt, Seq("g"))
       .select(col("g"), col("n_a"), col("n_b"), col("tvd"), col("chi2"),
         col("drift_at"))
       .orderBy(col("g").asc_nulls_last)
@@ -102,32 +124,11 @@ object Drift {
     * first, deterministic on both engines). The corpus "source-mix
     * moved under the new crawl" monitor. */
   def catDrift(base: DataFrame): DataFrame = {
-    val binned = base.groupBy(col("g"), col("cat")) // -------- one scan
-      .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("period") === 1, 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint() // ≤|categories|·|groups| rows
-    val tot = binned.groupBy(col("g"))
-      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      .where(col("na") > 0 && col("nb") > 0)
-    val rates = binned.join(broadcast(tot), Seq("g"))
-      .withColumn("pa", col("ca").cast("double") / col("na").cast("double"))
-      .withColumn("pb", col("cb").cast("double") / col("nb").cast("double"))
-      .withColumn("d", abs(col("pa") - col("pb")))
-    val agg = rates.groupBy(col("g"))
-      .agg(min(col("na")).as("n_a"), min(col("nb")).as("n_b"),
-        count(lit(1)).as("n_cats"),
-        round(lit(0.5) * sum(col("d").cast("decimal(38,12)")).cast("double"), 6)
-          .as("tvd"),
-        round(sum(((col("pa") - col("pb")) * (col("pa") - col("pb")) /
-          (col("pa") + col("pb"))).cast("decimal(38,12)")).cast("double"), 6)
-          .as("chi2"))
-    val wpk = Window.partitionBy(col("g"))
-      .orderBy(col("d").desc_nulls_last, col("cat").asc_nulls_last)
-    val peak = rates
-      .withColumn("rk", row_number().over(wpk)).where(col("rk") === 1)
-      .select(col("g"), col("cat").as("drift_cat"),
-        round(col("d"), 6).as("drift_d"))
-    agg.join(peak, Seq("g"))
+    val rates = periodRates(periodCounts(base, "cat") // -------- one scan
+      .localCheckpoint()) // ≤|categories|·|groups| rows
+    val driftCat = peak(rates, "cat")
+      .select(col("g"), col("cat").as("drift_cat"), round(col("d"), 6).as("drift_d"))
+    divergences(rates, count(lit(1)).as("n_cats")).join(driftCat, Seq("g"))
       .select(col("g"), col("n_a"), col("n_b"), col("n_cats"),
         col("tvd"), col("chi2"), col("drift_cat"), col("drift_d"))
       .orderBy(col("g").asc_nulls_last)
@@ -345,23 +346,14 @@ object Drift {
     * the peak edge bit-for-bit. */
   def ksTest(base: DataFrame): DataFrame = {
     val (rng, withBin) = binnedByRange(base)
-    val binned = withBin
-      .groupBy(col("g"), col("bin"))
-      .agg(sum(when(col("period") === 0, 1L).otherwise(0L)).as("ca"),
-        sum(when(col("period") === 1, 1L).otherwise(0L)).as("cb"))
-    val tot = binned.groupBy(col("g"))
-      .agg(sum(col("ca")).as("na"), sum(col("cb")).as("nb"))
-      .where(col("na") > 0 && col("nb") > 0)
+    val counts = periodCounts(withBin, "bin")
     val wc = Window.partitionBy(col("g")).orderBy(col("bin").asc_nulls_last)
-    val gaps = binned.join(broadcast(tot), Seq("g"))
+    val gaps = counts.join(broadcast(periodTotals(counts)), Seq("g"))
       .withColumn("cuma", sum(col("ca")).over(wc))
       .withColumn("cumb", sum(col("cb")).over(wc))
       .withColumn("d", abs(col("cuma").cast("double") / col("na").cast("double")
         - col("cumb").cast("double") / col("nb").cast("double")))
-    val wpk = Window.partitionBy(col("g"))
-      .orderBy(col("d").desc_nulls_last, col("bin").asc_nulls_last)
-    gaps.join(broadcast(rng), Seq("g"))
-      .withColumn("rk", row_number().over(wpk)).where(col("rk") === 1)
+    peak(gaps.join(broadcast(rng), Seq("g")), "bin")
       .select(col("g"), col("na").as("n_a"), col("nb").as("n_b"),
         round(col("d"), 6).as("ks"),
         round(col("lo") + (col("hi") - col("lo")) / lit(B.toDouble) *

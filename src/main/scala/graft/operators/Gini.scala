@@ -55,6 +55,8 @@ object Gini {
       .select(col("g"), col("q_est").as("cap"))
     val rng = base.groupBy(col("g"))
       .agg(min(col("x")).as("lo"), count(lit(1)).as("nr"))
+    val (sxAggs, sx) =
+      graft.Canon.exactDecimalSum(col("x"), "sx", "decimal(38,12)", pairedScale)
     val binned = base
       .join(broadcast(rng), Seq("g")).join(broadcast(cap), Seq("g"))
       // B−1 body bins over [lo, cap]; bin B−1 is the open tail [cap, ∞)
@@ -68,20 +70,11 @@ object Gini {
             lit((B - 1).toDouble)), lit(0.0)).cast("int")))
       .groupBy(col("g"), col("bin"))
       .agg(count(lit(1)).as("cnt"),
-        (min(col("nr")).as("n") +:
-          // exact, order-independent bin mass (Canon.dsum discipline);
-          // kept DECIMAL through the cumulative fold so the running
-          // sums are exact in both engines, cast to double only at use
-          (pairedScale match {
-            case Some(sc) =>
-              graft.Canon.psumAggs(graft.Canon.pterm(col("x"), sc), "sx")
-            case None =>
-              Seq(sum(col("x").cast("decimal(38,12)")).as("sx"))
-          })): _*)
-      .withColumn("sx", pairedScale match {
-        case Some(sc) => graft.Canon.psumDecimal("sx", sc)
-        case None => col("sx")
-      })
+        // exact, order-independent bin mass (Canon.dsum discipline);
+        // kept DECIMAL through the cumulative fold so the running
+        // sums are exact in both engines, cast to double only at use
+        (min(col("nr")).as("n") +: sxAggs): _*)
+      .withColumn("sx", sx)
     val wb = Window.partitionBy(col("g")).orderBy(col("bin").asc_nulls_last)
     val cum = binned
       .withColumn("sv", sum(col("sx")).over(wb).cast("double"))

@@ -153,6 +153,15 @@ object RobustStats {
     * sort exists anywhere — the 100 TB shape, at the price of
     * `passes + 1` scans of the base (range init + one per pass).
     *
+    * `base` is (g, x). With `weight = Some(w)` (round-11) each row
+    * carries mass w ≥ 0 — "the median byte price weighted by token
+    * count", the statistic a corpus profiler usually wants: counts
+    * become weight sums, and the integer rank t = ⌈q·n⌉ becomes the
+    * continuous target mass τ = q·W (no ceil: weighted quantiles
+    * interpolate in mass, not rank). Same scans, brackets and error
+    * bound. With weights all 1 and q·n integral the two are the same
+    * estimate, bit for bit (ProfilingOpsSpec).
+    *
     * Lineage discipline (round-11 fix, VERDICT r10 item 1): the
     * ≤|groups|-row bracket frame is `localCheckpoint()`ed after the
     * init and after every pass, and the final estimate frame is
@@ -177,10 +186,18 @@ object RobustStats {
     * (clamping keeps every member counted; only the final within-bin
     * interpolation is approximate). A target rank that falls in a
     * clamped tail bin converges to the bin's nominal edge — the desired
-    * robust (winsorized) behavior for cap estimation. */
-  private[operators] def refinedQuantile(base: DataFrame, q: Double,
-      passes: Int = 3): DataFrame = {
-    require(passes >= 1 && q > 0.0 && q <= 1.0)
+    * robust (winsorized) behavior for cap estimation. The weighted
+    * path keeps this contract for INTEGER-VALUED weights (token counts,
+    * byte counts, quantities — the real uses): every weight sum is an
+    * exact integer in doubles (< 2^53), so sums are order-independent.
+    * Fractional weights stay engine-deterministic per plan but lose the
+    * cross-engine guarantee — keep oracle-checked paths integral. */
+  private[graft] def refinedQuantile(base: DataFrame, q: Double,
+      passes: Int = 3, weight: Option[Column] = None): DataFrame = {
+    require(passes >= 1 && q > 0.0 && q <= 1.0,
+      s"refined quantile needs 0 < q <= 1 and passes >= 1, got q = $q, passes = $passes")
+    // a bin's mass, and the name of its per-group total
+    val (mass, tot) = weight.fold((count(lit(1)), "n"))(w => (sum(w), "wtot"))
     val wc = Window.partitionBy(col("g")).orderBy(col("bin").asc_nulls_last)
     // bin of x at refinement level k, two-sided clamp (clamp before the
     // int cast: a far outlier's floor() must not overflow the cast)
@@ -200,14 +217,25 @@ object RobustStats {
     }.foldLeft(lit(true))(_ && _)
 
     // bracket state: level-k range (lo_k, w_k), parent winning bins,
-    // global target rank t = ⌈q·n⌉, members ranked below bracket c_lo
-    var br: DataFrame = base.groupBy(col("g")).agg(
+    // the group's total mass, the target t, and the mass ranked below
+    // the bracket c_lo
+    val range = base.groupBy(col("g")).agg(
       min(col("x")).as("lo1"),
       ((max(col("x")) - min(col("x"))) / lit(B.toDouble)).as("w1"),
-      count(lit(1)).as("n"))
-      .withColumn("t", ceil(lit(q) * col("n")).cast("long"))
-      .withColumn("c_lo", lit(0L))
-      .localCheckpoint(false)
+      mass.as(tot))
+    var br: DataFrame = (weight match {
+      case None => range
+        .withColumn("t", ceil(lit(q) * col("n")).cast("long"))
+        .withColumn("c_lo", lit(0L))
+      case Some(_) => range
+        // a group whose weights sum to zero has no defined weighted
+        // quantile (t = 0 selects an empty first bin and the final
+        // interpolation divides 0/0) — drop it, matching the
+        // drop-undefined contract of the drift operators
+        .where(col("wtot") > 0.0)
+        .withColumn("t", lit(q) * col("wtot"))
+        .withColumn("c_lo", lit(0.0))
+    }).localCheckpoint(false)
     for (k <- 1 to passes) {
       // r16 job-count pass: the bracket columns are functionally
       // determined by g, so GROUPING by them alongside (g, bin) leaves
@@ -219,7 +247,7 @@ object RobustStats {
         .where(member(k))
         .withColumn("bin", binAt(k))
         .groupBy(Seq(col("g"), col("bin")) ++ brCols: _*)
-        .agg(count(lit(1)).as("cnt"))
+        .agg(mass.as("cnt"))
         .withColumn("cum", sum(col("cnt")).over(wc))
         .withColumn("cum_before", col("cum") - col("cnt"))
         .where(col("c_lo") + col("cum") >= col("t"))
@@ -238,95 +266,27 @@ object RobustStats {
         (col(s"lo$k") + col(s"w$k") * col("bin").cast("double"))
           .as(s"lo${k + 1}"),
         (col(s"w$k") / lit(B.toDouble)).as(s"w${k + 1}"),
-        col("n"), col("t"),
+        col(tot), col("t"),
         (col("c_lo") + col("cum_before")).as("c_lo")): _*)
         .localCheckpoint(false)
     }
     sys.error("unreachable")
   }
 
-  // -------------------------------- weighted refined (robust) quantile
-  /** WEIGHTED outlier-robust quantile by the same bracket refinement as
-    * [[refinedQuantile]] (round-11): the statistic a corpus profiler
-    * actually wants is usually mass-weighted — "the median byte price
-    * weighted by token count" — where each row carries weight w ≥ 0.
-    * Counts become weight sums, and the integer rank t = ⌈q·n⌉ becomes
-    * the continuous target mass τ = q·W (no ceil: weighted quantiles
-    * interpolate in mass, not rank). Same scan/bracket/checkpoint
-    * discipline, same error bound range/B^passes.
-    *
-    * Determinism contract: with INTEGER-VALUED weights (token counts,
-    * byte counts, quantities — the real uses), every weight sum is an
-    * exact integer in doubles (< 2^53), so sums are order-independent
-    * and DuckDB replays the chain bit-for-bit ([[weightedRefinedQuantileSqlFor]]).
-    * Fractional weights stay engine-deterministic per plan but lose the
-    * cross-engine guarantee — keep oracle-checked paths integral. */
+  /** PUBLIC API — weighted outlier-robust quantile of a (g, x, wt)
+    * frame, wt ≥ 0: [[refinedQuantile]] weighted by `wt`, (g, q_est)
+    * per group whose weights sum above zero. */
   def weightedRefinedQuantile(base: DataFrame, q: Double,
-      passes: Int = 3): DataFrame = {
-    require(passes >= 1 && q > 0.0 && q <= 1.0)
-    val wc = Window.partitionBy(col("g")).orderBy(col("bin").asc_nulls_last)
-    def binAt(k: Int): Column =
-      when(col(s"w$k") <= 0.0, lit(0)).otherwise(
-        greatest(least(floor((col("x") - col(s"lo$k")) / col(s"w$k")),
-          lit((B - 1).toDouble)), lit(0.0)).cast("int"))
-    def member(k: Int): Column = (1 until k).map { i =>
-      val f = floor((col("x") - col(s"lo$i")) / col(s"w$i"))
-      when(col(s"w$i") <= 0.0, lit(true))
-        .when(col(s"bin$i") === lit(B - 1), f >= lit((B - 1).toDouble))
-        .when(col(s"bin$i") === lit(0), f <= lit(0.0))
-        .otherwise(f === col(s"bin$i").cast("double"))
-    }.foldLeft(lit(true))(_ && _)
+      passes: Int = 3): DataFrame =
+    refinedQuantile(base, q, passes, Some(col("wt")))
 
-    var br: DataFrame = base.groupBy(col("g")).agg(
-      min(col("x")).as("lo1"),
-      ((max(col("x")) - min(col("x"))) / lit(B.toDouble)).as("w1"),
-      sum(col("wt")).as("wtot"))
-      // a group whose weights sum to zero has no defined weighted
-      // quantile (t = 0 selects an empty first bin and the final
-      // interpolation divides 0/0) — drop it, matching the
-      // drop-undefined contract of the drift operators
-      .where(col("wtot") > 0.0)
-      .withColumn("t", lit(q) * col("wtot"))
-      .withColumn("c_lo", lit(0.0))
-      .localCheckpoint(false)
-    for (k <- 1 to passes) {
-      // bracket columns grouped through the histogram — same rationale
-      // as refinedQuantile's r16 job-count pass above
-      val brCols = br.columns.filterNot(_ == "g").map(col).toSeq
-      val win = base.join(broadcast(br), Seq("g"))
-        .where(member(k))
-        .withColumn("bin", binAt(k))
-        .groupBy(Seq(col("g"), col("bin")) ++ brCols: _*)
-        .agg(sum(col("wt")).as("cnt"))
-        .withColumn("cum", sum(col("cnt")).over(wc))
-        .withColumn("cum_before", col("cum") - col("cnt"))
-        .where(col("c_lo") + col("cum") >= col("t"))
-        .withColumn("rk", row_number().over(wc))
-        .where(col("rk") === 1)
-      if (k == passes)
-        return win.select(col("g"),
-          (col(s"lo$k") + col(s"w$k") * (col("bin").cast("double") +
-            (col("t") - col("c_lo") - col("cum_before")) / col("cnt")))
-            .as("q_est"))
-          .localCheckpoint(false)
-      val carried = (1 until k).flatMap(i =>
-        Seq(col(s"lo$i"), col(s"w$i"), col(s"bin$i")))
-      br = win.select(Seq(col("g")) ++ carried ++ Seq(
-        col(s"lo$k"), col(s"w$k"), col("bin").as(s"bin$k"),
-        (col(s"lo$k") + col(s"w$k") * col("bin").cast("double"))
-          .as(s"lo${k + 1}"),
-        (col(s"w$k") / lit(B.toDouble)).as(s"w${k + 1}"),
-        col("wtot"), col("t"),
-        (col("c_lo") + col("cum_before")).as("c_lo")): _*)
-        .localCheckpoint(false)
-    }
-    sys.error("unreachable")
-  }
-
-  /** SQL twin of [[weightedRefinedQuantile]] over `${p}base` = (g, x,
-    * wt); emits CTEs ending in `${p}qr` = (g, q_est). */
-  private[operators] def weightedRefinedQuantileSqlFor(p: String, q: Double,
-      passes: Int = 3): String = {
+  /** SQL twin of [[refinedQuantile]]: given a caller-defined CTE
+    * `${p}base` = (g, x), plus the weight column when `weight` names
+    * one, emits the chained refinement CTEs ending in `${p}qr` =
+    * (g, q_est). Same arithmetic trees as the DataFrame path — DuckDB
+    * replays every bracket and count exactly. */
+  private[operators] def refinedQuantileSqlFor(p: String, q: Double,
+      passes: Int = 3, weight: Option[String] = None): String = {
     def binSql(k: Int) =
       s"""CASE WHEN b.w$k <= 0 THEN 0
          |      ELSE CAST(GREATEST(LEAST(FLOOR((x.x - b.lo$k) / b.w$k), ${B - 1}.0), 0.0) AS INTEGER) END"""
@@ -338,18 +298,31 @@ object RobustStats {
          |      ELSE FLOOR((x.x - b.lo$i) / b.w$i) = CAST(b.bin$i AS DOUBLE) END)"""
         .stripMargin.replaceAll("\n\\s*", " ")
     }.foldLeft("TRUE")((a, c) => s"$a AND $c")
+    // the mass, total and target columns, and the final within-bin
+    // fraction, of the unweighted and weighted paths
+    val (tot, mass, rb0Tail, frac) = weight match {
+      case None => ("n", "COUNT(*)",
+        s"""COUNT(*) AS n,
+           |    CAST(CEIL($q::DOUBLE * COUNT(*)) AS BIGINT) AS t,
+           |    CAST(0 AS BIGINT) AS c_lo
+           |  FROM ${p}base GROUP BY g)""",
+        "CAST(t - c_lo - cum_before AS DOUBLE) / CAST(cnt AS DOUBLE)")
+      case Some(w) => ("wtot", s"SUM(x.$w)",
+        s"""SUM($w) AS wtot,
+           |    $q::DOUBLE * SUM($w) AS t,
+           |    0.0::DOUBLE AS c_lo
+           |  FROM ${p}base GROUP BY g
+           |  HAVING SUM($w) > 0)""",
+        "(t - c_lo - cum_before) / cnt")
+    }
     val init =
       s"""${p}rb0 AS (
          |  SELECT g, MIN(x) AS lo1, (MAX(x) - MIN(x)) / ${B}.0 AS w1,
-         |    SUM(wt) AS wtot,
-         |    $q::DOUBLE * SUM(wt) AS t,
-         |    0.0::DOUBLE AS c_lo
-         |  FROM ${p}base GROUP BY g
-         |  HAVING SUM(wt) > 0)""".stripMargin
+         |    $rb0Tail""".stripMargin
     val chain = (1 to passes).map { k =>
       val counts =
         s"""${p}rc$k AS (
-           |  SELECT b.g, ${binSql(k)} AS bin, SUM(x.wt) AS cnt
+           |  SELECT b.g, ${binSql(k)} AS bin, $mass AS cnt
            |  FROM ${p}base x JOIN ${p}rb${k - 1} b USING (g)
            |  WHERE ${memberSql(k)}
            |  GROUP BY 1, 2),
@@ -371,7 +344,7 @@ object RobustStats {
           s"lo$k", s"w$k", s"bin AS bin$k",
           s"lo$k + w$k * CAST(bin AS DOUBLE) AS lo${k + 1}",
           s"w$k / ${B}.0 AS w${k + 1}",
-          "wtot", "t", "c_lo + cum_before AS c_lo")).mkString(", ")
+          tot, "t", "c_lo + cum_before AS c_lo")).mkString(", ")
         s"""$counts,
            |${p}rb$k AS (SELECT $cols FROM ${p}rw$k)""".stripMargin
       }
@@ -379,7 +352,7 @@ object RobustStats {
     val fin =
       s"""${p}qr AS (
          |  SELECT g, lo$passes + w$passes * (CAST(bin AS DOUBLE)
-         |    + (t - c_lo - cum_before) / cnt) AS q_est
+         |    + $frac) AS q_est
          |  FROM ${p}rw$passes)""".stripMargin
     s"$init,\n$chain,\n$fin"
   }
@@ -388,8 +361,8 @@ object RobustStats {
   /** Q161: QUANTITY-WEIGHTED robust median of l_extendedprice per
     * return flag — "the median unit's price", where each lineitem row
     * counts once per unit it ships. Integer weights keep the whole
-    * chain bit-exact across engines (see
-    * [[weightedRefinedQuantile]]'s determinism contract). */
+    * chain bit-exact across engines (see [[refinedQuantile]]'s
+    * determinism contract). */
   private def q161(s: SparkSession, dir: String): DataFrame =
     weightedRefinedQuantile(
       (Tables.t(s, dir, "lineitem")
@@ -402,72 +375,10 @@ object RobustStats {
     s"""WITH base AS (
        |  SELECT l_returnflag AS g, l_extendedprice AS x, l_quantity AS wt
        |  FROM lineitem),
-       |${weightedRefinedQuantileSqlFor("", 0.5)}
+       |${refinedQuantileSqlFor("", 0.5, weight = Some("wt"))}
        |SELECT g, ROUND(q_est, 6) AS wmedian
        |FROM qr
        |ORDER BY g ASC NULLS LAST""".stripMargin
-
-  /** SQL twin of [[refinedQuantile]]: given a caller-defined CTE
-    * `${p}base` = (g, x), emits the chained refinement CTEs ending in
-    * `${p}qr` = (g, q_est). Same arithmetic trees as the DataFrame
-    * path — DuckDB replays every bracket and count exactly. */
-  private[operators] def refinedQuantileSqlFor(p: String, q: Double,
-      passes: Int = 3): String = {
-    def binSql(k: Int) =
-      s"""CASE WHEN b.w$k <= 0 THEN 0
-         |      ELSE CAST(GREATEST(LEAST(FLOOR((x.x - b.lo$k) / b.w$k), ${B - 1}.0), 0.0) AS INTEGER) END"""
-        .stripMargin.replaceAll("\n\\s*", " ")
-    def memberSql(k: Int): String = (1 until k).map { i =>
-      s"""(CASE WHEN b.w$i <= 0 THEN TRUE
-         |      WHEN b.bin$i = ${B - 1} THEN FLOOR((x.x - b.lo$i) / b.w$i) >= ${B - 1}.0
-         |      WHEN b.bin$i = 0 THEN FLOOR((x.x - b.lo$i) / b.w$i) <= 0.0
-         |      ELSE FLOOR((x.x - b.lo$i) / b.w$i) = CAST(b.bin$i AS DOUBLE) END)"""
-        .stripMargin.replaceAll("\n\\s*", " ")
-    }.foldLeft("TRUE")((a, c) => s"$a AND $c")
-    val init =
-      s"""${p}rb0 AS (
-         |  SELECT g, MIN(x) AS lo1, (MAX(x) - MIN(x)) / ${B}.0 AS w1,
-         |    COUNT(*) AS n,
-         |    CAST(CEIL($q::DOUBLE * COUNT(*)) AS BIGINT) AS t,
-         |    CAST(0 AS BIGINT) AS c_lo
-         |  FROM ${p}base GROUP BY g)""".stripMargin
-    val chain = (1 to passes).map { k =>
-      val counts =
-        s"""${p}rc$k AS (
-           |  SELECT b.g, ${binSql(k)} AS bin, COUNT(*) AS cnt
-           |  FROM ${p}base x JOIN ${p}rb${k - 1} b USING (g)
-           |  WHERE ${memberSql(k)}
-           |  GROUP BY 1, 2),
-           |${p}rs$k AS (
-           |  SELECT g, bin, cnt,
-           |    SUM(cnt) OVER (PARTITION BY g ORDER BY bin ASC) AS cum,
-           |    SUM(cnt) OVER (PARTITION BY g ORDER BY bin ASC) - cnt AS cum_before
-           |  FROM ${p}rc$k),
-           |${p}rw$k AS (
-           |  SELECT b.*, s.bin, s.cnt, s.cum_before
-           |  FROM ${p}rs$k s JOIN ${p}rb${k - 1} b USING (g)
-           |  WHERE b.c_lo + s.cum >= b.t
-           |  QUALIFY ROW_NUMBER() OVER (PARTITION BY b.g ORDER BY s.bin ASC) = 1)""".stripMargin
-      if (k == passes) counts
-      else {
-        val carried = (1 until k)
-          .flatMap(i => Seq(s"lo$i", s"w$i", s"bin$i"))
-        val cols = (Seq("g") ++ carried ++ Seq(
-          s"lo$k", s"w$k", s"bin AS bin$k",
-          s"lo$k + w$k * CAST(bin AS DOUBLE) AS lo${k + 1}",
-          s"w$k / ${B}.0 AS w${k + 1}",
-          "n", "t", "c_lo + cum_before AS c_lo")).mkString(", ")
-        s"""$counts,
-           |${p}rb$k AS (SELECT $cols FROM ${p}rw$k)""".stripMargin
-      }
-    }.mkString(",\n")
-    val fin =
-      s"""${p}qr AS (
-         |  SELECT g, lo$passes + w$passes * (CAST(bin AS DOUBLE)
-         |    + CAST(t - c_lo - cum_before AS DOUBLE) / CAST(cnt AS DOUBLE)) AS q_est
-         |  FROM ${p}rw$passes)""".stripMargin
-    s"$init,\n$chain,\n$fin"
-  }
 
   // ------------------------------------------------------------- q123
   /** Q123: histogram-sketch quantiles (p50/p90/p99) of l_extendedprice
@@ -675,20 +586,13 @@ object RobustStats {
       pairedScale: Option[Int] = None): DataFrame = {
     val rng = rangeOf(base).localCheckpoint(false) // ----------------- scan 1
     val wc = Window.partitionBy(col("g")).orderBy(col("bin").asc_nulls_last)
+    val (sxAggs, sx) =
+      graft.Canon.exactDecimalSum(col("x"), "sx", "decimal(38,12)", pairedScale)
     val hist = base.join(broadcast(rng), Seq("g")) // ------------ scan 2
       .withColumn("bin", binOf)
       .groupBy(col("g"), col("bin"))
-      .agg(count(lit(1)).as("cnt"),
-        (pairedScale match {
-          case Some(sc) =>
-            graft.Canon.psumAggs(graft.Canon.pterm(col("x"), sc), "sx")
-          case None =>
-            Seq(sum(col("x").cast("decimal(38,12)")).as("sx"))
-        }): _*)
-      .withColumn("sx", pairedScale match {
-        case Some(sc) => graft.Canon.psumDecimal("sx", sc)
-        case None => col("sx")
-      })
+      .agg(count(lit(1)).as("cnt"), sxAggs: _*)
+      .withColumn("sx", sx)
       .withColumn("cum", sum(col("cnt")).over(wc))
       .withColumn("cum_before", col("cum") - col("cnt"))
       .withColumn("sv", sum(col("sx")).over(wc).cast("double"))
@@ -739,23 +643,15 @@ object RobustStats {
         when(col("x") < col("p_lo"), col("p_lo"))
           .when(col("x") > col("p_hi"), col("p_hi"))
           .otherwise(col("x")))
+    val (scapAggs, scap) = graft.Canon.exactDecimalSum(col("capped"), "scap",
+      "decimal(28,6)", pairedScale.map(_ => 6))
     val cells = rows.groupBy(col("g"), col("decile"), col("dbin"))
       .agg(count(lit(1)).as("cnt"),
         (Seq(
           sum(when(col("x") < col("p_lo"), 1L).otherwise(0L)).as("c_lo"),
           sum(when(col("x") > col("p_hi"), 1L).otherwise(0L)).as("c_hi"),
-          min(col("n")).as("n")) ++
-          (pairedScale match {
-            case Some(_) =>
-              graft.Canon.psumAggs(graft.Canon.pterm(col("capped"), 6),
-                "scap")
-            case None =>
-              Seq(sum(col("capped").cast("decimal(28,6)")).as("scap"))
-          })): _*)
-      .withColumn("scap", pairedScale match {
-        case Some(_) => graft.Canon.psumDecimal("scap", 6)
-        case None => col("scap")
-      })
+          min(col("n")).as("n")) ++ scapAggs): _*)
+      .withColumn("scap", scap)
       .localCheckpoint(false)
     val decdev = cells.groupBy(col("g"), col("decile"))
       .agg(sum(col("cnt")).as("dcnt"), min(col("n")).as("n"))

@@ -1,9 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Hot-key bounds of the dedup pair generators, exercised with skewed
@@ -23,28 +21,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class DedupBoundsSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** Runs `action` and returns the named observed metric's row, waiting
-    * for the (async) QueryExecutionListener delivery. */
-  private def observedMetric[T](name: String)(action: => T): (T, Map[String, Any]) = {
-    @volatile var seen = Map.empty[String, Map[String, Any]]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen ++= qe.observedMetrics.map { case (n, row) =>
-          n -> row.schema.fieldNames.map(f => f -> row.getAs[Any](f)).toMap
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val result = action
-      val deadline = System.nanoTime() + 15_000_000_000L
-      while (!seen.contains(name) && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(seen.contains(name),
-        s"observed metric '$name' never arrived (saw: ${seen.keySet})")
-      (result, seen(name))
-    } finally spark.listenerManager.unregister(listener)
-  }
-
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.select("d1", "d2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
@@ -61,7 +37,7 @@ class DedupBoundsSpec extends AnyFunSuite {
       (1001L + 2 * i, s"planted pair p${i}x p${i}y p${i}z p${i}w p${i}v p${i}u")))
     val docs = (hot ++ planted).toDF("doc_id", "text")
 
-    val (rows, m) = observedMetric("q27_df_cap") {
+    val (rows, m) = observedIn("dedup_ngram_df_cap", "q27_df_cap") {
       graft.operators.Dedup.ngramJaccardPairs(docs, threshold = 0.5, dfCap = 50).collect()
     }
     assert(m("dropped_shingles") == 3L, s"hot trigrams must be capped: $m")
@@ -84,7 +60,7 @@ class DedupBoundsSpec extends AnyFunSuite {
       (i, s"shared stop phrase here u${i}a u${i}b u${i}c")) ++
       Seq((900L, "planted dup q1 q2 q3 q4"), (901L, "planted dup q1 q2 q3 q4")))
       .toDF("doc_id", "text")
-    val ((n, _), m) = observedMetric("q27_postings") {
+    val ((n, _), m) = observedIn("dedup_ngram_postings", "q27_postings") {
       val rows = graft.operators.Dedup
         .ngramJaccardPairs(docs, threshold = 0.9, dfCap = 40).collect()
       (rows.length, rows)
@@ -107,7 +83,7 @@ class DedupBoundsSpec extends AnyFunSuite {
       Seq((900L, "planted twin r1 r2 r3 r4 tail one two three four five"),
         (901L, "planted twin r1 r2 r3 r4 tail one two three four five")))
       .toDF("doc_id", "text")
-    val ((rows, _), m) = observedMetric("q27_prefix_cands") {
+    val ((rows, _), m) = observedIn("dedup_ngram_prefix", "q27_prefix_cands") {
       val r = graft.operators.Dedup
         .ngramJaccardPairs(docs, threshold = 0.9, dfCap = 10000).collect()
       (r.length, r)
@@ -160,7 +136,7 @@ class DedupBoundsSpec extends AnyFunSuite {
       (0L until 5L).map(i => (1, 100000L + i)))
       .toDF("k", "id").select(col("k"), struct(col("id")).as("p"))
     def run(maxGroup: Int) = {
-      val (pairs, m) = observedMetric("graft_pair_cells") {
+      val (pairs, m) = observedIn(s"dedup_bounded_pairs_$maxGroup", "graft_pair_cells") {
         graft.operators.Dedup.boundedPairs(rows, Seq("k"), "id", maxGroup)
           .select(col("x.id").as("d1"), col("y.id").as("d2"))
           .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -386,7 +362,7 @@ class DedupBoundsSpec extends AnyFunSuite {
         (901L, "planted twin r1 r2 r3 r4 tail one two three four five")))
       .toDF("doc_id", "text")
     val bound = postingPairBound(docs, 10000)
-    val ((rowsInv, _), mInv) = observedMetric("q160_cands") {
+    val ((rowsInv, _), mInv) = observedIn("dedup_containment_inverted", "q160_cands") {
       val r = graft.operators.Dedup
         .containmentPairsImpl(docs, 0.9, 10000, forcePrefix = Some(false)).collect()
       (r.length, r)
@@ -396,7 +372,7 @@ class DedupBoundsSpec extends AnyFunSuite {
       s"inverted-index candidates $candsInv exceed posting-pair bound $bound")
     assert(candsInv >= n * (n + 1) / 2,
       s"shared tail must fan out quadratically (got $candsInv)")
-    val ((rowsPref, _), mPref) = observedMetric("q160_cands") {
+    val ((rowsPref, _), mPref) = observedIn("dedup_containment_prefix", "q160_cands") {
       val r = graft.operators.Dedup
         .containmentPairsImpl(docs, 0.9, 10000, forcePrefix = Some(true)).collect()
       (r.length, r)
@@ -453,7 +429,7 @@ class DedupBoundsSpec extends AnyFunSuite {
       (1000L + 2 * i, s"planted pair p${i}x p${i}y p${i}z p${i}w p${i}v p${i}u"),
       (1001L + 2 * i, s"planted pair p${i}x p${i}y p${i}z p${i}w p${i}v p${i}u")))
     val docs = (hot ++ planted).toDF("doc_id", "text")
-    val (rows, m) = observedMetric("q160_df_cap") {
+    val (rows, m) = observedIn("dedup_containment_df_cap", "q160_df_cap") {
       graft.operators.Dedup.containmentPairs(docs, threshold = 0.5, dfCap = 50)
         .collect()
     }

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * SessionDefaults builds a SparkSession, operator and streaming paths
   * read no environment, fixture tables open through Tables without an inference
   * job, only the canonical board may overwrite the tracked
-  * BENCH_BOARD.json or meet the baselines, only Metrics listens to the
-  * scheduler, and no code reads the BASELINE.md prose ledger. */
+  * BENCH_BOARD.json or meet the baselines, only Metrics (and the three
+  * specs that check what it cannot see) listens to the scheduler, and no
+  * code reads the BASELINE.md prose ledger. */
 class EntryPointSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -95,14 +96,22 @@ class EntryPointSpec extends AnyFunSuite {
   test("only Metrics registers a listener, and no code sets a job group") {
     // one listener attributes work to queries by job tag windows,
     // streams' micro-batch progress included; a second listener (a
-    // streaming one too) or a job group is a second attribution path
-    val files = scalaFiles(Paths.get("src/main"))
-    assert(files.size > 50, "source tree not found")
-    val listeners = offenders(files.filterNot(_.getFileName.toString == "Metrics.scala"),
+    // streaming one too) or a job group is a second attribution path.
+    // Tests read their numbers through a Metrics window as well; the
+    // specs allowed here still need their own: MetricsSpec checks the
+    // window against a global listener, and ZOrderSpec (scan records)
+    // and ScaleSpec (per-stage task times) read what no record holds
+    val mainFiles = scalaFiles(Paths.get("src/main"))
+    val files = mainFiles ++ scalaFiles(Paths.get("src/test"))
+    assert(mainFiles.size > 50 && files.size > 100, "source tree not found")
+    val allowed = Set("Metrics.scala", "MetricsSpec.scala", "ZOrderSpec.scala",
+      "ScaleSpec.scala",
+      "EntryPointSpec.scala") // the patterns below, not a listener
+    val listeners = offenders(files.filterNot(f => allowed(f.getFileName.toString)),
       """addSparkListener|listenerManager\s*\.\s*register|QueryExecutionListener|""" +
         """streams\s*\.\s*addListener|StreamingQueryListener""")
     assert(listeners.isEmpty, listeners.mkString("\n"))
-    val groups = offenders(files, """setJobGroup""")
+    val groups = offenders(mainFiles, """setJobGroup""")
     assert(groups.isEmpty, groups.mkString("\n"))
   }
 

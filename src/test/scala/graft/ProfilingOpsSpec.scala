@@ -277,6 +277,39 @@ class ProfilingOpsSpec extends AnyFunSuite {
       s"one light outlier row must not move the weighted median: $dirty")
   }
 
+  test("refined quantile: unit weights give the unweighted estimate bit for bit " +
+      "when q·n is integral, at 1, 2 and 3 passes") {
+    import operators.RobustStats.{refinedQuantile, weightedRefinedQuantile}
+    // q = 0.5 over an even n per group: the rank ⌈q·n⌉ and the mass q·W
+    // are the same number, so every bracket, count and interpolation is
+    val rows = (1 to 40).map(i => ("spread", i * 1.25)) ++
+      (1 to 19).map(i => ("outlier", i.toDouble)) :+ (("outlier", 1e9)) // far outlier
+    val flat = Seq.fill(6)(("flat", 7.5)) // degenerate: hi = lo
+    val df = (rows ++ flat).toDF("g", "x")
+    def est(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    for (passes <- 1 to 3) {
+      val plain = est(refinedQuantile(df, 0.5, passes))
+      val unit = est(weightedRefinedQuantile(df.withColumn("wt", lit(1L)), 0.5, passes))
+      assert(plain.keySet == Set("spread", "outlier", "flat"), s"groups at $passes: $plain")
+      assert(plain.map { case (g, v) => g -> java.lang.Double.doubleToRawLongBits(v) } ==
+        unit.map { case (g, v) => g -> java.lang.Double.doubleToRawLongBits(v) },
+        s"passes = $passes: unweighted $plain vs unit-weighted $unit")
+      assert(plain("flat") == 7.5, s"degenerate group at $passes: $plain")
+    }
+  }
+
+  test("refined quantile names q and passes when it rejects them") {
+    val df = Seq(("a", 1.0)).toDF("g", "x")
+    val e = intercept[IllegalArgumentException](
+      operators.RobustStats.refinedQuantile(df, 0.0))
+    assert(e.getMessage == "requirement failed: refined quantile needs 0 < q <= 1 " +
+      "and passes >= 1, got q = 0.0, passes = 3")
+    val w = intercept[IllegalArgumentException](
+      operators.RobustStats.weightedRefinedQuantile(df.withColumn("wt", lit(1L)), 0.0))
+    assert(w.getMessage == e.getMessage)
+  }
+
   test("q162: diversity laws — uniform vocab reads D_eff = k exactly, a dominant " +
       "token collapses it toward 1") {
     def div(rows: Seq[(String, String)]) =

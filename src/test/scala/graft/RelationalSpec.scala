@@ -9,6 +9,22 @@ object SparkTestSession {
   // (FaultToleranceSpec injects first-attempt failures and asserts the
   // retried result is identical)
   lazy val spark: SparkSession = SessionDefaults.session(sf, "local[4,2]", 4)
+
+  /** Runs `body` in the Metrics window `window` and returns its result
+    * and the window's record. */
+  def windowRecord[T](window: String)(body: => T): (T, Metrics.QueryRecord) = {
+    val result = Metrics.measured(spark, window)(body)
+    (result, Metrics.take(spark, Seq(window))(window))
+  }
+
+  /** Runs `action` in the Metrics window `window` and returns its result
+    * and the values its `.observe()` point `point` recorded. */
+  def observedIn[T](window: String, point: String)(action: => T): (T, Map[String, Any]) = {
+    val (result, record) = windowRecord(window)(action)
+    org.scalatest.Assertions.assert(record.observed.contains(point),
+      s"observed metric '$point' never reached window '$window' (saw: ${record.observed.keySet})")
+    (result, record.observed(point))
+  }
 }
 
 class RelationalSpec extends AnyFunSuite {

@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.sql.graftsync.ListenerSync
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Scale checks at the GenScale 10× point (VERDICT r6 #6/#7): the ANN
@@ -37,28 +36,6 @@ class ScaleSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, dir).collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"))).toSet
 
-  /** Capture `observe(...)` metrics emitted while `action` runs (same
-    * poll-with-deadline shape as DedupBoundsSpec — the listener bus is
-    * async and its flush API is private). */
-  private def observedMetric[T](name: String)(action: => T): (T, Map[String, Any]) = {
-    @volatile var metrics = Option.empty[Map[String, Any]]
-    val l = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(name).foreach { row =>
-          metrics = Some(row.getValuesMap[Any](row.schema.fieldNames))
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      val r = action
-      val deadline = System.nanoTime() + 15_000_000_000L
-      while (metrics.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(metrics.nonEmpty, s"observed metric '$name' never arrived")
-      (r, metrics.get)
-    } finally spark.listenerManager.unregister(l)
-  }
-
   sf1Test("ngram near-dup pairs grow exactly linearly (10x) and the " +
       "prefix candidate bound holds") { dir =>
     // GenScale suffixes every token with its copy id, so cross-copy
@@ -70,12 +47,13 @@ class ScaleSpec extends AnyFunSuite {
     // threshold 0.9 → the prefix-filter branch (the registered query's
     // 0.5 takes the inverted-index branch, which has no candidate
     // metric); pair growth is asserted on the same runs
-    def run(d: String) = observedMetric("q27_prefix_cands") {
-      pairSet(operators.Dedup.ngramJaccardPairs(
-        Tables.t(spark, d, "documents"), threshold = 0.9))
-    }
-    val (small, mSmall) = run(sf01)
-    val (big, mBig) = run(dir)
+    def run(scale: String, d: String) =
+      observedIn(s"scale_ngram_prefix_$scale", "q27_prefix_cands") {
+        pairSet(operators.Dedup.ngramJaccardPairs(
+          Tables.t(spark, d, "documents"), threshold = 0.9))
+      }
+    val (small, mSmall) = run("sf01", sf01)
+    val (big, mBig) = run("sf1", dir)
     assert(small.nonEmpty, "sf0.1 fixture should contain planted near-dups")
     assert(big.size == 10 * small.size,
       s"expected exactly 10x pair growth, got ${small.size} -> ${big.size}")
@@ -164,7 +142,7 @@ class ScaleSpec extends AnyFunSuite {
       assert(got == want, s"skew-split join diverged; hot=${got.get(0L)} vs ${want.get(0L)}")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), s"AQE skew split did not trigger:\n$plan")
-      Thread.sleep(2000) // async listener bus: let the task-end events land
+      ListenerSync.waitUntilEmpty(spark.sparkContext, 30000) // let the task-end events land
       // spread: with ~92% of rows on one key, an unsplit plan puts ~all
       // of the heaviest stage in ONE task; after the split no task may
       // dominate its stage

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.graftsync.ListenerSync
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -13,20 +11,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * (celeborn: worker/src/main/scala/org/apache/celeborn/service/deploy/worker/storage/TierWriter.scala:295-299,
   * StorageManager.scala:1078-1177). Spark's executor-side analogue is
   * operator spill: when an in-memory row buffer crosses its threshold the
-  * rows move into a disk-backed UnsafeExternalSorter, task metrics record
-  * memory/diskBytesSpilled, and the query result must be unchanged.
+  * rows move into a disk-backed UnsafeExternalSorter, the operator's
+  * `spillSize` SQL metric records the bytes, and the query result must
+  * be unchanged.
   *
   * These tests force the window and sort-merge-join buffers to spill by
-  * shrinking their thresholds to a few rows, assert spill metrics > 0 via
-  * a listener, and hash-compare against the unconstrained run — the same
-  * differential shape as FaultToleranceSpec. The memory→disk cache tier
+  * shrinking their thresholds to a few rows, assert the query's
+  * [[Metrics]] record shows `spillBytes` > 0, and hash-compare against
+  * the unconstrained run — the same differential shape as
+  * FaultToleranceSpec. The memory→disk cache tier
   * (persist MEMORY_AND_DISK) is demonstrated last.
   */
 class SpillSpec extends AnyFunSuite {
   import SparkTestSession._
 
   /** Temporarily set SQL confs, restoring the previous values after. */
-  private def withConfs(pairs: (String, String)*)(body: => Unit): Unit = {
+  private def withConfs[T](pairs: (String, String)*)(body: => T): T = {
     val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
     pairs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
@@ -34,23 +34,6 @@ class SpillSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
-  }
-
-  /** Total bytes spilled (memory + disk) across all tasks of `body`. */
-  private def measureSpill(body: => Unit): Long = {
-    val spilled = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerSync.waitUntilEmpty(spark.sparkContext, 30000)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    spilled.get()
   }
 
   private def canonical(df: DataFrame): Seq[String] =
@@ -73,15 +56,12 @@ class SpillSpec extends AnyFunSuite {
 
   test("window buffer spills to disk under a row threshold; result unchanged") {
     val clean = canonical(windowQuery())
-    var constrained: Seq[String] = null
-    val spilled = measureSpill {
+    val (constrained, record) = windowRecord("spill_window") {
       withConfs(
         "spark.sql.windowExec.buffer.in.memory.threshold" -> "32",
-        "spark.sql.windowExec.buffer.spill.threshold" -> "64") {
-        constrained = canonical(windowQuery())
-      }
+        "spark.sql.windowExec.buffer.spill.threshold" -> "64")(canonical(windowQuery()))
     }
-    assert(spilled > 0, "expected window buffer to spill under 64-row threshold")
+    assert(record.spillBytes > 0, "expected window buffer to spill under 64-row threshold")
     assert(constrained == clean, "spilled run differs from in-memory run")
   }
 
@@ -97,17 +77,14 @@ class SpillSpec extends AnyFunSuite {
 
   test("sort-merge-join match buffer spills under a row threshold; result unchanged") {
     val clean = canonical(smjQuery())
-    var constrained: Seq[String] = null
-    val spilled = measureSpill {
+    val (constrained, record) = windowRecord("spill_smj") {
       withConfs(
         "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "1",
-        "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "2") {
-        constrained = canonical(smjQuery())
-      }
+        "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "2")(canonical(smjQuery()))
     }
-    assert(spilled > 0, "expected SMJ match buffer to spill under 2-row threshold")
+    assert(record.spillBytes > 0, "expected SMJ match buffer to spill under 2-row threshold")
     assert(constrained == clean, "spilled run differs from in-memory run")
   }
 
