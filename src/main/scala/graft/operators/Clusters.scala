@@ -125,24 +125,8 @@ object Clusters {
   /** Independent oracle: exact all-pairs Jaccard edges + recursive-CTE
     * transitive closure — no replay of the propagation rounds. */
   private val q55Sql =
-    """WITH RECURSIVE d AS (
-      |  SELECT doc_id, unnest(list_distinct([s[i] || ' ' || s[i+1] || ' ' || s[i+2]
-      |    FOR i IN range(1, len(s) - 1)])) AS sh
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-      |sz AS (SELECT doc_id, COUNT(*) AS sz FROM d GROUP BY doc_id),
-      |i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-      |  FROM d a JOIN d b ON a.sh = b.sh AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2),
-      |p AS (SELECT d1, d2 FROM (
-      |  SELECT d1, d2, inter::DOUBLE / (s1.sz + s2.sz - inter) AS jac
-      |  FROM i JOIN sz s1 ON i.d1 = s1.doc_id JOIN sz s2 ON i.d2 = s2.doc_id) x
-      |  WHERE jac >= 0.5),
-      |edges AS (SELECT d1 AS src, d2 AS dst FROM p UNION ALL SELECT d2, d1 FROM p),
-      |reach(a, b) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
-      |comp AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster FROM reach GROUP BY a)
+    s"""WITH RECURSIVE ${Dedup.jaccardEdgeCtesSql(0.5)},
+      |${Dedup.closureCtesSql}
       |SELECT doc_id, COALESCE(c.cluster, doc_id) AS cluster,
       |  (COALESCE(c.cluster, doc_id) = doc_id) AS keep
       |FROM documents LEFT JOIN comp c ON documents.doc_id = c.id
@@ -195,12 +179,7 @@ object Clusters {
       |    CAST(inter AS DOUBLE) / CAST(s2.sz AS DOUBLE)) AS cmax
       |  FROM i JOIN sz s1 ON i.d1 = s1.doc_id JOIN sz s2 ON i.d2 = s2.doc_id) x
       |  WHERE cmax >= 0.8),
-      |edges AS (SELECT d1 AS src, d2 AS dst FROM p UNION ALL SELECT d2, d1 FROM p),
-      |reach(a, b) AS (
-      |  SELECT src, dst FROM edges
-      |  UNION
-      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
-      |comp AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster FROM reach GROUP BY a),
+      |${Dedup.closureCtesSql},
       |lab AS (
       |  SELECT documents.doc_id, COALESCE(c.cluster, documents.doc_id) AS cluster,
       |    CAST(COALESCE(s.sz, 0) AS BIGINT) AS sz

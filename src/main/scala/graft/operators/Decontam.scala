@@ -53,10 +53,7 @@ object Decontam {
       .orderBy(col("containment_bucket").asc_nulls_last)
 
   private val q52Sql =
-    """WITH d AS (
-      |  SELECT doc_id, unnest(list_distinct([s[i] || ' ' || s[i+1] || ' ' || s[i+2]
-      |    FOR i IN range(1, len(s) - 1)])) AS sh
-      |  FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+    s"""WITH ${Dedup.trigramCteSql("d")},
       |bench AS (SELECT DISTINCT sh FROM d WHERE doc_id % 50 = 0),
       |per AS (
       |  SELECT c.doc_id, COUNT(*) AS n_sh,

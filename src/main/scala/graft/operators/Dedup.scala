@@ -218,14 +218,8 @@ object Dedup {
     * differentially rather than by argument alone). */
   private[graft] def ngramJaccardPairsImpl(docs: DataFrame, threshold: Double,
       dfCap: Int, forcePrefix: Option[Boolean]): DataFrame = {
-    val sh = shingledHashed(docs) // no .cache(): see minhashPairs
-
-    val dfc = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .observe("q27_df_cap",
-        sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("dropped_shingles"),
-        max(col("df")).as("max_df"))
-    val hot = dfc.where(col("df") > dfCap).select(col("sh"))
-    val kept = sh.join(broadcast(hot), Seq("sh"), "left_anti")
+    // no .cache() on the shingles: see minhashPairs
+    val (dfc, kept) = dropStopShingles(shingledHashed(docs), dfCap, Some("q27"))
 
     // Strategy choice, MEASURED both ways at sf0.1 (DedupBoundsSpec
     // carries the candidate-bound evidence):
@@ -241,74 +235,120 @@ object Dedup {
     //    candidate from the full (capped) shingle sets. No misses.
     val usePrefix = forcePrefix.getOrElse(threshold >= PrefixFilterMinThreshold)
     val pairs =
-      if (!usePrefix) {
-        // Posting-list pair generation instead of a shingle self-join:
-        // one array per distinct shingle, pairs by double-explode.
-        // Arrays bounded by the anti-join above; the observed
-        // max_posting metric proves the bound on live data.
-        // r16: q160's r16c rewrite applied to its exact-Jaccard twin —
-        // the post-cap shingle count rides INSIDE the posting rows
-        // (count window over doc_id, then collect_list of (doc_id, sz)
-        // structs), so the Σ C(df,2)-sized pair stream never joins a
-        // corpus-sized frame. The prior plan joined two doc-keyed
-        // `sizes` frames onto the aggregated pair stream; those two
-        // SMJ shuffles of a fact-sized stream were the measured sf100
-        // melt (671.5 s / 19× second decade, r16e tail board — the
-        // same shape as q160's 831 s). The window costs one linear
-        // corpus shuffle on the PRE-pair rows; sz is functionally
-        // determined by doc_id, so grouping by (doc, sz) pairs leaves
-        // the aggregate unchanged.
-        val withSz = kept.withColumn("sz",
-          count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-        withSz.groupBy(col("sh"))
-          .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-          .observe("q27_postings", max(size(col("ds"))).as("max_posting"))
-          .select(explode(col("ds")).as("a"), col("ds"))
-          .select(col("a"), explode(col("ds")).as("b"))
-          .where(col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-            col("a.sz").as("sz1"), col("b.sz").as("sz2"))
-          .agg(count(lit(1)).as("inter"))
-      } else {
-        val wDoc = Window.partitionBy(col("doc_id"))
-        val prefix = kept.join(dfc.select(col("sh"), col("df")), Seq("sh"))
-          .withColumn("pos", row_number().over(
-            wDoc.orderBy(col("df").asc_nulls_last, col("sh").asc_nulls_last)))
-          .withColumn("sz", count(lit(1)).over(wDoc))
-          // required-intersection bound ceil(t*sz) with a 9-dp
-          // pre-round: decimal literals like 0.8 are inexact binary, so
-          // the raw product can round UP across an exact integer
-          // (0.8*5 -> 4.0000000000000004 -> ceil = 5), shortening the
-          // prefix by one and dropping boundary pairs whose containment
-          // equals the threshold exactly (r12 ADVICE)
-          .where(col("pos") <=
-            col("sz") - ceil(round(lit(threshold) * col("sz"), 9)) + lit(1))
-          .select(col("sh"), col("doc_id"))
-        val cand = prefix.groupBy(col("sh")).agg(collect_list(col("doc_id")).as("ds"))
-          .observe("q27_postings", max(size(col("ds"))).as("max_posting"))
+      if (!usePrefix) postingPairCounts(kept, "q27")
+      else {
+        // symmetric: prefix postings joined to prefix postings
+        val cand = postingLists(probePrefix(kept, dfc, threshold), "q27")
           .select(explode(col("ds")).as("da"), col("ds"))
           .select(col("da"), explode(col("ds")).as("db"))
           .where(col("da") < col("db"))
           .select(col("da").as("d1"), col("db").as("d2"))
           .distinct()
           .observe("q27_prefix_cands", count(lit(1)).as("n_candidates"))
-        // exact verify: per-doc shingle arrays are bounded by document
-        // length; work scales with candidates, not Σ df²
-        val docSets = kept.groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(col("sh"))).as("shs"))
-        cand
-          .join(docSets.select(col("doc_id").as("d1"), col("shs").as("shs1")), "d1")
-          .join(docSets.select(col("doc_id").as("d2"), col("shs").as("shs2")), "d2")
-          .select(col("d1"), col("d2"),
-            size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
-            size(col("shs1")).cast("long").as("sz1"),
-            size(col("shs2")).cast("long").as("sz2"))
+        verifiedIntersections(cand, kept)
       }
     pairs
       .select(col("d1"), col("d2"),
         (col("inter").cast("double") / (col("sz1") + col("sz2") - col("inter"))).as("jac"))
       .where(col("jac") >= threshold)
       .orderBy(col("d1").asc_nulls_last, col("d2").asc_nulls_last, col("jac").asc_nulls_last)
+  }
+
+  /** The stop-shingle drop shared by the capped-shingle pair index
+    * ([[ngramJaccardPairs]], [[containmentPairs]]) and
+    * [[containmentShingleSizes]]: per-shingle document frequency `df`,
+    * then every shingle with df > `dfCap` removed from every document
+    * through a broadcast anti-join (the hot set is tiny by
+    * construction). Returns (the (sh, df) counts, the kept (doc_id, sh)
+    * rows).
+    *
+    * `observe = Some(q)` reports cap activity as `<q>_df_cap`
+    * (dropped_shingles, max_df). The name is a parameter, not a
+    * constant, because observation names must be unique per plan: q163
+    * runs [[containmentPairs]] and [[containmentShingleSizes]] in one
+    * plan over different DataFrames, and a second `observe` with the
+    * same name there fails analysis — so the sizes call passes None. */
+  private def dropStopShingles(sh: DataFrame, dfCap: Int,
+      observe: Option[String]): (DataFrame, DataFrame) = {
+    val counted = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
+    val dfc = observe.fold(counted)(q => counted.observe(s"${q}_df_cap",
+      sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("dropped_shingles"),
+      max(col("df")).as("max_df")))
+    val hot = dfc.where(col("df") > dfCap).select(col("sh"))
+    (dfc, sh.join(broadcast(hot), Seq("sh"), "left_anti"))
+  }
+
+  /** Inverted-index pair counting over the kept (doc_id, sh) rows: one
+    * posting array per shingle (bounded by the stop-shingle drop; the
+    * `<q>_postings` metric reports max_posting on live data), pairs by
+    * double explode, exact integer intersections. Returns (d1, d2, sz1,
+    * sz2, inter) with d1 < d2 and sz the doc's post-cap shingle count.
+    *
+    * sz rides INSIDE the posting rows (a count window over doc_id, then
+    * collect_list of (doc_id, sz) structs), so the Σ C(df, 2)-sized pair
+    * stream never joins a corpus-sized frame (r16). The prior plan
+    * joined two doc-keyed `sizes` frames onto the aggregated pair
+    * stream; those two SMJ shuffles of a fact-sized stream were the
+    * measured sf100 melt (q160 831 s / 21.5× second decade, r15f;
+    * q27_dedup_ngram 671.5 s / 19×, r16e). The window costs one linear
+    * corpus shuffle on the PRE-pair rows (Σ df), strictly cheaper
+    * whenever pairs outgrow postings. sz is functionally determined by
+    * doc_id, so grouping by (doc, sz) pairs leaves the aggregate
+    * unchanged. */
+  private def postingPairCounts(kept: DataFrame, q: String): DataFrame =
+    kept.withColumn("sz", count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      .groupBy(col("sh"))
+      .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
+      .observe(s"${q}_postings", max(size(col("ds"))).as("max_posting"))
+      .select(explode(col("ds")).as("a"), col("ds"))
+      .select(col("a"), explode(col("ds")).as("b"))
+      .where(col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
+        col("a.sz").as("sz1"), col("b.sz").as("sz2"))
+      .agg(count(lit(1)).as("inter"))
+
+  /** Posting lists (sh, ds = doc ids) of (doc_id, sh) rows, observed as
+    * `<q>_postings` (max_posting). */
+  private def postingLists(rows: DataFrame, q: String): DataFrame =
+    rows.groupBy(col("sh")).agg(collect_list(col("doc_id")).as("ds"))
+      .observe(s"${q}_postings", max(size(col("ds"))).as("max_posting"))
+
+  /** The prefix filter's probe prefix: each doc's first
+    * |x| − ⌈t·|x|⌉ + 1 kept shingles in the global rarest-first order
+    * (df asc, sh asc), as (sh, doc_id) rows — short AND low-df.
+    *
+    * The required-intersection bound ⌈t·sz⌉ is taken after a 9-dp
+    * pre-round: decimal literals like 0.8 are inexact binary, so the raw
+    * product can round UP across an exact integer (0.8·5 →
+    * 4.0000000000000004 → ceil = 5), shortening the prefix by one and
+    * dropping boundary pairs whose score equals the threshold exactly
+    * (r12). */
+  private def probePrefix(kept: DataFrame, dfc: DataFrame,
+      threshold: Double): DataFrame = {
+    val wDoc = Window.partitionBy(col("doc_id"))
+    kept.join(dfc.select(col("sh"), col("df")), Seq("sh"))
+      .withColumn("pos", row_number().over(
+        wDoc.orderBy(col("df").asc_nulls_last, col("sh").asc_nulls_last)))
+      .withColumn("sz", count(lit(1)).over(wDoc))
+      .where(col("pos") <=
+        col("sz") - ceil(round(lit(threshold) * col("sz"), 9)) + lit(1))
+      .select(col("sh"), col("doc_id"))
+  }
+
+  /** Exact verification of (d1, d2) candidates from the full per-doc
+    * kept shingle sets (bounded by document length, so the work scales
+    * with candidates, not Σ df²): (d1, d2, inter, sz1, sz2). */
+  private def verifiedIntersections(cand: DataFrame,
+      kept: DataFrame): DataFrame = {
+    val docSets = kept.groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(col("sh"))).as("shs"))
+    cand
+      .join(docSets.select(col("doc_id").as("d1"), col("shs").as("shs1")), "d1")
+      .join(docSets.select(col("doc_id").as("d2"), col("shs").as("shs2")), "d2")
+      .select(col("d1"), col("d2"),
+        size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
+        size(col("shs1")).cast("long").as("sz1"),
+        size(col("shs2")).cast("long").as("sz2"))
   }
 
   /** Above this Jaccard threshold the AllPairs prefix filter wins; below
@@ -323,14 +363,8 @@ object Dedup {
 
   /** Shared exact-Jaccard oracle (see q27Sql doc). */
   private def jaccardOracleSql(threshold: Double): String =
-    s"""WITH d AS (
-       |  SELECT doc_id, unnest(list_distinct([s[i] || ' ' || s[i+1] || ' ' || s[i+2]
-       |    FOR i IN range(1, len(s) - 1)])) AS sh
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
-       |sz AS (SELECT doc_id, COUNT(*) AS sz FROM d GROUP BY doc_id),
-       |i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-       |  FROM d a JOIN d b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
+    s"""WITH ${trigramCteSql("d")},
+       |$intersectionCtesSql
        |SELECT d1, d2, jac FROM (
        |  SELECT d1, d2,
        |    inter::DOUBLE / (s1.sz + s2.sz - inter) AS jac
@@ -616,7 +650,8 @@ object Dedup {
     * the oracle's explode formulation but without multiplying the
     * token rows. */
   private[graft] def simhash(docs: DataFrame, nBits: Int = 60): DataFrame = {
-    require(nBits >= 1 && nBits <= 120)
+    require(nBits >= 1 && nBits <= 120,
+      s"simhash needs 1 <= nBits <= 120 (two 60-bit words), got nBits = $nBits")
     val hexChars1 = math.min(15, math.max(0, (nBits - 60 + 3) / 4))
     val tok = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -937,9 +972,10 @@ object Dedup {
     * containments and the Jaccard so a consumer separates true
     * near-dups from containment-only finds.
     *
-    * Scale shape: identical to [[ngramJaccardPairs]]'s inverted-index
-    * branch — stop-shingle `dfCap` anti-join, posting-list pair
-    * generation (never a doc×doc join), exact integer intersections.
+    * Scale shape: the capped-shingle pair index it shares with
+    * [[ngramJaccardPairs]] — stop-shingle `dfCap` anti-join
+    * ([[dropStopShingles]]), posting-list pair generation (never a
+    * doc×doc join), exact integer intersections.
     * The dfCap filter is mirrored in the q160/q163 oracles
     * (parameterized via [[containmentCtesSql]]), so engine and oracle
     * stay bit-equal even on a corpus where the cap trips; cap activity
@@ -1019,93 +1055,31 @@ object Dedup {
     * pair-generation one. Docs with < 3 tokens have no shingles and no
     * row here. */
   def containmentShingleSizes(docs: DataFrame,
-      dfCap: Int = DefaultDfCap): DataFrame = {
-    val sh = shingledHashed(docs)
-    val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .where(col("df") > dfCap).select(col("sh"))
-    sh.join(broadcast(hot), Seq("sh"), "left_anti")
+      dfCap: Int = DefaultDfCap): DataFrame =
+    dropStopShingles(shingledHashed(docs), dfCap, observe = None)._2
       .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-  }
 
   private[graft] def containmentPairsImpl(docs: DataFrame, threshold: Double,
       dfCap: Int, forcePrefix: Option[Boolean]): DataFrame = {
-    val sh = shingledHashed(docs)
-    val dfc = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .observe("q160_df_cap",
-        sum(when(col("df") > dfCap, 1L).otherwise(0L)).as("dropped_shingles"),
-        max(col("df")).as("max_df"))
-    val hot = dfc.where(col("df") > dfCap).select(col("sh"))
-    val kept = sh.join(broadcast(hot), Seq("sh"), "left_anti")
+    val (dfc, kept) = dropStopShingles(shingledHashed(docs), dfCap, Some("q160"))
     val usePrefix = forcePrefix.getOrElse(electPrefix(docs, dfCap))
     val scored =
-      if (!usePrefix) {
-        // r16 (VERDICT r15 item 2): the doc's post-cap shingle count
-        // rides INSIDE the posting rows — count window over doc_id,
-        // then collect_list of (doc_id, sz) structs — so the pair
-        // stream (the Σ C(df,2)-sized hot path, ~1.3e9 rows at sf100)
-        // never joins a corpus-sized frame. The r15 plan joined two
-        // doc-keyed `sizes` frames onto the AGGREGATED pair stream;
-        // those two SMJ shuffles of a fact-sized stream were the
-        // measured sf100 melt (831 s / 21.5× second decade, r15f).
-        // The window costs one corpus shuffle on the PRE-pair rows
-        // (Σ df, linear) — strictly cheaper than two pair-stream
-        // shuffles whenever pairs outgrow postings, which is exactly
-        // the regime this branch is elected in. sz is functionally
-        // determined by doc_id, so grouping by (doc, sz) pairs leaves
-        // the aggregate unchanged.
-        val withSz = kept.withColumn("sz",
-          count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-        withSz.groupBy(col("sh"))
-          .agg(collect_list(struct(col("doc_id"), col("sz"))).as("ds"))
-          .observe("q160_postings", max(size(col("ds"))).as("max_posting"))
-          .select(explode(col("ds")).as("a"), col("ds"))
-          .select(col("a"), explode(col("ds")).as("b"))
-          .where(col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"),
-            col("a.sz").as("sz1"), col("b.sz").as("sz2"))
-          .agg(count(lit(1)).as("inter"))
+      if (!usePrefix)
+        postingPairCounts(kept, "q160")
           .observe("q160_cands", count(lit(1)).as("n_candidates"))
-      } else {
-        val postings = kept.groupBy(col("sh")).agg(collect_list(col("doc_id")).as("ds"))
-          .observe("q160_postings", max(size(col("ds"))).as("max_posting"))
-        // probe prefix: first |x| − ⌈t·|x|⌉ + 1 shingles per doc in
-        // global (df asc, sh asc) order — short AND low-df; joined
-        // against the FULL posting index (the asymmetric part: the
-        // index side may be the |B| ≫ |A| superset whose own
-        // containment is tiny, so it must stay complete)
-        val wDoc = Window.partitionBy(col("doc_id"))
-        val prefix = kept.join(dfc.select(col("sh"), col("df")), Seq("sh"))
-          .withColumn("pos", row_number().over(
-            wDoc.orderBy(col("df").asc_nulls_last, col("sh").asc_nulls_last)))
-          .withColumn("sz", count(lit(1)).over(wDoc))
-          // required-intersection bound ceil(t*sz) with a 9-dp
-          // pre-round: decimal literals like 0.8 are inexact binary, so
-          // the raw product can round UP across an exact integer
-          // (0.8*5 -> 4.0000000000000004 -> ceil = 5), shortening the
-          // prefix by one and dropping boundary pairs whose containment
-          // equals the threshold exactly (r12 ADVICE)
-          .where(col("pos") <=
-            col("sz") - ceil(round(lit(threshold) * col("sz"), 9)) + lit(1))
-          .select(col("sh"), col("doc_id"))
-        val cand = prefix.join(postings, Seq("sh"))
+      else {
+        // asymmetric: probe prefixes joined against the FULL posting
+        // index — the index side may be the |B| ≫ |A| superset whose own
+        // containment is tiny, so it must stay complete
+        val cand = probePrefix(kept, dfc, threshold)
+          .join(postingLists(kept, "q160"), Seq("sh"))
           .select(col("doc_id").as("da"), explode(col("ds")).as("db"))
           .where(col("da") =!= col("db"))
           .select(least(col("da"), col("db")).as("d1"),
             greatest(col("da"), col("db")).as("d2"))
           .distinct()
           .observe("q160_cands", count(lit(1)).as("n_candidates"))
-        // exact verify from full per-doc sets: work scales with
-        // candidates, not Σ df²
-        val docSets = kept.groupBy(col("doc_id"))
-          .agg(sort_array(collect_list(col("sh"))).as("shs"))
-        cand
-          .join(docSets.select(col("doc_id").as("d1"), col("shs").as("shs1")), "d1")
-          .join(docSets.select(col("doc_id").as("d2"), col("shs").as("shs2")), "d2")
-          .select(col("d1"), col("d2"),
-            size(array_intersect(col("shs1"), col("shs2"))).cast("long").as("inter"),
-            size(col("shs1")).cast("long").as("sz1"),
-            size(col("shs2")).cast("long").as("sz2"))
-          .where(col("inter") > 0)
+        verifiedIntersections(cand, kept).where(col("inter") > 0)
       }
     scored
       .withColumn("c1",
@@ -1123,25 +1097,65 @@ object Dedup {
   private def q160(s: SparkSession, dir: String): DataFrame =
     containmentPairs(Tables.fannedDocuments(s, dir))
 
-  /** Shared oracle CTE chain for the containment family (exact string
-    * shingles — the q27 trust argument: xxhash64 preserves set
-    * relations absent collisions), MIRRORING the engine's `dfCap`
-    * stop-shingle drop so engine and oracle agree even on a corpus
-    * where the cap trips (ADVICE r11). Emits `d` (capped (doc_id, sh)),
-    * `sz` (post-cap distinct-shingle counts) and `i` (pair
-    * intersections). */
-  private[graft] def containmentCtesSql(dfCap: Int): String =
-    s"""dall AS (
+  // ------------------------------------------- oracle CTE generators
+  // The DuckDB oracles of the text near-dup family (q27/q28 ngram, q52,
+  // q55, q95, q122, q160, q163) are independent restatements of the
+  // engine over exact string shingles; only the code that writes their
+  // shared pieces is shared, and each text is pinned byte for byte by
+  // OracleSqlSpec.
+
+  /** CTE `name`: (doc_id, sh) — each document's DISTINCT word trigrams
+    * as exact strings (the engine hashes them; the q27 trust argument:
+    * xxhash64 preserves set relations absent collisions). Documents
+    * with < 3 tokens have no rows. */
+  private[graft] def trigramCteSql(name: String): String =
+    s"""$name AS (
        |  SELECT doc_id, unnest(list_distinct([s[i] || ' ' || s[i+1] || ' ' || s[i+2]
        |    FOR i IN range(1, len(s) - 1)])) AS sh
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents))""".stripMargin
+
+  /** CTEs `sz` (distinct-shingle count per doc) and `i` (d1 < d2 pair
+    * intersections by shingle equi-join) over a (doc_id, sh) CTE `d`. */
+  private def intersectionCtesSql: String =
+    """sz AS (SELECT doc_id, COUNT(*) AS sz FROM d GROUP BY doc_id),
+      |i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
+      |  FROM d a JOIN d b ON a.sh = b.sh AND a.doc_id < b.doc_id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** CTEs `d`, `sz`, `i` and `p` (the (d1, d2) pairs with exact trigram
+    * Jaccard ≥ `threshold`): the edge set the q55/q122 clustering
+    * oracles close over with [[closureCtesSql]]. */
+  private[graft] def jaccardEdgeCtesSql(threshold: Double): String =
+    s"""${trigramCteSql("d")},
+       |$intersectionCtesSql,
+       |p AS (SELECT d1, d2 FROM (
+       |  SELECT d1, d2, inter::DOUBLE / (s1.sz + s2.sz - inter) AS jac
+       |  FROM i JOIN sz s1 ON i.d1 = s1.doc_id JOIN sz s2 ON i.d2 = s2.doc_id) x
+       |  WHERE jac >= $threshold)""".stripMargin
+
+  /** Recursive CTEs `edges`, `reach` and `comp` (id, cluster = least
+    * reachable id) over a (d1, d2) pair CTE `p`: the transitive closure
+    * the clustering oracles compute instead of replaying the engine's
+    * propagation rounds. Needs `WITH RECURSIVE`. */
+  private[graft] def closureCtesSql: String =
+    """edges AS (SELECT d1 AS src, d2 AS dst FROM p UNION ALL SELECT d2, d1 FROM p),
+      |reach(a, b) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src),
+      |comp AS (SELECT a AS id, LEAST(a, MIN(b)) AS cluster FROM reach GROUP BY a)""".stripMargin
+
+  /** Shared oracle CTE chain for the containment family, MIRRORING the
+    * engine's `dfCap` stop-shingle drop so engine and oracle agree even
+    * on a corpus where the cap trips (ADVICE r11). Emits `d` (capped
+    * (doc_id, sh)), `sz` (post-cap distinct-shingle counts) and `i`
+    * (pair intersections). */
+  private[graft] def containmentCtesSql(dfCap: Int): String =
+    s"""${trigramCteSql("dall")},
        |hot AS (SELECT sh FROM dall GROUP BY sh HAVING COUNT(*) > $dfCap),
        |d AS (SELECT doc_id, sh FROM dall
        |  WHERE NOT EXISTS (SELECT 1 FROM hot WHERE hot.sh = dall.sh)),
-       |sz AS (SELECT doc_id, COUNT(*) AS sz FROM d GROUP BY doc_id),
-       |i AS (SELECT a.doc_id AS d1, b.doc_id AS d2, COUNT(*) AS inter
-       |  FROM d a JOIN d b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)""".stripMargin
+       |$intersectionCtesSql""".stripMargin
 
   private val q160Sql =
     s"""WITH ${containmentCtesSql(DefaultDfCap)}

@@ -45,37 +45,6 @@ object ImageDedup {
   final case class ImgRec(media_id: Long, payload: Array[Byte])
   final case class ImgBits(media_id: Long, bits: String)
 
-  /** Deterministic PNG variant: the q34 pixel formula, with the red
-    * channel of every 101st pixel shifted by +40 (mod 256) when
-    * `perturbed` — a sparse content edit, not a uniform relight. */
-  def encodePngVariant(docId: Long, w: Int, h: Int,
-      perturbed: Boolean): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val r0 = ((docId * 7 + x * 3 + y * 5) % 256).toInt
-        val r = if (perturbed && (y.toLong * w + x) % 101 == 0)
-          (r0 + 40) % 256 else r0
-        val g = ((docId * 11 + x * 13 + y * 2) % 256).toInt
-        val b = ((docId * 3 + x + y * 17) % 256).toInt
-        img.setRGB(x, y, (r << 16) | (g << 8) | b)
-        x += 1
-      }
-      y += 1
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    val writer = Multimodal.pngWriterSpi.createWriterInstance()
-    val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-    try {
-      writer.setOutput(ios)
-      writer.write(img)
-    } finally { writer.dispose(); ios.close() }
-    bos.toByteArray
-  }
-
   /** gridRows·(gridCols−1)-bit dHash of a PNG payload as a '0'/'1'
     * string (bit (gy, gx) at index gy·(gridCols−1) + gx). Integer-exact:
     * block sums + cross-multiplied mean comparison, no division, no
@@ -86,14 +55,7 @@ object ImageDedup {
     * 64-bit q97 layout; 16×17 = the 256-bit wide layout. */
   def dhashBits(payload: Array[Byte], gridRows: Int = 8,
       gridCols: Int = 9): String = {
-    val reader = Multimodal.pngReaderSpi.createReaderInstance()
-    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-      new java.io.ByteArrayInputStream(payload))
-    val img = try {
-      reader.setInput(iis, true, true)
-      reader.read(0)
-    } finally { reader.dispose(); iis.close() }
-    require(img != null, "undecodable image payload")
+    val img = Multimodal.decodePng(payload)
     val (w, h) = (img.getWidth, img.getHeight)
     val s = Array.ofDim[Long](gridRows, gridCols)
     val c = Array.ofDim[Long](gridRows, gridCols)
@@ -214,22 +176,18 @@ object ImageDedup {
     * variant copy for doc_id ≡ 0 (mod 45) (media_id = 2·doc_id + 1). */
   def imageTable(s: SparkSession, dir: String): Dataset[ImgRec] = {
     import s.implicits._
-    val base = Tables.t(s, dir, "documents")
-      .where(col("doc_id") % 15 === 0)
-      .select(col("doc_id"),
-        (lit(16) + col("doc_id") % 64).cast("int").as("w"),
-        (lit(16) + col("doc_id") % 48).cast("int").as("h"),
-        lit(false).as("pert"))
-    val variants = Tables.t(s, dir, "documents")
-      .where(col("doc_id") % 45 === 0)
-      .select(col("doc_id"),
-        (lit(16) + col("doc_id") % 64).cast("int").as("w"),
-        (lit(16) + col("doc_id") % 48).cast("int").as("h"),
-        lit(true).as("pert"))
-    base.unionAll(variants).as[(Long, Int, Int, Boolean)]
+    def images(modulus: Int, pert: Boolean): DataFrame =
+      Tables.t(s, dir, "documents")
+        .where(col("doc_id") % modulus === 0)
+        .select(col("doc_id"),
+          (lit(16) + col("doc_id") % 64).cast("int").as("w"),
+          (lit(16) + col("doc_id") % 48).cast("int").as("h"),
+          lit(pert).as("pert"))
+    images(15, pert = false).unionAll(images(45, pert = true))
+      .as[(Long, Int, Int, Boolean)]
       .map { case (id, w, h, pert) =>
         ImgRec(id * 2 + (if (pert) 1 else 0),
-          encodePngVariant(id, w, h, pert)) }
+          Multimodal.encodePng(id, w, h, pert)) }
   }
 
   private def q97(s: SparkSession, dir: String): DataFrame =
@@ -240,29 +198,7 @@ object ImageDedup {
     * banded Spark path must equal it exactly (pigeonhole losslessness
     * is thereby driver-checked, not just argued). */
   private val q97Sql =
-    s"""WITH img AS (
-       |  SELECT doc_id * 2 AS media_id, doc_id, 0 AS pert,
-       |    CAST(16 + doc_id % 64 AS INT) AS w, CAST(16 + doc_id % 48 AS INT) AS h
-       |  FROM documents WHERE doc_id % 15 = 0
-       |  UNION ALL
-       |  SELECT doc_id * 2 + 1, doc_id, 1,
-       |    CAST(16 + doc_id % 64 AS INT), CAST(16 + doc_id % 48 AS INT)
-       |  FROM documents WHERE doc_id % 45 = 0),
-       |e AS (
-       |  SELECT media_id, doc_id, pert, w, h,
-       |    unnest(generate_series(0, w * h - 1)) AS i FROM img),
-       |px AS (
-       |  SELECT media_id, w, h, i % w AS x, i // w AS y,
-       |    CASE WHEN pert = 1 AND i % 101 = 0
-       |      THEN ((doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256 + 40) % 256
-       |      ELSE (doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256 END
-       |    + (doc_id * 11 + (i % w) * 13 + (i // w) * 2) % 256
-       |    + (doc_id * 3 + (i % w) + (i // w) * 17) % 256 AS lum
-       |  FROM e),
-       |blk AS (
-       |  SELECT media_id, (x * 9) // w AS gx, (y * 8) // h AS gy,
-       |    SUM(lum) AS s, COUNT(*) AS c
-       |  FROM px GROUP BY 1, 2, 3),
+    s"""WITH ${blockSumCtesSql(gridRows = 8, gridCols = 9)},
        |bit AS (
        |  SELECT a.media_id, a.gy, a.gx,
        |    CASE WHEN a.s * b.c > b.s * a.c THEN '1' ELSE '0' END AS bch
@@ -296,29 +232,7 @@ object ImageDedup {
     * instead of a 256-way position join (the 64-bit oracle's
     * `CROSS JOIN range(64)` would cost 4x more here for no fidelity). */
   private val q97WideSql =
-    s"""WITH img AS (
-       |  SELECT doc_id * 2 AS media_id, doc_id, 0 AS pert,
-       |    CAST(16 + doc_id % 64 AS INT) AS w, CAST(16 + doc_id % 48 AS INT) AS h
-       |  FROM documents WHERE doc_id % 15 = 0
-       |  UNION ALL
-       |  SELECT doc_id * 2 + 1, doc_id, 1,
-       |    CAST(16 + doc_id % 64 AS INT), CAST(16 + doc_id % 48 AS INT)
-       |  FROM documents WHERE doc_id % 45 = 0),
-       |e AS (
-       |  SELECT media_id, doc_id, pert, w, h,
-       |    unnest(generate_series(0, w * h - 1)) AS i FROM img),
-       |px AS (
-       |  SELECT media_id, w, h, i % w AS x, i // w AS y,
-       |    CASE WHEN pert = 1 AND i % 101 = 0
-       |      THEN ((doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256 + 40) % 256
-       |      ELSE (doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256 END
-       |    + (doc_id * 11 + (i % w) * 13 + (i // w) * 2) % 256
-       |    + (doc_id * 3 + (i % w) + (i // w) * 17) % 256 AS lum
-       |  FROM e),
-       |blk AS (
-       |  SELECT media_id, (x * 17) // w AS gx, (y * 16) // h AS gy,
-       |    SUM(lum) AS s, COUNT(*) AS c
-       |  FROM px GROUP BY 1, 2, 3),
+    s"""WITH ${blockSumCtesSql(gridRows = 16, gridCols = 17)},
        |grid AS (
        |  SELECT media_id, gy.gy, gx.gx
        |  FROM (SELECT DISTINCT media_id FROM img)
@@ -344,6 +258,37 @@ object ImageDedup {
        |WHERE bit_count(xor(a.bs::BIT, b.bs::BIT)) <= $MaxHamming
        |ORDER BY a_id ASC NULLS LAST, b_id ASC NULLS LAST,
        |  hamming ASC NULLS LAST""".stripMargin
+
+  /** Oracle CTEs shared by both q97 layouts: `img` (the fixture's base
+    * and variant images, as in [[imageTable]]), `e` (one row per pixel
+    * index), `px` (the [[Multimodal.encodePng]] pixel formula with the
+    * variant's red-channel shift, summed to r+g+b luminance) and `blk`
+    * (per-(gx, gy) block sums s and pixel counts c on the
+    * gridRows × gridCols grid, gx = x·gridCols / w). */
+  private def blockSumCtesSql(gridRows: Int, gridCols: Int): String =
+    s"""img AS (
+       |  SELECT doc_id * 2 AS media_id, doc_id, 0 AS pert,
+       |    CAST(16 + doc_id % 64 AS INT) AS w, CAST(16 + doc_id % 48 AS INT) AS h
+       |  FROM documents WHERE doc_id % 15 = 0
+       |  UNION ALL
+       |  SELECT doc_id * 2 + 1, doc_id, 1,
+       |    CAST(16 + doc_id % 64 AS INT), CAST(16 + doc_id % 48 AS INT)
+       |  FROM documents WHERE doc_id % 45 = 0),
+       |e AS (
+       |  SELECT media_id, doc_id, pert, w, h,
+       |    unnest(generate_series(0, w * h - 1)) AS i FROM img),
+       |px AS (
+       |  SELECT media_id, w, h, i % w AS x, i // w AS y,
+       |    CASE WHEN pert = 1 AND i % 101 = 0
+       |      THEN ((doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256 + 40) % 256
+       |      ELSE (doc_id * 7 + (i % w) * 3 + (i // w) * 5) % 256 END
+       |    + (doc_id * 11 + (i % w) * 13 + (i // w) * 2) % 256
+       |    + (doc_id * 3 + (i % w) + (i // w) * 17) % 256 AS lum
+       |  FROM e),
+       |blk AS (
+       |  SELECT media_id, (x * $gridCols) // w AS gx, (y * $gridRows) // h AS gy,
+       |    SUM(lum) AS s, COUNT(*) AS c
+       |  FROM px GROUP BY 1, 2, 3)""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
     QueryDef("q97_phash_dedup", q97, Some(q97Sql)),

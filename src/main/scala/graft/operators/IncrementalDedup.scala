@@ -121,10 +121,7 @@ object IncrementalDedup {
   private val q95Sql = {
     val duckTrain =
       s"('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10 < 8"
-    s"""WITH d AS (
-       |  SELECT doc_id, unnest(list_distinct([s[i] || ' ' || s[i+1] || ' ' || s[i+2]
-       |    FOR i IN range(1, len(s) - 1)])) AS sh
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS s FROM documents)),
+    s"""WITH ${Dedup.trigramCteSql("d")},
        |sz AS (SELECT doc_id, COUNT(*) AS sz FROM d GROUP BY doc_id),
        |lbl AS (SELECT doc_id, $duckTrain AS is_base FROM documents),
        |i AS (

@@ -64,28 +64,30 @@ object Multimodal {
     * pays a provider scan plus temp-file churn per record. The SPIs are
     * thread-safe; reader/writer INSTANCES are not, so one is created
     * per call (cheap) over a memory-cached stream. */
-  private[operators] lazy val pngReaderSpi: javax.imageio.spi.ImageReaderSpi = {
-    val it = javax.imageio.spi.IIORegistry.getDefaultInstance
-      .getServiceProviders(classOf[javax.imageio.spi.ImageReaderSpi], true)
-    var found: javax.imageio.spi.ImageReaderSpi = null
-    while (found == null && it.hasNext) {
-      val spi = it.next()
-      if (spi.getFormatNames.exists(_.equalsIgnoreCase("png"))) found = spi
-    }
-    require(found != null, "no PNG ImageReader SPI in this JVM")
-    found
+  private lazy val pngReaderSpi = pngSpi(classOf[javax.imageio.spi.ImageReaderSpi])
+  private lazy val pngWriterSpi = pngSpi(classOf[javax.imageio.spi.ImageWriterSpi])
+
+  private def pngSpi[T <: javax.imageio.spi.ImageReaderWriterSpi](cls: Class[T]): T = {
+    import scala.jdk.CollectionConverters._
+    javax.imageio.spi.IIORegistry.getDefaultInstance
+      .getServiceProviders(cls, true).asScala
+      .find(_.getFormatNames.exists(_.equalsIgnoreCase("png")))
+      .getOrElse(throw new IllegalArgumentException(
+        s"no PNG ${cls.getSimpleName} in this JVM"))
   }
 
-  private[operators] lazy val pngWriterSpi: javax.imageio.spi.ImageWriterSpi = {
-    val it = javax.imageio.spi.IIORegistry.getDefaultInstance
-      .getServiceProviders(classOf[javax.imageio.spi.ImageWriterSpi], true)
-    var found: javax.imageio.spi.ImageWriterSpi = null
-    while (found == null && it.hasNext) {
-      val spi = it.next()
-      if (spi.getFormatNames.exists(_.equalsIgnoreCase("png"))) found = spi
-    }
-    require(found != null, "no PNG ImageWriter SPI in this JVM")
-    found
+  /** Decode a PNG payload through [[pngReaderSpi]] (lossless, so the
+    * pixels are exactly what [[encodePng]] wrote). */
+  private[operators] def decodePng(payload: Array[Byte]): java.awt.image.BufferedImage = {
+    val reader = pngReaderSpi.createReaderInstance()
+    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(payload))
+    val img = try {
+      reader.setInput(iis, true, true)
+      reader.read(0)
+    } finally { reader.dispose(); iis.close() }
+    require(img != null, "undecodable image payload")
+    img
   }
 
   /** REAL image decoder — `javax.imageio` ships in every JDK, so PNG
@@ -95,14 +97,7 @@ object Multimodal {
     * oracle-checkable: encode and decode are lossless, hence the pixel
     * sums equal what the generation formula predicts. */
   def decodeImageStats(r: MediaRecord): ImagePixels = {
-    val reader = pngReaderSpi.createReaderInstance()
-    val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
-      new java.io.ByteArrayInputStream(r.payload))
-    val img = try {
-      reader.setInput(iis, true, true)
-      reader.read(0)
-    } finally { reader.dispose(); iis.close() }
-    require(img != null, s"undecodable image payload for doc ${r.doc_id}")
+    val img = decodePng(r.payload)
     val (w, h) = (img.getWidth, img.getHeight)
     var lum = 0L
     var y = 0
@@ -265,15 +260,21 @@ object Multimodal {
     *   b = (docId·3 + x + y·17) mod 256
     * encoded with the JDK's ImageIO PNG writer. The formula (not the
     * bytes) is what the oracle replays — PNG is lossless, so decoded
-    * sums must match the formula exactly. */
-  def encodePng(docId: Long, w: Int, h: Int): Array[Byte] = {
+    * sums must match the formula exactly. `perturbed` shifts the red
+    * channel of every 101st pixel (row-major index y·w + x) by +40
+    * mod 256 — q97's planted near-dup variant, a sparse content edit,
+    * not a uniform relight. */
+  def encodePng(docId: Long, w: Int, h: Int,
+      perturbed: Boolean = false): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
-        val r = ((docId * 7 + x * 3 + y * 5) % 256).toInt
+        val r0 = ((docId * 7 + x * 3 + y * 5) % 256).toInt
+        val r = if (perturbed && (y.toLong * w + x) % 101 == 0)
+          (r0 + 40) % 256 else r0
         val g = ((docId * 11 + x * 13 + y * 2) % 256).toInt
         val b = ((docId * 3 + x + y * 17) % 256).toInt
         img.setRGB(x, y, (r << 16) | (g << 8) | b)

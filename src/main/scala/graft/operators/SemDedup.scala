@@ -92,111 +92,29 @@ object SemDedup {
     * k = 50 000 on LAION for exactly this reason. Floor 16 keeps every
     * fixture/test scale (≤ 2048 vectors) on the pinned-k layout, so the
     * scaled variant is bit-equal to q86_semdedup there (asserted in
-    * SelectionSpec); the cap keeps k ≤ [[Similarity.MaxTrainRows]]/4 so
-    * the bounded training sample still averages ≥ 4 points per
-    * centroid. */
+    * SelectionSpec). None past the flat trainer's cap
+    * k ≤ [[Similarity.MaxTrainRows]]/4 (the bounded training sample
+    * must still average ≥ 4 points per centroid): there the caller runs
+    * [[semDedupRecursive]] instead of a capped k whose per-cluster
+    * population grows again. */
   private val TargetClusterPop = 128
-  def electClusters(n: Long): Int =
-    math.max(Clusters,
-      math.min((n / TargetClusterPop).toInt, Similarity.MaxTrainRows / 4))
-
-  /** TWO-LEVEL (hierarchical) k-means SemDeDup — the k ∝ n regime past
-    * the flat trainer's cap. The r14 sf100 study measured the capped
-    * flat path saturating exactly as predicted: with k stuck at
-    * MaxTrainRows/4 = 1024, per-cluster population grows again past
-    * ~10⁵ vectors (2M/1024 ≈ 1953 ⇒ a ~8·10⁹-pair sweep, DNF at the
-    * 20-minute budget). Here k = k1·k2 without a bigger flat sample:
-    * train k1 coarse centroids on the usual bounded sample, assign the
-    * corpus once (n·k1 broadcast rows), then train k2 FINE centroids
-    * per coarse group with a single grouped Lloyd loop (the
-    * [[Pq.trainCodebook]] subspace-keyed discipline with the coarse id
-    * as the group key — per-(g, c_id, pos) DECIMAL sums keep the
-    * bit-parity bound because each group's sample is ≤ 20·k2 ≤
-    * MaxTrainRows rows), and assign each vector among its OWN group's
-    * fine centroids (n·k2 broadcast rows). Total assignment cost
-    * n·(k1+k2) = n·2√k instead of n·k: at sf100 (2M vectors,
-    * k = 15 625) that is 2M·250 vs 2M·15 625 — 62x less. The fine
-    * centroid table (k1·k2 rows × dim floats) stays broadcastable past
-    * 10⁸ vectors; beyond that, swap the final broadcast join for a
-    * shuffle join keyed by g (documented, not needed at any measured
-    * scale). Per-cluster population stays ~[[TargetClusterPop]], so the
-    * quadratic sweep budget holds at every decade. The per-(g, f_id,
-    * pos) decimal bit-parity bound requires 20·k2 ≤
-    * [[Similarity.MaxTrainRows]] (enforced — the same require as
-    * trainIvfCentroids, r14 ADVICE); k2 past 204 means n ≳ 5·10⁶ under
-    * the √k election, which is [[semDedupRecursive]]'s regime. */
-  def semDedupTwoLevel(s: SparkSession, corpus: DataFrame,
-      k1: Int, k2: Int, threshold: Double = Threshold,
-      trainIters: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(20L * k2 <= Similarity.MaxTrainRows,
-      s"two-level fine training samples 20*k2 rows per coarse group; " +
-        s"k2=$k2 breaks the ${Similarity.MaxTrainRows}-row decimal " +
-        "bit-parity bound (use semDedupRecursive past it)")
-    val e = corpus.select(col("vec_id"), col("embedding"))
-    val coarse = Similarity.trainIvfCentroids(
-      s, Similarity.trainSample(e, k1), k1, trainIters)
-    // (vec_id, embedding, g): every vector's coarse group, checkpointed
-    // once — reread by the per-group sample, the grouped Lloyd loop's
-    // lineage root, and the final fine assignment
-    val ga = Similarity.assignToCentroids(s, e, coarse)
-      .withColumnRenamed("c_id", "g").localCheckpoint()
-    val wg = Window.partitionBy(col("g"))
-      .orderBy(col("r").asc_nulls_last, col("vec_id").asc_nulls_last)
-    val sample = ga
-      .withColumn("r", md5(col("vec_id").cast("string")))
-      .withColumn("rn", row_number().over(wg))
-      .where(col("rn") <= 20 * k2)
-      .select(col("g"), col("vec_id"), col("embedding"), col("rn"))
-      .localCheckpoint()
-    // seeds: the k2 md5-smallest rows of each group (groups smaller
-    // than k2 simply get fewer fine centroids)
-    var cent = sample.where(col("rn") <= k2)
-      .select(col("g"), col("rn").cast("int").as("f_id"),
-        col("embedding").as("c_emb"))
-      .localCheckpoint()
-    def assignFine(rows: DataFrame, c: DataFrame): DataFrame =
-      rows.join(broadcast(c), Seq("g"))
-        .select(col("vec_id"), col("g"), col("embedding"), col("f_id"),
-          VectorOps.cosineFast(s, "c_emb", "embedding").as("c_sim"))
-        .groupBy(col("vec_id"))
-        .agg(max(struct(col("c_sim"), (-col("f_id")).as("nf"), col("f_id"),
-          col("g"), col("embedding"))).as("best"))
-        .select(col("vec_id"), col("best.embedding").as("embedding"),
-          col("best.g").as("g"), col("best.f_id").as("f_id"),
-          col("best.c_sim").as("c_sim"))
-    for (_ <- 1 to trainIters) {
-      val means = assignFine(sample, cent)
-        .select(col("g"), col("f_id"),
-          posexplode(col("embedding")).as(Seq("pos", "v")))
-        .groupBy(col("g"), col("f_id"), col("pos"))
-        .agg((sum(col("v").cast("decimal(28,12)")).cast("double")
-          / count(lit(1))).as("m"))
-        .groupBy(col("g"), col("f_id"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("g"), col("f_id"),
-          expr("transform(pm, x -> cast(x.m as float))").as("new_emb"))
-      cent = cent.join(means, Seq("g", "f_id"), "left")
-        .select(col("g"), col("f_id"),
-          coalesce(col("new_emb"), col("c_emb")).as("c_emb"))
-        .localCheckpoint()
-    }
-    val a = assignFine(ga, cent)
-      .select(col("vec_id"), col("embedding"),
-        ((col("g") - 1) * k2 + col("f_id")).cast("int").as("c_id"),
-        col("c_sim"))
-    sweepAndSelect(s, a, threshold)
+  def electClusters(n: Long): Option[Int] = {
+    val k = math.max(Clusters.toLong, n / TargetClusterPop)
+    if (k <= Similarity.MaxTrainRows / 4) Some(k.toInt) else None
   }
 
-  /** One level of the recursive split: partition every group of `ga`
-    * ((vec_id, embedding, g) rows) into ≤ `branch` children by a
-    * grouped Lloyd loop — the [[semDedupTwoLevel]] fine-training
-    * discipline with `branch` playing k2: per group an md5-ordered
-    * sample of ≤ 20·branch rows, `trainIters` rounds of per-(g, f_id,
+  /** One level of the recursive split ([[semDedupRecursive]]):
+    * partition every group of `ga` ((vec_id, embedding, g) rows) into
+    * ≤ `branch` children by one grouped Lloyd loop — the
+    * [[Pq.trainCodebook]] subspace-keyed discipline with the parent
+    * group as the key: per group an md5-ordered sample of ≤ 20·branch
+    * rows seeded by its `branch` md5-smallest rows (groups smaller than
+    * `branch` get fewer children), `trainIters` rounds of per-(g, f_id,
     * pos) DECIMAL-exact means (each group's sample is ≤ 20·branch ≤
-    * MaxTrainRows rows, preserving the 2^52 bit-parity bound), then one
-    * assignment of all rows among their OWN group's children. Returns
-    * (vec_id, embedding, g, f_id ∈ 1..branch, c_sim). */
+    * MaxTrainRows rows, preserving the 2^52 bit-parity bound — the same
+    * require as trainIvfCentroids), then one assignment of all rows
+    * among their OWN group's children. Returns (vec_id, embedding, g,
+    * f_id ∈ 1..branch, c_sim). */
   private def groupedSplit(s: SparkSession, ga: DataFrame, branch: Int,
       trainIters: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -217,8 +135,7 @@ object SemDedup {
     // the centroid table is keyed by g, so this is an EQUI-join: the
     // broadcast hint is right while the per-level child table is small
     // (≤ n/targetPop rows total); past ~10⁸ vectors drop the hint and
-    // let it shuffle on g — the same documented rung as the two-level
-    // fine table
+    // let it shuffle on g (documented, not needed at any measured scale)
     def assign(rows: DataFrame, c: DataFrame): DataFrame =
       rows.join(broadcast(c), Seq("g"))
         .select(col("vec_id"), col("g"), col("embedding"), col("f_id"),
@@ -248,18 +165,23 @@ object SemDedup {
     assign(ga, cent)
   }
 
-  /** LOG-DEPTH recursive k-means SemDeDup — closes the two-level path's
-    * Θ(n^1.5) assignment rung (VERDICT r14 item 3): with k ∝ n, the
-    * two-level split pays n·2√k per corpus pass, which returns to
-    * super-linear growth past ~10⁷ vectors. Here the grouped Lloyd
-    * split ([[groupedSplit]]) RECURSES: every group whose population
-    * exceeds `targetPop` is split into ≤ `branch` children, level by
-    * level, until all leaves are bounded (or `maxDepth`, the int-range
-    * guard on path-encoded ids, is reached). Depth is
-    * log_branch(n/targetPop), so total assignment cost is
-    * n·branch·depth = n·O(log n) — at 10⁸ vectors (branch 32, pop 128):
-    * n·32·5 vs the two-level's n·1768, 11x less, and the gap widens a
-    * further ~3x per decade.
+  /** LOG-DEPTH recursive k-means SemDeDup — the k ∝ n regime past the
+    * flat trainer's cap. The r14 sf100 study measured the capped flat
+    * path saturating as predicted: with k stuck at MaxTrainRows/4 =
+    * 1024, per-cluster population grows again past ~10⁵ vectors
+    * (2M/1024 ≈ 1953 ⇒ a ~8·10⁹-pair sweep, DNF at the 20-minute
+    * budget). A two-level split (k = k1·k2: coarse centroids, then k2
+    * fine ones per coarse group) pays n·(k1+k2) = n·2√k per corpus pass
+    * instead of n·k — 62x less at sf100 (2M vectors, k = 15 625) — but
+    * that is Θ(n^1.5) under k ∝ n, super-linear again past ~10⁷
+    * vectors. Here the grouped Lloyd split ([[groupedSplit]]) RECURSES:
+    * every group whose population exceeds `targetPop` is split into
+    * ≤ `branch` children, level by level, until all leaves are bounded
+    * (or `maxDepth`, the int-range guard on path-encoded ids, is
+    * reached). Depth is log_branch(n/targetPop), so total assignment
+    * cost is n·branch·depth = n·O(log n) — at 10⁸ vectors (branch 32,
+    * pop 128): n·32·5 vs the two-level's n·1768, 11x less, and the gap
+    * widens a further ~3x per decade.
     *
     * Mechanics: leaf ids are path-encoded in base (branch+1) with
     * nonzero digits (child f of group g = g·(branch+1)+f), so a leaf
@@ -270,8 +192,8 @@ object SemDedup {
     * broadcast semi-join to route rows, then one grouped split). Every
     * row's final c_sim is its similarity to its LEAF centroid — exactly
     * the keep rule's ranking key. Same determinism discipline as the
-    * flat and two-level paths: md5-ordered samples, decimal-exact
-    * means, argmax assignment, no RNG.
+    * flat path: md5-ordered samples, decimal-exact means, argmax
+    * assignment, no RNG.
     *
     * Skew guard: a degenerate group that refuses to shrink (all members
     * at one child) stops at `maxDepth` and sweeps quadratically within
@@ -281,7 +203,9 @@ object SemDedup {
       branch: Int = 32, targetPop: Long = TargetClusterPop,
       threshold: Double = Threshold, trainIters: Int = 2,
       maxDepth: Int = 6): DataFrame = {
-    require(branch >= 2 && targetPop >= 1)
+    require(branch >= 2 && targetPop >= 1,
+      s"recursive semdedup needs branch >= 2 and targetPop >= 1, " +
+        s"got branch = $branch, targetPop = $targetPop")
     require(math.pow(branch + 1.0, maxDepth) <= Int.MaxValue,
       s"path-encoded leaf ids must fit c_id's int range: " +
         s"($branch+1)^$maxDepth overflows")
@@ -325,15 +249,10 @@ object SemDedup {
     * green pinned entry at fixture scale is the correctness anchor. */
   private def q86scaled(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.t(s, dir, "embeddings")
-    val n = e.count()
-    val kIdeal = math.max(Clusters.toLong, n / TargetClusterPop)
-    if (kIdeal <= Similarity.MaxTrainRows / 4)
-      semDedup(s, e, nClusters = kIdeal.toInt)
-    else
-      // past the flat trainer's cap: log-depth recursive split (r15 —
-      // replaces the r14 two-level election, whose n·2√k assignment is
-      // Θ(n^1.5) under k ∝ n; the recursion is n·branch·log n)
-      semDedupRecursive(s, e)
+    electClusters(e.count()) match {
+      case Some(k) => semDedup(s, e, nClusters = k)
+      case None => semDedupRecursive(s, e)
+    }
   }
 
   /** Oracle: the shared k-means chain (bit-identical replay, see

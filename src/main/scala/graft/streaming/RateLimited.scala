@@ -70,28 +70,42 @@ object RateLimited {
     } finally s.conf.set(key, prev)
   }
 
-  /** q49: events re-laid-out as 6 files, streamed 2 files per trigger
-    * (3+ micro-batches), aggregated in complete mode — the final answer
-    * must equal the plain batch aggregate (DuckDB oracle). The >=3
-    * micro-batch progress assertion lives in StreamingSpec. */
   /** Events of `dir` re-laid-out as 6 parquet files, built once per JVM
     * (and shared with other streaming queries, e.g. q75), so repeated
     * bench iterations measure the throttled read, not the rewrite. */
   def sourceLayout(s: SparkSession, dir: String): String =
-    TempDirs.layout(dir, "graft_rate_src") { d =>
-      Tables.t(s, dir, "events").repartition(6).write.mode("overwrite").parquet(d)
-    }
+    sixFiles(dir, "graft_rate_src")(Tables.t(s, dir, "events"))
 
   /** One event type of `dir` as its own 6-file stream source (a "topic"
     * per type — the two sides of a stream-stream join are independent
     * streams, and each side should scan only its own data). */
   def typedLayout(s: SparkSession, dir: String, eventType: String): String =
-    TempDirs.layout(dir, s"graft_rate_$eventType") { d =>
-      Tables.t(s, dir, "events")
-        .where(org.apache.spark.sql.functions.col("event_type") === eventType)
-        .repartition(6).write.mode("overwrite").parquet(d)
+    sixFiles(dir, s"graft_rate_$eventType")(
+      Tables.t(s, dir, "events").where(col("event_type") === eventType))
+
+  /** `rows` written once per JVM as 6 parquet files whose modification
+    * times are distinct, 1 s apart in ascending file-name order. The
+    * file source admits files in modification-time order, and files one
+    * write lands in the same instant tie, so without this the files of
+    * a micro-batch (and with them which batch carries the max event
+    * time, and so whether AvailableNow runs a trailing no-data batch)
+    * vary between runs. */
+  private def sixFiles(dir: String, prefix: String)(rows: => DataFrame): String =
+    TempDirs.layout(dir, prefix) { d =>
+      rows.repartition(6).write.mode("overwrite").parquet(d)
+      val files = new java.io.File(d).listFiles()
+        .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+        .sortBy(_.getName)
+      val t0 = System.currentTimeMillis() - 1000L * files.length
+      files.zipWithIndex.foreach { case (f, i) =>
+        require(f.setLastModified(t0 + 1000L * i), s"cannot set the mtime of $f")
+      }
     }
 
+  /** q49: events re-laid-out as 6 files, streamed 2 files per trigger
+    * (3+ micro-batches), aggregated in complete mode — the final answer
+    * must equal the plain batch aggregate (DuckDB oracle). The >=3
+    * micro-batch progress assertion lives in StreamingSpec. */
   private def q49(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.t(s, dir, "events")
     val src = sourceLayout(s, dir)

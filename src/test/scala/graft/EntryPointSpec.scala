@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * read no environment, fixture tables open through Tables without an inference
   * job, only the canonical board may overwrite the tracked
   * BENCH_BOARD.json or meet the baselines, only Metrics (and the three
-  * specs that check what it cannot see) listens to the scheduler, and no
-  * code reads the BASELINE.md prose ledger. */
+  * specs that check what it cannot see) listens to the scheduler, no
+  * code reads the BASELINE.md prose ledger, and the dedup oracles'
+  * word-trigram shingle CTE has one writer. */
 class EntryPointSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -113,6 +114,16 @@ class EntryPointSpec extends AnyFunSuite {
     assert(listeners.isEmpty, listeners.mkString("\n"))
     val groups = offenders(mainFiles, """setJobGroup""")
     assert(groups.isEmpty, groups.mkString("\n"))
+  }
+
+  test("the word-trigram oracle shingle CTE is written once in src/main") {
+    // every dedup oracle starts from the same DuckDB shingle set; it is
+    // generated by Dedup.trigramCteSql, and a pasted copy drifts
+    val files = scalaFiles(Paths.get("src/main"))
+    assert(files.size > 50, "source tree not found")
+    val hits = offenders(files, """list_distinct\(\[s\[i\] \|\| ' ' \|\| s\[i\+1\]""")
+    assert(hits.size == 1,
+      hits.mkString(s"expected 1 shingle CTE literal, found ${hits.size}:\n", "\n", ""))
   }
 
   test("no code in src/main reads the BASELINE.md ledger") {

@@ -52,45 +52,12 @@ class SelectionSpec extends AnyFunSuite {
     val a = SparkEntry.queries("q86_semdedup")(spark, sf).collect().toSeq
     val b = SparkEntry.queries("q86_semdedup_scaled")(spark, sf).collect().toSeq
     assert(a == b, "scaled variant diverged from pinned entry at floor k")
-    // election law: k ∝ n between floor and the train-sample cap
-    assert(SemDedup.electClusters(500) == 16)
-    assert(SemDedup.electClusters(20000) == 156)
-    assert(SemDedup.electClusters(200000) == 1024)
-    assert(SemDedup.electClusters(100000000) == 1024, "cap must hold")
-  }
-
-  test("two-level semdedup: keep rule, coverage, and determinism at a " +
-      "forced fixture-scale election") {
-    // the sf100 path (elected when kIdeal > MaxTrainRows/4) exercised
-    // here with tiny k1·k2 = 4·4: the hierarchical clustering is a
-    // DIFFERENT (equally valid) blocking than flat k-means, so the
-    // contract is the keep-rule law + full coverage, not bit-equality
-    // to the flat entry
-    val emb = Tables.t(spark, sf, "embeddings")
-    val out = SemDedup.semDedupTwoLevel(spark, emb, k1 = 4, k2 = 4)
-      .collect().map(r =>
-        r.getLong(0) -> ((r.getInt(1), r.getBoolean(3)))).toMap
-    val n = emb.count()
-    assert(out.size.toLong == n, "every vector must get exactly one verdict")
-    assert(out.values.map(_._1).toSet.size <= 16, "at most k1*k2 clusters")
-    val raw = emb.select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) { d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    for ((_, members) <- out.groupBy(_._2._1);
-         Seq((x, _), (y, _)) <- members.toSeq.combinations(2)) {
-      if (cos(raw(x), raw(y)) > 0.45)
-        assert(!(out(x)._2 && out(y)._2),
-          s"near-dup pair ($x, $y) both kept in two-level sweep")
-    }
-    assert(out.values.exists(!_._2), "two-level sweep found no dups — vacuous")
-    val again = SemDedup.semDedupTwoLevel(spark, emb, k1 = 4, k2 = 4)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(3)))).toMap
-    assert(out == again, "two-level semdedup must be deterministic")
+    // election law: k ∝ n between floor and the train-sample cap; past
+    // the cap no flat k is elected and the registry runs the recursion
+    assert(SemDedup.electClusters(500) == Some(16))
+    assert(SemDedup.electClusters(20000) == Some(156))
+    assert(SemDedup.electClusters(200000) == None)
+    assert(SemDedup.electClusters(100000000) == None, "cap must hold")
   }
 
   test("recursive semdedup: keep rule, coverage, leaf bound, and " +
@@ -130,6 +97,11 @@ class SelectionSpec extends AnyFunSuite {
         targetPop = 16, maxDepth = 8)
       .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getBoolean(3)))).toMap
     assert(out == again, "recursive semdedup must be deterministic")
+    val err = intercept[IllegalArgumentException](
+      SemDedup.semDedupRecursive(spark, emb, branch = 1))
+    assert(err.getMessage.contains(
+      "recursive semdedup needs branch >= 2 and targetPop >= 1, " +
+        "got branch = 1, targetPop = 128"), err.getMessage)
   }
 
   // ---- Bigram LM (q87) ----
