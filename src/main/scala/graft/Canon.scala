@@ -42,6 +42,18 @@ object Canon {
   def sqlDavg(expr: String, scale: Int = 2, outScale: Int = 4): String =
     s"ROUND(${sqlDsum(expr, scale)} / COUNT(*), $outScale)"
 
+  /** The moment sum of the correlation and regression oracles: `expr`
+    * accumulated as DECIMAL(38,12), so the sum is order-independent,
+    * and read back as a double. */
+  def sqlMomentSum(expr: String): String =
+    s"CAST(SUM(CAST($expr AS DECIMAL(38,12))) AS DOUBLE)"
+
+  /** The five bivariate moment sums of columns x and y (sx, sy, sxx,
+    * syy, sxy), one indented select line each. */
+  val sqlXyMoments: String =
+    Seq("x" -> "sx", "y" -> "sy", "x * x" -> "sxx", "y * y" -> "syy", "x * y" -> "sxy")
+      .map { case (e, name) => s"    ${sqlMomentSum(e)} AS $name" }.mkString(",\n")
+
   // ------------------------------------------------------- paired longs
   // Exact decimal sums without decimal AGGREGATION buffers (r13h found
   // Spark's DECIMAL(38,12) sum path — JavaBigDecimal per row inside the

@@ -72,14 +72,21 @@ object SessionDefaults {
 
   /** On-disk bytes of `$sfDir/lineitem.parquet` — the tier probe.
     * Session-free (callers size the tier BEFORE building the session). */
-  def lineitemBytes(sfDir: String): Long = {
+  def lineitemBytes(sfDir: String): Long = lineitemSize(sfDir).getOrElse(0L)
+
+  private def lineitemSize(sfDir: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(s"$sfDir/lineitem.parquet")
     val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    if (fs.exists(p)) Some(fs.getContentSummary(p).getLength) else None
   }
 
-  /** The tier for a corpus directory. */
-  def forDir(sfDir: String): Tier = tierFor(lineitemBytes(sfDir))
+  /** The tier for a corpus directory. A directory without
+    * `lineitem.parquet` is not a corpus (a mistyped SPARK_GRAFT_SF_DIR,
+    * say): it fails here, before any session is built, rather than
+    * reading as the fixture tier and failing every query on its tables. */
+  def forDir(sfDir: String): Tier = tierFor(lineitemSize(sfDir).getOrElse(
+    throw new IllegalArgumentException(
+      s"corpus dir '$sfDir' has no lineitem.parquet; is the sf dir right?")))
 
   /** Apply a tier's confs to a session builder. */
   def configure(b: SparkSession.Builder, tier: Tier): SparkSession.Builder =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{QueryDef, Tables}
+import graft.{Canon, QueryDef, Tables}
 import graft.Canon.exactSum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -329,32 +329,36 @@ object Assoc {
   private val q164Cols =
     Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  private val q164Sql: String = {
-    val sums = (q164Cols.map(c =>
-      s"    CAST(SUM(CAST($c AS DECIMAL(38,12))) AS DOUBLE) AS s_$c") ++
-      q164Cols.map(c =>
-        s"    CAST(SUM(CAST($c * $c AS DECIMAL(38,12))) AS DOUBLE) AS ss_$c") ++
-      q164Cols.combinations(2).map { case Seq(a, b) =>
-        s"    CAST(SUM(CAST($a * $b AS DECIMAL(38,12))) AS DOUBLE) AS sp_${a}_$b"
-      }).mkString(",\n")
-    val pairSelects = q164Cols.combinations(2).map { case Seq(a, b) =>
-      s"""  SELECT g, '$a' AS col_x, '$b' AS col_y, n,
-         |    n * ss_$a - s_$a * s_$a AS dx, n * ss_$b - s_$b * s_$b AS dy,
-         |    n * sp_${a}_$b - s_$a * s_$b AS cov FROM m""".stripMargin
-    }.mkString("\nUNION ALL\n")
+  /** The `m` CTE's moment-sum select lines over [[q164Cols]] (s_, ss_
+    * and the pairwise sp_ sums), shared by the Pearson and Spearman
+    * oracles. */
+  private val q164SumsSql = (q164Cols.map(c => s"    ${Canon.sqlMomentSum(c)} AS s_$c") ++
+    q164Cols.map(c => s"    ${Canon.sqlMomentSum(s"$c * $c")} AS ss_$c") ++
+    q164Cols.combinations(2).map { case Seq(a, b) =>
+      s"    ${Canon.sqlMomentSum(s"$a * $b")} AS sp_${a}_$b"
+    }).mkString(",\n")
+
+  /** One (g, col_x, col_y, n, dx, dy, cov) select from `m` per column
+    * pair, UNION ALL-ed: the `p` CTE body of both matrix oracles. */
+  private val q164PairsSql = q164Cols.combinations(2).map { case Seq(a, b) =>
+    s"""  SELECT g, '$a' AS col_x, '$b' AS col_y, n,
+       |    n * ss_$a - s_$a * s_$a AS dx, n * ss_$b - s_$b * s_$b AS dy,
+       |    n * sp_${a}_$b - s_$a * s_$b AS cov FROM m""".stripMargin
+  }.mkString("\nUNION ALL\n")
+
+  private val q164Sql: String =
     s"""WITH m AS (
        |  SELECT l_returnflag AS g, CAST(COUNT(*) AS DOUBLE) AS n,
-       |$sums
+       |$q164SumsSql
        |  FROM lineitem
        |  WHERE ${q164Cols.map(c => s"$c IS NOT NULL").mkString(" AND ")}
        |  GROUP BY 1),
        |p AS (
-       |$pairSelects)
+       |$q164PairsSql)
        |SELECT g, col_x, col_y, CAST(n AS BIGINT) AS n,
        |  CASE WHEN dx * dy > 0 THEN ROUND(cov / SQRT(dx * dy), 9) END AS corr
        |FROM p
        |ORDER BY g ASC NULLS LAST, col_x ASC NULLS LAST, col_y ASC NULLS LAST""".stripMargin
-  }
 
   /** Q165: Cramér's V for three audited categorical pairs across three
     * tables — order status×priority, lineitem flag×status, document
@@ -439,18 +443,6 @@ object Assoc {
     }.mkString("\n    ")
     val rankedCols = q164Cols.zipWithIndex
       .map { case (c, i) => s"j$i.rnk AS $c" }.mkString(", ")
-    val sums = (q164Cols.map(c =>
-      s"    CAST(SUM(CAST($c AS DECIMAL(38,12))) AS DOUBLE) AS s_$c") ++
-      q164Cols.map(c =>
-        s"    CAST(SUM(CAST($c * $c AS DECIMAL(38,12))) AS DOUBLE) AS ss_$c") ++
-      q164Cols.combinations(2).map { case Seq(a, b) =>
-        s"    CAST(SUM(CAST($a * $b AS DECIMAL(38,12))) AS DOUBLE) AS sp_${a}_$b"
-      }).mkString(",\n")
-    val pairSelects = q164Cols.combinations(2).map { case Seq(a, b) =>
-      s"""  SELECT g, '$a' AS col_x, '$b' AS col_y, n,
-         |    n * ss_$a - s_$a * s_$a AS dx, n * ss_$b - s_$b * s_$b AS dy,
-         |    n * sp_${a}_$b - s_$a * s_$b AS cov FROM m""".stripMargin
-    }.mkString("\nUNION ALL\n")
     s"""WITH r AS (
        |  SELECT l_returnflag AS g, l_quantity, l_extendedprice,
        |    l_discount, l_tax FROM lineitem),
@@ -461,10 +453,10 @@ object Assoc {
        |    $joins),
        |m AS (
        |  SELECT g, CAST(COUNT(*) AS DOUBLE) AS n,
-       |$sums
+       |$q164SumsSql
        |  FROM ranked GROUP BY 1),
        |p AS (
-       |$pairSelects)
+       |$q164PairsSql)
        |SELECT g, col_x, col_y, CAST(n AS BIGINT) AS n,
        |  CASE WHEN dx * dy > 0 THEN ROUND(cov / SQRT(dx * dy), 9) END AS rho
        |FROM p

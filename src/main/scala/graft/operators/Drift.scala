@@ -134,6 +134,57 @@ object Drift {
       .orderBy(col("g").asc_nulls_last)
   }
 
+  // ---- oracle generators: the SQL twins of the fold helpers above,
+  // ---- each text pinned byte for byte by oracle-sql.tsv
+
+  /** The `base` CTE of a ≤1997 / 1998+ snapshot split of `table`:
+    * (g, period, `value`…) with g = `g` and period from `date`'s year. */
+  private def splitBaseSql(table: String, g: String, date: String,
+      value: String): String =
+    s"""base AS (
+       |  SELECT $g AS g,
+       |    CASE WHEN EXTRACT(year FROM $date) <= 1997 THEN 0 ELSE 1 END AS period,
+       |    $value
+       |  FROM $table)""".stripMargin
+
+  /** [[periodCounts]] and [[periodTotals]] in SQL: the `binned`
+    * (`key`…, ca, cb) CTE grouped on its first two columns over `from`,
+    * and the `tot` (g, na, nb) CTE of groups holding both periods. */
+  private def periodCountsSql(key: String, from: String): String =
+    s"""binned AS (
+       |  SELECT $key,
+       |    SUM(CASE WHEN period = 0 THEN 1 ELSE 0 END) AS ca,
+       |    SUM(CASE WHEN period = 1 THEN 1 ELSE 0 END) AS cb
+       |  FROM $from GROUP BY 1, 2),
+       |tot AS (
+       |  SELECT g, SUM(ca) AS na, SUM(cb) AS nb FROM binned GROUP BY g
+       |  HAVING SUM(ca) > 0 AND SUM(cb) > 0)""".stripMargin
+
+  /** [[periodRates]] and [[divergences]] in SQL: the `rates` CTE keyed
+    * by `key` (the text after `n.g, `, up to `t.na`) and the `agg` CTE
+    * with `extra` select lines after n_b. */
+  private def divergencesSql(key: String, extra: String): String =
+    s"""rates AS (
+       |  SELECT n.g, $key t.na, t.nb,
+       |    CAST(n.ca AS DOUBLE) / CAST(t.na AS DOUBLE) AS pa,
+       |    CAST(n.cb AS DOUBLE) / CAST(t.nb AS DOUBLE) AS pb,
+       |    ABS(CAST(n.ca AS DOUBLE) / CAST(t.na AS DOUBLE)
+       |      - CAST(n.cb AS DOUBLE) / CAST(t.nb AS DOUBLE)) AS d
+       |  FROM binned n JOIN tot t USING (g)),
+       |agg AS (
+       |  SELECT g, CAST(MIN(na) AS BIGINT) AS n_a, CAST(MIN(nb) AS BIGINT) AS n_b,$extra
+       |    ROUND(0.5::DOUBLE * CAST(SUM(CAST(d AS DECIMAL(38,12))) AS DOUBLE), 6) AS tvd,
+       |    ROUND(CAST(SUM(CAST((pa - pb) * (pa - pb) / (pa + pb)
+       |      AS DECIMAL(38,12))) AS DOUBLE), 6) AS chi2
+       |  FROM rates GROUP BY g)""".stripMargin
+
+  /** q153 and q157's shared prefix: the ≤1997 / 1998+ price split of
+    * lineitem, its per-group `rng` and the binned period counts. */
+  private val priceHistSql =
+    s"""${splitBaseSql("lineitem", "l_returnflag", "l_shipdate", "l_extendedprice AS x")},
+       |rng AS (SELECT g, MIN(x) AS lo, MAX(x) AS hi FROM base GROUP BY g),
+       |${periodCountsSql(s"b.g, ${RobustStats.binSqlOf("b.x")} AS bin", "base b JOIN rng USING (g)")}""".stripMargin
+
   /** Q154: order-priority-mix drift per order status between the ≤1997
     * / 1998+ order snapshots — "did the source composition move". */
   private def q154(s: SparkSession, dir: String): DataFrame =
@@ -143,33 +194,9 @@ object Drift {
         col("o_orderpriority").as("cat")))
 
   private val q154Sql =
-    s"""WITH base AS (
-       |  SELECT o_orderstatus AS g,
-       |    CASE WHEN EXTRACT(year FROM o_orderdate) <= 1997 THEN 0 ELSE 1 END AS period,
-       |    o_orderpriority AS cat
-       |  FROM orders),
-       |binned AS (
-       |  SELECT g, cat,
-       |    SUM(CASE WHEN period = 0 THEN 1 ELSE 0 END) AS ca,
-       |    SUM(CASE WHEN period = 1 THEN 1 ELSE 0 END) AS cb
-       |  FROM base GROUP BY 1, 2),
-       |tot AS (
-       |  SELECT g, SUM(ca) AS na, SUM(cb) AS nb FROM binned GROUP BY g
-       |  HAVING SUM(ca) > 0 AND SUM(cb) > 0),
-       |rates AS (
-       |  SELECT n.g, n.cat, t.na, t.nb,
-       |    CAST(n.ca AS DOUBLE) / CAST(t.na AS DOUBLE) AS pa,
-       |    CAST(n.cb AS DOUBLE) / CAST(t.nb AS DOUBLE) AS pb,
-       |    ABS(CAST(n.ca AS DOUBLE) / CAST(t.na AS DOUBLE)
-       |      - CAST(n.cb AS DOUBLE) / CAST(t.nb AS DOUBLE)) AS d
-       |  FROM binned n JOIN tot t USING (g)),
-       |agg AS (
-       |  SELECT g, CAST(MIN(na) AS BIGINT) AS n_a, CAST(MIN(nb) AS BIGINT) AS n_b,
-       |    COUNT(*) AS n_cats,
-       |    ROUND(0.5::DOUBLE * CAST(SUM(CAST(d AS DECIMAL(38,12))) AS DOUBLE), 6) AS tvd,
-       |    ROUND(CAST(SUM(CAST((pa - pb) * (pa - pb) / (pa + pb)
-       |      AS DECIMAL(38,12))) AS DOUBLE), 6) AS chi2
-       |  FROM rates GROUP BY g),
+    s"""WITH ${splitBaseSql("orders", "o_orderstatus", "o_orderdate", "o_orderpriority AS cat")},
+       |${periodCountsSql("g, cat", "base")},
+       |${divergencesSql("n.cat,", "\n    COUNT(*) AS n_cats,")},
        |peak AS (
        |  SELECT g, cat AS drift_cat, ROUND(d, 6) AS drift_d
        |  FROM (
@@ -186,40 +213,19 @@ object Drift {
     * 1995–2001, so this splits the corpus near its middle) — the "new
     * crawl landed, did prices move" monitor shape. */
   private def q153(s: SparkSession, dir: String): DataFrame =
-    histDrift(Tables.t(s, dir, "lineitem")
+    histDrift(priceSplit(s, dir))
+
+  /** The (g, period, x) split q153 and q157 compare: l_extendedprice per
+    * return flag, ≤1997 shipments against 1998+. */
+  private def priceSplit(s: SparkSession, dir: String): DataFrame =
+    Tables.t(s, dir, "lineitem")
       .select(col("l_returnflag").as("g"),
         when(year(col("l_shipdate")) <= 1997, 0).otherwise(1).as("period"),
-        col("l_extendedprice").as("x")))
+        col("l_extendedprice").as("x"))
 
-  private val q153Sql = {
-    val binX = RobustStats.binSqlOf("b.x")
-    s"""WITH base AS (
-       |  SELECT l_returnflag AS g,
-       |    CASE WHEN EXTRACT(year FROM l_shipdate) <= 1997 THEN 0 ELSE 1 END AS period,
-       |    l_extendedprice AS x
-       |  FROM lineitem),
-       |rng AS (SELECT g, MIN(x) AS lo, MAX(x) AS hi FROM base GROUP BY g),
-       |binned AS (
-       |  SELECT b.g, $binX AS bin,
-       |    SUM(CASE WHEN period = 0 THEN 1 ELSE 0 END) AS ca,
-       |    SUM(CASE WHEN period = 1 THEN 1 ELSE 0 END) AS cb
-       |  FROM base b JOIN rng USING (g) GROUP BY 1, 2),
-       |tot AS (
-       |  SELECT g, SUM(ca) AS na, SUM(cb) AS nb FROM binned GROUP BY g
-       |  HAVING SUM(ca) > 0 AND SUM(cb) > 0),
-       |rates AS (
-       |  SELECT n.g, n.bin,  t.na, t.nb,
-       |    CAST(n.ca AS DOUBLE) / CAST(t.na AS DOUBLE) AS pa,
-       |    CAST(n.cb AS DOUBLE) / CAST(t.nb AS DOUBLE) AS pb,
-       |    ABS(CAST(n.ca AS DOUBLE) / CAST(t.na AS DOUBLE)
-       |      - CAST(n.cb AS DOUBLE) / CAST(t.nb AS DOUBLE)) AS d
-       |  FROM binned n JOIN tot t USING (g)),
-       |agg AS (
-       |  SELECT g, CAST(MIN(na) AS BIGINT) AS n_a, CAST(MIN(nb) AS BIGINT) AS n_b,
-       |    ROUND(0.5::DOUBLE * CAST(SUM(CAST(d AS DECIMAL(38,12))) AS DOUBLE), 6) AS tvd,
-       |    ROUND(CAST(SUM(CAST((pa - pb) * (pa - pb) / (pa + pb)
-       |      AS DECIMAL(38,12))) AS DOUBLE), 6) AS chi2
-       |  FROM rates GROUP BY g),
+  private val q153Sql =
+    s"""WITH $priceHistSql,
+       |${divergencesSql("n.bin, ", "")},
        |peak AS (
        |  SELECT g, ROUND(lo + (hi - lo) / ${B}.0 * CAST(bin AS DOUBLE), 6) AS drift_at
        |  FROM (
@@ -230,7 +236,6 @@ object Drift {
        |SELECT a.g, a.n_a, a.n_b, a.tvd, a.chi2, p.drift_at
        |FROM agg a JOIN peak p USING (g)
        |ORDER BY g ASC NULLS LAST""".stripMargin
-  }
 
   /** PUBLIC API — DRIFT TIME SERIES of a (g, bucket, x) frame: TVD
     * between every pair of CONSECUTIVE buckets (bucket = integer time
@@ -364,27 +369,10 @@ object Drift {
   /** Q157: the KS statistic for the same ≤1997 / 1998+ price split as
     * q153 — the supremum-gap companion to its integrated TVD. */
   private def q157(s: SparkSession, dir: String): DataFrame =
-    ksTest(Tables.t(s, dir, "lineitem")
-      .select(col("l_returnflag").as("g"),
-        when(year(col("l_shipdate")) <= 1997, 0).otherwise(1).as("period"),
-        col("l_extendedprice").as("x")))
+    ksTest(priceSplit(s, dir))
 
-  private val q157Sql = {
-    val binX = RobustStats.binSqlOf("b.x")
-    s"""WITH base AS (
-       |  SELECT l_returnflag AS g,
-       |    CASE WHEN EXTRACT(year FROM l_shipdate) <= 1997 THEN 0 ELSE 1 END AS period,
-       |    l_extendedprice AS x
-       |  FROM lineitem),
-       |rng AS (SELECT g, MIN(x) AS lo, MAX(x) AS hi FROM base GROUP BY g),
-       |binned AS (
-       |  SELECT b.g, $binX AS bin,
-       |    SUM(CASE WHEN period = 0 THEN 1 ELSE 0 END) AS ca,
-       |    SUM(CASE WHEN period = 1 THEN 1 ELSE 0 END) AS cb
-       |  FROM base b JOIN rng USING (g) GROUP BY 1, 2),
-       |tot AS (
-       |  SELECT g, SUM(ca) AS na, SUM(cb) AS nb FROM binned GROUP BY g
-       |  HAVING SUM(ca) > 0 AND SUM(cb) > 0),
+  private val q157Sql =
+    s"""WITH $priceHistSql,
        |gaps AS (
        |  SELECT n.g, n.bin, t.na, t.nb,
        |    ABS(CAST(SUM(n.ca) OVER w AS DOUBLE) / CAST(t.na AS DOUBLE)
@@ -400,7 +388,6 @@ object Drift {
        |  FROM gaps) gp JOIN rng r USING (g)
        |WHERE gp.rk = 1
        |ORDER BY g ASC NULLS LAST""".stripMargin
-  }
 
   def defs: Seq[QueryDef] = Seq(
     QueryDef("q153_dist_drift", q153, Some(q153Sql)),

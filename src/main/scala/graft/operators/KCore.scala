@@ -54,21 +54,28 @@ object KCore {
     var stable = false
     var r = 0
     while (!stable && r < rounds) {
-      val deg = und.select(col("u").as("id"))
-        .unionAll(und.select(col("v").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-        .where(col("d") >= k)
-      und = und
-        .join(deg.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(deg.select(col("id").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(false)
+      und = peel(und, k)
       val cur = und.count()
       stable = cur == prev
       prev = cur
       r += 1
     }
     und
+  }
+
+  /** One peel round over the (u, v) edge list: the edges whose two
+    * endpoints both have degree ≥ k, lazily checkpointed so the round's
+    * one action finalizes it. */
+  private def peel(und: DataFrame, k: Int): DataFrame = {
+    val deg = und.select(col("u").as("id"))
+      .unionAll(und.select(col("v").as("id")))
+      .groupBy(col("id")).agg(count(lit(1)).as("d"))
+      .where(col("d") >= k)
+    und
+      .join(deg.select(col("id").as("u")), Seq("u"), "left_semi")
+      .join(deg.select(col("id").as("v")), Seq("v"), "left_semi")
+      .select(col("u"), col("v"))
+      .localCheckpoint(false)
   }
 
   /** Q133: the 8-round peel trajectory of the 1996 co-purchase graph
@@ -87,15 +94,7 @@ object KCore {
       .localCheckpoint()
     val traj = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
     for (r <- 1 to Rounds) {
-      val deg = und.select(col("u").as("id"))
-        .unionAll(und.select(col("v").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-        .where(col("d") >= K)
-      und = und
-        .join(deg.select(col("id").as("u")), Seq("u"), "left_semi")
-        .join(deg.select(col("id").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .localCheckpoint(false)
+      und = peel(und, K)
       // r16 job-count pass: ONE action per round — the endpoint explode
       // counts nodes (distinct) and edges (rows/2, exact: every u<v
       // edge contributes exactly two endpoint rows) while the same job

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import graft.Canon.exactSum
+import graft.Canon.{exactSum, sqlXyMoments}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -104,17 +104,13 @@ object Ols {
       pairedScales = Some((2, 4)))
 
   private val q147Sql =
-    """WITH b AS (
+    s"""WITH b AS (
       |  SELECT l_returnflag AS g, l_extendedprice AS x,
       |    l_extendedprice * (1.0 - l_discount) AS y
       |  FROM lineitem),
       |m AS (
       |  SELECT g, CAST(COUNT(*) AS DOUBLE) AS n,
-      |    CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-      |    CAST(SUM(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-      |    CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-      |    CAST(SUM(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy,
-      |    CAST(SUM(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy
+      |$sqlXyMoments
       |  FROM b GROUP BY 1),
       |d AS (
       |  SELECT g, n, sx, sy,

@@ -188,7 +188,6 @@ object Pq {
   def annIvfPqTopK(s: SparkSession, corpus: DataFrame, queryPred:
       org.apache.spark.sql.Column, k: Int = K, nCentroids: Int = 16,
       nProbe: Int = 10): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = corpus.select(col("vec_id"), col("embedding"))
     val cent = Similarity.trainIvfCentroids(s,
       Similarity.trainSample(e, nCentroids), nCentroids)
@@ -197,18 +196,9 @@ object Pq {
     val (_, cb) = trainedOn(s, e)
     val recon = reconstruct(encode(e, cb), cb)
     val probes = Similarity.probeLists(s, cent, e.where(queryPred), nProbe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc_nulls_last, col("vec_id").asc_nulls_last)
-    assigned.join(recon, "vec_id")
+    Similarity.topKByCos(Similarity.cosScored(s, assigned.join(recon, "vec_id")
       .join(broadcast(probes), Seq("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        graft.functions.VectorOps.cosineFast(s, "q_emb", "embedding").as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 9).as("cos"))
-      .orderBy(col("q_id").asc_nulls_last, col("rank").asc_nulls_last)
+      .where(col("vec_id") =!= col("q_id"))), k)
   }
 
   // q102's IVF half: annIvfPqTopK's defaults — MUST match both the Spark
@@ -251,12 +241,7 @@ object Pq {
        |  FROM afull a
        |    JOIN probes p ON a.c_id = p.c_id AND a.vec_id <> p.q_id
        |    JOIN recon r ON a.vec_id = r.vec_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos, ROW_NUMBER() OVER (PARTITION BY q_id
-       |    ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS LAST) AS rank
-       |  FROM scored)
-       |SELECT q_id, rank, vec_id, round(cos, 9) AS cos FROM ranked WHERE rank <= $K
-       |ORDER BY q_id ASC NULLS LAST, rank ASC NULLS LAST""".stripMargin
+       |${Similarity.topKByCosSql(K)}""".stripMargin
 
   // ---- chained-CTE SQL replay (the kmeansChainSql discipline, keyed
   // ---- by subspace so 8 codebooks train in the same CTE rounds) ------
@@ -334,12 +319,7 @@ object Pq {
        |scored AS (
        |  SELECT q.q_id, e.vec_id, ${VectorSql.cosine("q.q_emb", "e.embedding")} AS cos
        |  FROM recon e JOIN q ON e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos, ROW_NUMBER() OVER (PARTITION BY q_id
-       |    ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS LAST) AS rank
-       |  FROM scored)
-       |SELECT q_id, rank, vec_id, round(cos, 9) AS cos FROM ranked WHERE rank <= $K
-       |ORDER BY q_id ASC NULLS LAST, rank ASC NULLS LAST""".stripMargin
+       |${Similarity.topKByCosSql(K)}""".stripMargin
 
   def defs: Seq[QueryDef] = Seq(
     QueryDef("q98_pq_codes", q98codes, Some(q98codesSql)),

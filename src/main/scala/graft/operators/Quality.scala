@@ -25,6 +25,16 @@ object Quality {
 
   private val stopwords = Seq("the", "a", "of", "and")
 
+  /** `docs` with its space-split tokens `s` and their adjacent-token
+    * bigrams `bg` ("a b"; empty below two tokens). */
+  private def withBigrams(docs: DataFrame, textCol: String): DataFrame =
+    docs.withColumn("s", split(col(textCol), " "))
+      .withColumn("bg",
+        when(size(col("s")) < 2, array().cast("array<string>"))
+          .otherwise(expr(
+            "transform(sequence(1, size(s) - 1)," +
+              " i -> concat(element_at(s, i), ' ', element_at(s, i + 1)))")))
+
   /** PUBLIC API — per-document quality metrics + pass flags over
     * (doc_id, text). Thresholds follow the Gopher rules scaled to the
     * fixture's short synthetic docs. */
@@ -37,12 +47,7 @@ object Quality {
       .agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id")).agg(max(col("c")).as("max_tok_c"))
 
-    val d = docs.withColumn("s", split(col("text"), " "))
-      .withColumn("bg",
-        when(size(col("s")) < 2, array().cast("array<string>"))
-          .otherwise(expr(
-            "transform(sequence(1, size(s) - 1)," +
-              " i -> concat(element_at(s, i), ' ', element_at(s, i + 1)))")))
+    val d = withBigrams(docs, "text")
       .select(
         col("doc_id"),
         size(col("s")).cast("long").as("n_tokens"),
@@ -89,12 +94,7 @@ object Quality {
     val wExpr = (c: String) =>
       s"aggregate($c, 0L, (a, x) -> " +
         "a + ((cast(conv(substr(md5(x), 1, 6), 16, 10) as bigint) % 1001) - 500))"
-    docs.withColumn("s", split(col(textCol), " "))
-      .withColumn("bg",
-        when(size(col("s")) < 2, array().cast("array<string>"))
-          .otherwise(expr(
-            "transform(sequence(1, size(s) - 1)," +
-              " i -> concat(element_at(s, i), ' ', element_at(s, i + 1)))")))
+    withBigrams(docs, textCol)
       .select(
         col("doc_id") +: carry.map(col) :+
           (size(col("s")) + size(col("bg"))).cast("long").as("n_feats") :+

@@ -34,10 +34,15 @@ object Relational {
   /** Q01 parquet scan + projection + filter (pushdown verified in
     * RelationalSpec via the physical plan's PushedFilters). */
   private def q01(s: SparkSession, dir: String): DataFrame =
+    q01rows(s, dir)
+      .orderBy(col("l_orderkey").asc_nulls_last, col("l_quantity").asc_nulls_last)
+
+  /** Q01's filtered projection without its output sort, for callers that
+    * only count what they read back. */
+  private def q01rows(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"))
       .where(col("l_quantity") > 30)
-      .orderBy(col("l_orderkey").asc_nulls_last, col("l_quantity").asc_nulls_last)
 
   private val q01Sql =
     """SELECT l_orderkey, l_quantity FROM lineitem WHERE l_quantity > 30
@@ -49,7 +54,7 @@ object Relational {
     // fresh dir per invocation: concurrent runs (or a parallel bench)
     // must not race on a shared overwrite path
     val out = TempDirs.createTempDirectory("graft_sink_q02")
-    q01(s, dir).write.mode("overwrite").parquet(out)
+    q01rows(s, dir).write.mode("overwrite").parquet(out)
     Tables.parquet(s, out).agg(count(lit(1)).as("n"))
   }
 

@@ -27,13 +27,24 @@ import org.apache.spark.sql.functions._
   * expressions — DuckDB replays both to the rounded digit. */
 object Richness {
 
+  /** Per-(g, tok) token counts c of a (g, text) frame, tokens split on
+    * single spaces. [[tokcSql]] is its oracle twin over documents. */
+  private def tokenCounts(base: DataFrame): DataFrame =
+    base.select(col("g"), explode(split(col("text"), " ")).as("tok"))
+      .groupBy(col("g"), col("tok")).agg(count(lit(1)).as("c"))
+
+  /** [[tokenCounts]] of documents per language, as the `tokc` CTE. */
+  private val tokcSql =
+    """tokc AS (
+      |  SELECT g, tok, COUNT(*) AS c FROM (
+      |    SELECT lang AS g, unnest(string_split(text, ' ')) AS tok
+      |    FROM documents) t
+      |  GROUP BY 1, 2)""".stripMargin
+
   /** PUBLIC API — per-group (g, text) → (g, d_obs, n_tok, f1, f2,
     * chao1, coverage). */
-  def vocabRichness(base: DataFrame): DataFrame = {
-    val tokc = base
-      .select(col("g"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("g"), col("tok")).agg(count(lit(1)).as("c"))
-    tokc.groupBy(col("g"))
+  def vocabRichness(base: DataFrame): DataFrame =
+    tokenCounts(base).groupBy(col("g"))
       .agg(count(lit(1)).as("d_obs"),
         sum(col("c")).as("n_tok"),
         sum(when(col("c") === 1, 1L).otherwise(0L)).as("f1"),
@@ -45,7 +56,6 @@ object Richness {
         round(lit(1.0) - col("f1").cast("double") / col("n_tok").cast("double"), 6)
           .as("coverage"))
       .orderBy(col("g").asc_nulls_last)
-  }
 
   /** Q159: vocabulary richness of the documents corpus per language. */
   private def q159(s: SparkSession, dir: String): DataFrame =
@@ -53,11 +63,7 @@ object Richness {
       .select(col("lang").as("g"), col("text")))
 
   private val q159Sql =
-    s"""WITH tokc AS (
-       |  SELECT g, tok, COUNT(*) AS c FROM (
-       |    SELECT lang AS g, unnest(string_split(text, ' ')) AS tok
-       |    FROM documents) t
-       |  GROUP BY 1, 2),
+    s"""WITH $tokcSql,
        |ff AS (
        |  SELECT g, COUNT(*) AS d_obs, CAST(SUM(c) AS BIGINT) AS n_tok,
        |    CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
@@ -84,11 +90,8 @@ object Richness {
     * Exactness: Σc² accumulates DECIMAL(19,0)×(19,0) → (38,0) products
     * (no long overflow at any count), so both engines fold exact
     * integers; the two divisions are one shared double tree. */
-  def vocabDiversity(base: DataFrame): DataFrame = {
-    val tokc = base
-      .select(col("g"), explode(split(col("text"), " ")).as("tok"))
-      .groupBy(col("g"), col("tok")).agg(count(lit(1)).as("c"))
-    tokc.groupBy(col("g"))
+  def vocabDiversity(base: DataFrame): DataFrame =
+    tokenCounts(base).groupBy(col("g"))
       .agg(count(lit(1)).as("d_obs"),
         sum(col("c")).as("n_tok"),
         sum(col("c").cast("decimal(19,0)") * col("c").cast("decimal(19,0)"))
@@ -100,7 +103,6 @@ object Richness {
         round(col("c_top").cast("double") / col("n_tok").cast("double"), 6)
           .as("top_share"))
       .orderBy(col("g").asc_nulls_last)
-  }
 
   /** Q162: effective vocabulary size of the documents corpus per
     * language — q159's concentration-side companion. */
@@ -109,11 +111,7 @@ object Richness {
       .select(col("lang").as("g"), col("text")))
 
   private val q162Sql =
-    s"""WITH tokc AS (
-       |  SELECT g, tok, COUNT(*) AS c FROM (
-       |    SELECT lang AS g, unnest(string_split(text, ' ')) AS tok
-       |    FROM documents) t
-       |  GROUP BY 1, 2),
+    s"""WITH $tokcSql,
        |ff AS (
        |  SELECT g, COUNT(*) AS d_obs, CAST(SUM(c) AS BIGINT) AS n_tok,
        |    SUM(CAST(c AS DECIMAL(19,0)) * CAST(c AS DECIMAL(19,0))) AS s2,

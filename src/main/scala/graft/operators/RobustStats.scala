@@ -480,6 +480,23 @@ object RobustStats {
     base.withColumn("pr", percent_rank().over(w))
   }
 
+  /** `rows` (carrying their group's lo, hi, w and n) in their [[binOf]]
+    * bin with the sketch-CDF rank pr = (cum_before + cnt·frac) / n from
+    * `hist`'s (g, bin, cnt, cum_before), frac being the row's linear
+    * position inside its bin (1 in a degenerate hi = lo group). */
+  private def sketchCdf(rows: DataFrame, hist: DataFrame): DataFrame =
+    rows.withColumn("bin", binOf)
+      .join(broadcast(hist.select(col("g"), col("bin"), col("cnt"),
+        col("cum_before"))), Seq("g", "bin"))
+      .withColumn("frac",
+        when(col("hi") === col("lo"), lit(1.0))
+          .otherwise(least(
+            (col("x") - col("lo")) / col("w") - col("bin").cast("double"),
+            lit(1.0))))
+      .withColumn("pr",
+        (col("cum_before").cast("double") +
+          col("cnt").cast("double") * col("frac")) / col("n").cast("double"))
+
   /** PUBLIC API — sketch-CDF quantile transform: x → F̂(x) from the
     * mergeable histogram (cum_before + within-bin linear mass) — a
     * map-only pass after two bins-sized aggregates, the 100 TB shape.
@@ -495,19 +512,8 @@ object RobustStats {
       .select(col("g"), col("bin"), col("cnt"), col("cum_before"),
         col("lo"), col("hi"), col("w"), col("n"))
       .localCheckpoint(false)
-    base.join(broadcast(hist.select(col("g"), col("lo"), col("hi"),
-        col("w"), col("n")).distinct()), Seq("g"))
-      .withColumn("bin", binOf)
-      .join(broadcast(hist.select(col("g"), col("bin"), col("cnt"),
-        col("cum_before"))), Seq("g", "bin"))
-      .withColumn("frac",
-        when(col("hi") === col("lo"), lit(1.0))
-          .otherwise(least(
-            (col("x") - col("lo")) / col("w") - col("bin").cast("double"),
-            lit(1.0))))
-      .withColumn("pr",
-        (col("cum_before").cast("double") +
-          col("cnt").cast("double") * col("frac")) / col("n").cast("double"))
+    sketchCdf(base.join(broadcast(hist.select(col("g"), col("lo"), col("hi"),
+        col("w"), col("n")).distinct()), Seq("g")), hist)
   }
 
   /** Q126: quantile transform — the SKETCH-CDF default: x → F̂(x), then
@@ -584,7 +590,13 @@ object RobustStats {
     * Default None keeps decimal aggregation for arbitrary inputs. */
   def profile(s: SparkSession, base: DataFrame,
       pairedScale: Option[Int] = None): DataFrame = {
-    val rng = rangeOf(base).localCheckpoint(false) // ----------------- scan 1
+    // rng, hist and cells are checkpointed EAGERLY: each feeds several
+    // broadcasts or stages of one plan, which AQE submits as concurrent
+    // jobs, and a lazy checkpoint is then computed by each of them; once
+    // the first finishes, its lineage (and the SQL metrics in it) is
+    // released, so the later job's task reports to accumulators that no
+    // longer exist and its metrics drop out of the query's record
+    val rng = rangeOf(base).localCheckpoint() // ---------------------- scan 1
     val wc = Window.partitionBy(col("g")).orderBy(col("bin").asc_nulls_last)
     val (sxAggs, sx) =
       graft.Canon.exactDecimalSum(col("x"), "sx", "decimal(38,12)", pairedScale)
@@ -600,7 +612,7 @@ object RobustStats {
         (sum(col("sx")).over(wc) - col("sx")).cast("double"))
       .join(broadcast(rng), Seq("g"))
       .withColumn("w", widthCol)
-      .localCheckpoint(false)
+      .localCheckpoint()
     // quantile pivot, Gini fold, and the per-group profile frame: all
     // bins-sized lineage over the two checkpointed frames
     val pv = sketchQuantiles(s, hist, Seq(0.05, 0.5, 0.9, 0.95, 0.99))
@@ -624,16 +636,7 @@ object RobustStats {
       .withColumn("dmax",
         greatest(col("hi") - col("med"), col("med") - col("lo")))
       .withColumn("dw", col("dmax") / lit(B.toDouble))
-    val rows = base.join(broadcast(prof), Seq("g")) // ----------- scan 3
-      .withColumn("bin", binOf)
-      .join(broadcast(hist.select(col("g"), col("bin"), col("cnt"),
-        col("cum_before"))), Seq("g", "bin"))
-      .withColumn("frac",
-        when(col("hi") === col("lo"), lit(1.0))
-          .otherwise(least((col("x") - col("lo")) / col("w")
-            - col("bin").cast("double"), lit(1.0))))
-      .withColumn("pr", (col("cum_before").cast("double") +
-        col("cnt").cast("double") * col("frac")) / col("n").cast("double"))
+    val rows = sketchCdf(base.join(broadcast(prof), Seq("g")), hist) // scan 3
       .withColumn("decile", least(floor(col("pr") * 10).cast("int"), lit(9)))
       .withColumn("dev", abs(col("x") - col("med")))
       .withColumn("dbin", when(col("dw") <= 0.0, lit(0))
@@ -652,7 +655,7 @@ object RobustStats {
           sum(when(col("x") > col("p_hi"), 1L).otherwise(0L)).as("c_hi"),
           min(col("n")).as("n")) ++ scapAggs): _*)
       .withColumn("scap", scap)
-      .localCheckpoint(false)
+      .localCheckpoint()
     val decdev = cells.groupBy(col("g"), col("decile"))
       .agg(sum(col("cnt")).as("dcnt"), min(col("n")).as("n"))
       .groupBy(col("g"))

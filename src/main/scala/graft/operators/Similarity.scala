@@ -29,20 +29,54 @@ object Similarity {
     * the k nearest corpus rows (vec_id, embedding) by cosine, ties
     * broken by vec_id. Queries broadcast; corpus stays partitioned. */
   def annBruteTopK(s: SparkSession, corpus: DataFrame, queries: DataFrame,
-      k: Int = K): DataFrame = {
+      k: Int = K): DataFrame =
+    topKByCos(cosScored(s, corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))), k)
+
+  /** The (q_id, vec_id, cos) rows of candidate pairs carrying `q_emb`
+    * and `embedding`, scored by the codegen cosine. */
+  private[operators] def cosScored(s: SparkSession, pairs: DataFrame): DataFrame =
+    pairs.select(col("q_id"), col("vec_id"),
+      VectorOps.cosineFast(s, "q_emb", "embedding").as("cos"))
+
+  /** The ANN top-k tail every ranker shares: per query, the `k` best
+    * (q_id, vec_id, cos) rows by cosine, ties to the lower vec_id, as
+    * (q_id, rank, vec_id, cos). cos is rounded to 9 dp: DuckDB's
+    * decorrelated dot subqueries aggregate in parallel, so the oracle's
+    * last ulp can shift under load. [[topKByCosSql]] is its oracle twin. */
+  private[operators] def topKByCos(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc_nulls_last, col("vec_id").asc_nulls_last)
-    corpus.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        VectorOps.cosineFast(s, "q_emb", "embedding").as("cos"))
-      .withColumn("rank", row_number().over(w))
+    scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
-      // 9-dp rounding: DuckDB's decorrelated dot subqueries aggregate in
-      // parallel, so the oracle's last ulp can shift under load
       .select(col("q_id"), col("rank"), col("vec_id"),
         round(col("cos"), 9).as("cos"))
       .orderBy(col("q_id").asc_nulls_last, col("rank").asc_nulls_last)
   }
+
+  /** [[topKByCos]] in DuckDB SQL over a `scored` (q_id, vec_id, cos)
+    * CTE: the `ranked` CTE and the final select. */
+  private[operators] def topKByCosSql(k: Int): String =
+    s"""ranked AS (
+       |  SELECT q_id, vec_id, cos, ROW_NUMBER() OVER (PARTITION BY q_id
+       |    ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS LAST) AS rank
+       |  FROM scored)
+       |SELECT q_id, rank, vec_id, round(cos, 9) AS cos FROM ranked WHERE rank <= $k
+       |ORDER BY q_id ASC NULLS LAST, rank ASC NULLS LAST""".stripMargin
+
+  /** The per-query candidate digest of the ANN candidate twins over
+    * (q_id, vec_id) pairs: count, sum, min and max of the candidate
+    * ids. [[candidateSummarySql]] is its oracle twin. */
+  private def candidateSummary(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("q_id"))
+      .agg(count(lit(1)).as("n_cands"), sum(col("vec_id")).as("sum_cand"),
+        min(col("vec_id")).as("min_cand"), max(col("vec_id")).as("max_cand"))
+      .orderBy(col("q_id").asc_nulls_last)
+
+  /** [[candidateSummary]] in DuckDB SQL over a `cand` (q_id, vec_id) CTE. */
+  private val candidateSummarySql =
+    """SELECT q_id, COUNT(*) AS n_cands, CAST(SUM(vec_id) AS BIGINT) AS sum_cand,
+      |  MIN(vec_id) AS min_cand, MAX(vec_id) AS max_cand
+      |FROM cand GROUP BY q_id ORDER BY q_id ASC NULLS LAST""".stripMargin
 
   /** Brute-force exact ANN: top-5 cosine neighbours for each of the 10
     * query vectors (vec_id < 10), ties broken by vec_id. */
@@ -58,12 +92,7 @@ object Similarity {
        |scored AS (
        |  SELECT q.q_id, e.vec_id, ${VectorSql.cosine("q.q_emb", "e.embedding")} AS cos
        |  FROM embeddings e JOIN q ON e.vec_id <> q.q_id),
-       |ranked AS (
-       |  SELECT q_id, vec_id, cos, ROW_NUMBER() OVER (PARTITION BY q_id
-       |    ORDER BY cos DESC NULLS LAST, vec_id ASC NULLS LAST) AS rank
-       |  FROM scored)
-       |SELECT q_id, rank, vec_id, round(cos, 9) AS cos FROM ranked WHERE rank <= $K
-       |ORDER BY q_id ASC NULLS LAST, rank ASC NULLS LAST""".stripMargin
+       |${topKByCosSql(K)}""".stripMargin
 
   /** Deterministic pseudo-random hyperplane component for (plane, dim):
     * md5-derived integer mapped to [-1000, 1000] (canonical impl lives
@@ -178,22 +207,13 @@ object Similarity {
     val queries = lshIndexed(e.where(queryPred), nTables, bitsPerTable, nProbeBits)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         col("tbl"), col("bucket"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc_nulls_last, col("vec_id").asc_nulls_last)
     // cos is computed BEFORE the multi-table dedup so the distinct
     // shuffles three scalars per candidate, not two 64-float arrays;
     // recomputing the codegen cosine per colliding table is cheaper than
     // shipping the vectors.
-    indexedCorpus.join(broadcast(queries), Seq("tbl", "bucket"))
+    val pairs = indexedCorpus.join(broadcast(queries), Seq("tbl", "bucket"))
       .where(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        VectorOps.cosineFast(s, "q_emb", "embedding").as("cos"))
-      .distinct() // a pair may collide in several tables
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 9).as("cos"))
-      .orderBy(col("q_id").asc_nulls_last, col("rank").asc_nulls_last)
+    topKByCos(cosScored(s, pairs).distinct(), k) // a pair may collide in several tables
   }
 
   // bucket width elected from the corpus count (a 1-row eager count
@@ -222,13 +242,9 @@ object Similarity {
       .select(col("vec_id"), col("tbl"), col("bucket"))
     val qs = lshIndexed(e.where(queryPred), nTables, bitsPerTable, nProbeBits)
       .select(col("vec_id").as("q_id"), col("tbl"), col("bucket"))
-    idx.join(broadcast(qs), Seq("tbl", "bucket"))
+    candidateSummary(idx.join(broadcast(qs), Seq("tbl", "bucket"))
       .where(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id")).distinct()
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_cands"), sum(col("vec_id")).as("sum_cand"),
-        min(col("vec_id")).as("min_cand"), max(col("vec_id")).as("max_cand"))
-      .orderBy(col("q_id").asc_nulls_last)
+      .select(col("q_id"), col("vec_id")).distinct())
   }
 
   private def q29lshCands(s: SparkSession, dir: String): DataFrame =
@@ -249,22 +265,30 @@ object Similarity {
       bitsPerTable = lshElectedBits(e.count()))
   }
 
-  private def q29lshScaledSql: String = {
+  /** The oracles' `e` CTE: each embedding with its `bits`-wide bucket
+    * per table as `bk0`…, replayed from the SAME inlined integer plane
+    * constants (table t's bucket reads planes t·MaxBitsPerTable + i). */
+  private def bucketedSql(bits: Int): String = {
     def planeDot(p: Int): String =
       (0 until VectorSql.Dim).map(d =>
         s"CAST(embedding[${d + 1}] AS DOUBLE)*${planeComponent(p, d).toInt}")
         .mkString(" + ")
-    def bucket12(t: Int): String =
-      (0 until MaxBitsPerTable).map(i =>
-        s"(CASE WHEN (${planeDot(t * MaxBitsPerTable + i)}) >= 0 THEN ${1L << (MaxBitsPerTable - 1 - i)} ELSE 0 END)")
+    def bucket(t: Int): String =
+      (0 until bits).map(i =>
+        s"(CASE WHEN (${planeDot(t * MaxBitsPerTable + i)}) >= 0 THEN ${1L << (bits - 1 - i)} ELSE 0 END)")
         .mkString(" + ")
-    val bucketCols = (0 until Tables_).map(t => s"(${bucket12(t)}) AS bk$t")
-      .mkString(",\n    ")
-    val flips = (0L +: (0 until ProbeBits).map(1L << _)).mkString(", ")
+    val bucketCols = (0 until Tables_).map(t => s"(${bucket(t)}) AS bk$t").mkString(",\n    ")
+    s"e AS (SELECT vec_id, embedding, $bucketCols FROM embeddings)"
+  }
+
+  /** The probe neighborhood {0} ∪ {2^b : b < ProbeBits} as a SQL list. */
+  private val flipsSql = (0L +: (0 until ProbeBits).map(1L << _)).mkString(", ")
+
+  private def q29lshScaledSql: String = {
     val collide = (0 until Tables_)
-      .map(t => s"xor(q.bk$t // el.dv, e.bk$t // el.dv) IN ($flips)")
+      .map(t => s"xor(q.bk$t // el.dv, e.bk$t // el.dv) IN ($flipsSql)")
       .mkString(" OR ")
-    s"""WITH e AS (SELECT vec_id, embedding, $bucketCols FROM embeddings),
+    s"""WITH ${bucketedSql(MaxBitsPerTable)},
        |el AS (SELECT CAST(pow(2, $MaxBitsPerTable - (CASE
        |    WHEN COUNT(*) <= 4096 THEN 6 WHEN COUNT(*) <= 16384 THEN 8
        |    WHEN COUNT(*) <= 65536 THEN 10 ELSE $MaxBitsPerTable END))
@@ -273,9 +297,7 @@ object Similarity {
        |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id
        |  FROM q JOIN e ON e.vec_id <> q.vec_id CROSS JOIN el
        |  WHERE ($collide))
-       |SELECT q_id, COUNT(*) AS n_cands, CAST(SUM(vec_id) AS BIGINT) AS sum_cand,
-       |  MIN(vec_id) AS min_cand, MAX(vec_id) AS max_cand
-       |FROM cand GROUP BY q_id ORDER BY q_id ASC NULLS LAST""".stripMargin
+       |$candidateSummarySql""".stripMargin
   }
 
   /** Oracle replaying the full multiprobe banding in SQL: per-table
@@ -283,24 +305,12 @@ object Similarity {
     * single-bit-flip probe neighborhood expressed as
     * xor(bucket_q, bucket_e) ∈ {0} ∪ {2^b : b < nProbeBits}. */
   private def q29lshCandsSql: String = {
-    def planeDot(p: Int): String =
-      (0 until VectorSql.Dim).map(d =>
-        s"CAST(embedding[${d + 1}] AS DOUBLE)*${planeComponent(p, d).toInt}")
-        .mkString(" + ")
-    def bucket(t: Int): String =
-      (0 until BitsPerTable).map(i =>
-        s"(CASE WHEN (${planeDot(t * MaxBitsPerTable + i)}) >= 0 THEN ${1L << (BitsPerTable - 1 - i)} ELSE 0 END)")
-        .mkString(" + ")
-    val bucketCols = (0 until Tables_).map(t => s"(${bucket(t)}) AS bk$t").mkString(",\n    ")
-    val flips = (0L +: (0 until ProbeBits).map(1L << _)).mkString(", ")
-    val collide = (0 until Tables_).map(t => s"xor(q.bk$t, e.bk$t) IN ($flips)").mkString(" OR ")
-    s"""WITH e AS (SELECT vec_id, embedding, $bucketCols FROM embeddings),
+    val collide = (0 until Tables_).map(t => s"xor(q.bk$t, e.bk$t) IN ($flipsSql)").mkString(" OR ")
+    s"""WITH ${bucketedSql(BitsPerTable)},
        |q AS (SELECT * FROM e WHERE vec_id < 10),
        |cand AS (SELECT DISTINCT q.vec_id AS q_id, e.vec_id
        |  FROM q JOIN e ON e.vec_id <> q.vec_id AND ($collide))
-       |SELECT q_id, COUNT(*) AS n_cands, CAST(SUM(vec_id) AS BIGINT) AS sum_cand,
-       |  MIN(vec_id) AS min_cand, MAX(vec_id) AS max_cand
-       |FROM cand GROUP BY q_id ORDER BY q_id ASC NULLS LAST""".stripMargin
+       |$candidateSummarySql""".stripMargin
   }
 
   // IVF defaults: 16 lists, 2 Lloyd rounds over the corpus (decimal-
@@ -450,17 +460,8 @@ object Similarity {
   private def ivfRank(s: SparkSession, assigned: DataFrame, cent: DataFrame,
       queryVecs: DataFrame, k: Int, nProbe: Int): DataFrame = {
     val probes = probeLists(s, cent, queryVecs, nProbe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc_nulls_last, col("vec_id").asc_nulls_last)
-    assigned.join(broadcast(probes), Seq("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        VectorOps.cosineFast(s, "q_emb", "embedding").as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"),
-        round(col("cos"), 9).as("cos"))
-      .orderBy(col("q_id").asc_nulls_last, col("rank").asc_nulls_last)
+    topKByCos(cosScored(s, assigned.join(broadcast(probes), Seq("c_id"))
+      .where(col("vec_id") =!= col("q_id"))), k)
   }
 
   /** PUBLIC API — build a persisted IVF index: trains the quantizer,
@@ -521,12 +522,8 @@ object Similarity {
     val assigned = assignToCentroids(s, e, cent).select(col("vec_id"), col("c_id"))
     val probes = probeLists(s, cent, e.where(queryPred), nProbe)
       .select(col("q_id"), col("c_id"))
-    assigned.join(broadcast(probes), Seq("c_id"))
-      .where(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_cands"), sum(col("vec_id")).as("sum_cand"),
-        min(col("vec_id")).as("min_cand"), max(col("vec_id")).as("max_cand"))
-      .orderBy(col("q_id").asc_nulls_last)
+    candidateSummary(assigned.join(broadcast(probes), Seq("c_id"))
+      .where(col("vec_id") =!= col("q_id")))
   }
 
   private def q29ivfCands(s: SparkSession, dir: String): DataFrame =
@@ -603,9 +600,7 @@ object Similarity {
        |cand AS (
        |  SELECT p.q_id, a.vec_id FROM afull a JOIN probes p ON a.c_id = p.c_id
        |  WHERE a.vec_id <> p.q_id)
-       |SELECT q_id, COUNT(*) AS n_cands, CAST(SUM(vec_id) AS BIGINT) AS sum_cand,
-       |  MIN(vec_id) AS min_cand, MAX(vec_id) AS max_cand
-       |FROM cand GROUP BY q_id ORDER BY q_id ASC NULLS LAST""".stripMargin
+       |$candidateSummarySql""".stripMargin
   }
 
   def defs: Seq[QueryDef] = Seq(

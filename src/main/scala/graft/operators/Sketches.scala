@@ -66,6 +66,17 @@ object Sketches {
   private val CmsConf = 0.99
   private val CmsSeed = 42
 
+  /** The (source, tok) rows of `docs`' space-split texts and the
+    * corpus's global top-`k` tokens by count (ties to the lower token):
+    * the token set both heavy-hitter twins probe. */
+  private def tokensAndTop(docs: DataFrame, k: Int): (DataFrame, DataFrame) = {
+    val tok = docs
+      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
+    (tok, tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
+      .orderBy(col("c").desc_nulls_last, col("tok").asc_nulls_last)
+      .limit(k).select(col("tok")))
+  }
+
   /** PUBLIC API — per-source heavy-hitter estimates: a Count-Min sketch
     * per source (Spark's built-in `count_min_sketch` aggregate — fixed
     * seed, mergeInPlace-combined map-side, so the result is independent
@@ -80,11 +91,7 @@ object Sketches {
       eps: Double = CmsEps, confidence: Double = CmsConf,
       seed: Int = CmsSeed): DataFrame = {
     graft.Graft.register(s)
-    val tok = docs
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-    val top = tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc_nulls_last, col("tok").asc_nulls_last)
-      .limit(k).select(col("tok"))
+    val (tok, top) = tokensAndTop(docs, k)
     val cms = tok.groupBy(col("source"))
       .agg(count_min_sketch(col("tok"), lit(eps), lit(confidence),
         lit(seed)).as("sk"))
@@ -97,11 +104,7 @@ object Sketches {
   /** PUBLIC API — the exact twin: true per-source counts of the global
     * top-`k` tokens. */
   def heavyHittersExact(docs: DataFrame, k: Int = TopK): DataFrame = {
-    val tok = docs
-      .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-    val top = tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .orderBy(col("c").desc_nulls_last, col("tok").asc_nulls_last)
-      .limit(k).select(col("tok"))
+    val (tok, top) = tokensAndTop(docs, k)
     tok.join(broadcast(top), Seq("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n"))
       .orderBy(col("source").asc_nulls_last, col("tok").asc_nulls_last)

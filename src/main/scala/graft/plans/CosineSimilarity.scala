@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Native codegen'd cosine similarity over two ArrayType(FloatType)
   * columns.
@@ -22,49 +20,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getFloat(i).toDouble
-      val yi = y.getFloat(i).toDouble
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+  protected val accumulators: Seq[String] = Seq("dot", "na", "nb")
+  protected def step(acc: Array[Double], xi: Double, yi: Double): Unit = {
+    acc(0) += xi * yi
+    acc(1) += xi * xi
+    acc(2) += yi * yi
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val xi = ctx.freshName("xi")
-      val yi = ctx.freshName("yi")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $dot = 0.0;
-         |double $na = 0.0;
-         |double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xi = (double) $x.getFloat($i);
-         |  double $yi = (double) $y.getFloat($i);
-         |  $dot += $xi * $yi;
-         |  $na += $xi * $xi;
-         |  $nb += $yi * $yi;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
+  protected def result(acc: Array[Double]): Double =
+    acc(0) / (math.sqrt(acc(1)) * math.sqrt(acc(2)))
+  protected def stepCode(acc: Seq[String], xi: String, yi: String): String =
+    s"${acc(0)} += $xi * $yi; ${acc(1)} += $xi * $xi; ${acc(2)} += $yi * $yi;"
+  protected def resultCode(acc: Seq[String]): String =
+    s"${acc(0)} / (java.lang.Math.sqrt(${acc(1)}) * java.lang.Math.sqrt(${acc(2)}))"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =

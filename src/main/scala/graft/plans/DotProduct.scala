@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Native codegen'd dot product over two ArrayType(FloatType) columns —
   * the same sequential double fold as [[CosineSimilarity]]'s dot term,
@@ -16,33 +14,13 @@ case class DotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "dot_product"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $dot += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |}
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
+  protected val accumulators: Seq[String] = Seq("dot")
+  protected def step(acc: Array[Double], xi: Double, yi: Double): Unit =
+    acc(0) += xi * yi
+  protected def result(acc: Array[Double]): Double = acc(0)
+  protected def stepCode(acc: Seq[String], xi: String, yi: String): String =
+    s"${acc(0)} += $xi * $yi;"
+  protected def resultCode(acc: Seq[String]): String = acc(0)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =

@@ -1,8 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 
 /** Native codegen'd squared-L2 distance over two ArrayType(FloatType)
   * columns — the PQ assignment/encode hot path (graft.operators.Pq
@@ -20,36 +18,15 @@ case class L2Squared(left: Expression, right: Expression)
 
   override def prettyName: String = "l2_sq"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
+  protected val accumulators: Seq[String] = Seq("acc")
+  protected def step(acc: Array[Double], xi: Double, yi: Double): Unit = {
+    val d = xi - yi
+    acc(0) += d * d
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $x.getFloat($i) - (double) $y.getFloat($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  protected def result(acc: Array[Double]): Double = acc(0)
+  protected def stepCode(acc: Seq[String], xi: String, yi: String): String =
+    s"${acc(0)} += ($xi - $yi) * ($xi - $yi);"
+  protected def resultCode(acc: Seq[String]): String = acc(0)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2Squared =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{QueryDef, Tables}
-import graft.Canon.exactSum
+import graft.Canon.{exactSum, sqlXyMoments}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -99,11 +99,7 @@ object StreamAssoc {
        |FROM (
        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
        |    CAST(COUNT(*) AS BIGINT) AS n,
-       |    CAST(SUM(CAST(x AS DECIMAL(38,12))) AS DOUBLE) AS sx,
-       |    CAST(SUM(CAST(y AS DECIMAL(38,12))) AS DOUBLE) AS sy,
-       |    CAST(SUM(CAST(x * x AS DECIMAL(38,12))) AS DOUBLE) AS sxx,
-       |    CAST(SUM(CAST(y * y AS DECIMAL(38,12))) AS DOUBLE) AS syy,
-       |    CAST(SUM(CAST(x * y AS DECIMAL(38,12))) AS DOUBLE) AS sxy
+       |$sqlXyMoments
        |  FROM (SELECT event_type, ts, value AS x,
        |          CAST(props->>'k' AS DOUBLE) AS y FROM events) e
        |  WHERE x IS NOT NULL AND y IS NOT NULL

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * job, only the canonical board may overwrite the tracked
   * BENCH_BOARD.json or meet the baselines, only Metrics (and the three
   * specs that check what it cannot see) listens to the scheduler, no
-  * code reads the BASELINE.md prose ledger, and the dedup oracles'
-  * word-trigram shingle CTE has one writer. */
+  * code reads the BASELINE.md prose ledger, the dedup oracles'
+  * word-trigram shingle CTE has one writer, and no code window of
+  * src/main is written twice. */
 class EntryPointSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala/graft")
 
@@ -124,6 +125,28 @@ class EntryPointSpec extends AnyFunSuite {
     val hits = offenders(files, """list_distinct\(\[s\[i\] \|\| ' ' \|\| s\[i\+1\]""")
     assert(hits.size == 1,
       hits.mkString(s"expected 1 shingle CTE literal, found ${hits.size}:\n", "\n", ""))
+  }
+
+  test("no 5-line code window is written twice in src/main") {
+    // a window is 5 consecutive lines, blank, comment and import lines
+    // skipped, of at least 120 characters joined; one whose text occurs
+    // twice is a building block with two implementations that can drift
+    // apart, so shared code (oracle SQL generators included) has one
+    val files = scalaFiles(Paths.get("src/main"))
+    assert(files.size > 50, "source tree not found")
+    val windows = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toSeq.map(_.trim).zipWithIndex
+        .filterNot { case (l, _) =>
+          l.isEmpty || l.startsWith("//") || l.startsWith("*") ||
+            l.startsWith("/*") || l.startsWith("import ")
+        }
+      w <- lines.sliding(5) if w.size == 5
+      text = w.map(_._1).mkString("\n") if text.length >= 120
+    } yield (text, s"$f:${w.head._2 + 1}")
+    val dups = windows.groupBy(_._1).values.filter(_.size > 1)
+      .map(_.map(_._2).mkString(" = ")).toSeq.sorted
+    assert(dups.isEmpty, dups.mkString("duplicated windows (file:first line):\n", "\n", ""))
   }
 
   test("no code in src/main reads the BASELINE.md ledger") {

@@ -49,6 +49,13 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(lineitemBytes("/nonexistent") == 0L)
   }
 
+  test("a corpus dir without lineitem.parquet fails fast, naming the dir") {
+    val e = intercept[IllegalArgumentException](forDir("/nonexistent/sf0.01"))
+    assert(e.getMessage.contains("'/nonexistent/sf0.01'"), e.getMessage)
+    assert(e.getMessage.contains("lineitem.parquet"), e.getMessage)
+    assert(forDir(SparkTestSession.sf).bcastStatic == "10m")
+  }
+
   test("profile: the four tier keys plus zstd, UTC, nanos and UI off") {
     val p = profile(tierFor(0L), 7).toMap
     assert(p.size == profile(tierFor(0L), 7).size, "no key set twice")
