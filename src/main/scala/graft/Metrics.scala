@@ -119,12 +119,16 @@ object Metrics {
   private def empty(query: String): QueryRecord =
     QueryRecord(query, 0, -1, 0, 0, 0, 0, 0, 0, 0, 0, 0, 0, Map.empty)
 
-  /** Expand the physical plan through AQE wrappers so exchange metrics
-    * inside materialized query stages are visible. */
-  private def expand(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => p +: expand(a.executedPlan)
-    case q: QueryStageExec => p +: expand(q.plan)
-    case _ => p +: p.children.flatMap(expand)
+  /** Every node of the physical plan, descending through the AQE
+    * wrappers (an `AdaptiveSparkPlanExec` or `QueryStageExec` is a leaf
+    * whose real subtree hangs off it), so exchange metrics inside
+    * materialized query stages are visible. A `ReusedExchangeExec` is
+    * not descended: its subtree is walked at its original site. The
+    * plan-shape specs walk plans with it too. */
+  private[graft] def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => p +: planNodes(a.executedPlan)
+    case q: QueryStageExec => p +: planNodes(q.plan)
+    case _ => p +: p.children.flatMap(planNodes)
   }
 
   private def sumMetric(plans: Seq[SparkPlan], key: String): Long =
@@ -132,7 +136,7 @@ object Metrics {
 
   /** Fold one finished execution into record `r`. */
   private def withExecution(r: QueryRecord, qe: QueryExecution, durationMs: Long): QueryRecord = {
-    val plans = expand(qe.executedPlan)
+    val plans = planNodes(qe.executedPlan)
     val observed = qe.observedMetrics.map { case (point, row) =>
       point -> row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
         f -> row.get(i)

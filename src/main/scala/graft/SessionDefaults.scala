@@ -9,14 +9,18 @@ import org.apache.spark.sql.SparkSession
   * confs (the LIBRARY's deployment defaults — they are what make
   * q105/q21/q62/q72/q87 survive the sf100 tier) plus a fixed base:
   * UTC, the nanos-timestamp fixture conf, the UI off and the zstd
-  * shuffle codec. Everything else is Spark's own default (AQE, skew
-  * join, partition coalescing, shuffle checksums and compression).
+  * shuffle codec. [[Tier.confs]] also carries two settings that are the
+  * same at every tier, so that [[configure]] applies them too: the
+  * driver's result-size cap and the size of the compiled-class cache.
+  * Everything else is Spark's own default (AQE, skew join, partition
+  * coalescing, shuffle checksums and compression).
   *
   * The tier key is the corpus footprint, probed from the on-disk bytes
   * of the largest fact table (`lineitem`):
   *
-  *  - fixture (≤ 512 MB): Spark's own defaults. The sub-GB boards and
-  *    their pinned plan contracts stay byte-identical.
+  *  - fixture (≤ 512 MB): Spark's own broadcast thresholds and
+  *    compression factor. The sub-GB boards and their pinned plan
+  *    contracts stay byte-identical.
   *  - sf10 tier (> 512 MB): 64m broadcast thresholds — the filtered
   *    TPC-H dims (part/customer projections) still fit any sane
   *    executor, and the r15h decade study measured the SMJ fallback
@@ -39,7 +43,7 @@ import org.apache.spark.sql.SparkSession
   * memory instead: keep the built relation under ~25% of the heap,
   * i.e. adaptive ≈ heap/16 compressed (the observed 6-10x expansion
   * plus hash-table overhead). The fixture tier is memory-safe
-  * everywhere (Spark defaults).
+  * everywhere (Spark's default thresholds).
   */
 object SessionDefaults {
 
@@ -48,7 +52,9 @@ object SessionDefaults {
   /** Lineitem footprint above which the sf100-tier confs apply. */
   val Sf100FloorBytes: Long = 8L << 30
 
-  /** The tier-derived session confs, as (conf key → value). */
+  /** The confs [[configure]] applies, as (conf key → value): the three
+    * tier-derived ones plus two that every tier shares (the driver's
+    * result-size cap and the compiled-class cache size). */
   final case class Tier(
       bcastStatic: String,
       bcastAdaptive: String,
@@ -61,7 +67,16 @@ object SessionDefaults {
       // default cancels legitimate 128-384m-threshold builds at sf100
       // (r16 tail: q27/q62). Bounded well under every driver heap the
       // protocol uses (8g fixture / 48g scale runs).
-      "spark.driver.maxResultSize" -> "4g")
+      "spark.driver.maxResultSize" -> "4g",
+      // the JVM-wide cache of compiled generated classes (static conf,
+      // read once when the first class is compiled). The cache splits its
+      // size over 4 LRU segments. One pass of the gated TPC-H benchmark
+      // uses about 150 distinct classes at sf0.1, about 38 per segment:
+      // the default 100 (25 per segment) recompiled 144 of them on every
+      // later pass, while 1000 (250 per segment) holds the set over six
+      // times. A whole-registry pass (about 4,000 classes) still cycles
+      // it; the larger cache cost 7 MB of metaspace there.
+      "spark.sql.codegen.cache.maxEntries" -> "1000")
   }
 
   /** Pure tier derivation from the corpus footprint. */

@@ -84,12 +84,19 @@ object Analytics {
   /** Q42: TPC-H Q3 (shipping priority, adapted to fixture columns) —
     * the classic 3-way join + filtered aggregate + top-10. Catalyst
     * pushes both date filters and the segment filter into the scans;
-    * the top-10 is TakeOrderedAndProject, never a global sort. */
+    * the top-10 is TakeOrderedAndProject, never a global sort. The
+    * filtered customer ⋈ orders composite is the build side: size-only
+    * statistics estimate a join's output as the product of its inputs,
+    * so unhinted the planner broadcasts the projected lineitem scan
+    * instead (582k rows at sf0.1), and AQE never revisits a broadcast.
+    * The composite has at most one row per order, so the hint keys on
+    * orders' footprint and drops out with it at scale. */
   private def q42(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
-      .join(Tables.t(s, dir, "orders")
-        .where(col("o_orderdate") < lit("1995-03-15").cast("timestamp")),
-        col("c_custkey") === col("o_custkey"))
+    Tables.broadcastIfUnder(s, dir, "orders")(
+      Tables.t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
+        .join(Tables.t(s, dir, "orders")
+          .where(col("o_orderdate") < lit("1995-03-15").cast("timestamp")),
+          col("c_custkey") === col("o_custkey")))
       .join(Tables.t(s, dir, "lineitem")
         .where(col("l_shipdate") > lit("1995-03-15").cast("timestamp")),
         col("o_orderkey") === col("l_orderkey"))
@@ -113,12 +120,15 @@ object Analytics {
       |LIMIT 10""".stripMargin
 
   /** Q43: TPC-H Q5 (local-supplier volume, adapted) — 6-way star join
-    * with the two small dims broadcast, revenue per nation for 1997. */
+    * with the two small dims broadcast, revenue per nation for 1997.
+    * The customer ⋈ orders(1997) composite is the build side lineitem
+    * streams through (as q42; unhinted, all of lineitem is broadcast). */
   private def q43(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "customer")
-      .join(Tables.t(s, dir, "orders")
-        .where(year(col("o_orderdate")) === 1997),
-        col("c_custkey") === col("o_custkey"))
+    Tables.broadcastIfUnder(s, dir, "orders")(
+      Tables.t(s, dir, "customer")
+        .join(Tables.t(s, dir, "orders")
+          .where(year(col("o_orderdate")) === 1997),
+          col("c_custkey") === col("o_custkey")))
       .join(Tables.t(s, dir, "lineitem"),
         col("o_orderkey") === col("l_orderkey"))
       .join(Tables.t(s, dir, "supplier"),
@@ -264,15 +274,18 @@ object Analytics {
     * orders whose line quantities total past a threshold, joined back
     * for customer detail. The qualifying-key set is computed once
     * (group + having) and semi-joined; quantities accumulate in
-    * DECIMAL(28,2) on both engines (order-independent). */
+    * DECIMAL(28,2) on both engines (order-independent). The qualifying
+    * orders ⋈ customer composite is the build side of the join back to
+    * lineitem (as q42; unhinted, all of lineitem is broadcast). */
   private def q64(s: SparkSession, dir: String): DataFrame = {
     val l = Tables.t(s, dir, "lineitem")
     val big = l.groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity").cast("decimal(28,2)")).as("qty"))
       .where(col("qty") > 300).select(col("l_orderkey").as("bigkey"))
-    Tables.t(s, dir, "orders")
-      .join(big, col("o_orderkey") === col("bigkey"), "left_semi")
-      .join(Tables.t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+    Tables.broadcastIfUnder(s, dir, "orders")(
+      Tables.t(s, dir, "orders")
+        .join(big, col("o_orderkey") === col("bigkey"), "left_semi")
+        .join(Tables.t(s, dir, "customer"), col("o_custkey") === col("c_custkey")))
       .join(l, col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("c_name"), col("c_custkey"), col("o_orderkey"),
         col("o_orderdate"), col("o_totalprice"))

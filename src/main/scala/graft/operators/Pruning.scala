@@ -32,13 +32,18 @@ object Pruning {
 
   /** q77: ship-years of returned lineitems decide which order-year
     * partitions exist at all for the aggregate — the fact side scans
-    * only those partitions, proven at runtime by the dim subquery. */
+    * only those partitions, proven at runtime by the dim subquery. The
+    * dim (one row per calendar year at any scale) is the build side:
+    * unhinted, the planner's size estimates broadcast the fact instead
+    * (all 150k orders rows at sf0.1), and with no dim broadcast to
+    * reuse the final plan drops the pruning filter
+    * (`dynamicpruningexpression(true)`). */
   private def q77(s: SparkSession, dir: String): DataFrame = {
     val fact = s.read.parquet(yearPartitionedOrders(s, dir))
     val dim = Tables.t(s, dir, "lineitem")
       .where(col("l_returnflag") === "R")
       .select(year(col("l_shipdate")).as("o_year")).distinct()
-    fact.join(dim, Seq("o_year"))
+    fact.join(broadcast(dim), Seq("o_year"))
       // partition-dir discovery types o_year as INT; the oracle's year()
       // is BIGINT — cast for schema parity
       .groupBy(col("o_year").cast("long").as("o_year"))

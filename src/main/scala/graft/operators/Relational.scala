@@ -66,7 +66,7 @@ object Relational {
     * fails the oracle hash. */
   private def q02fmt(fmt: String)(s: SparkSession, dir: String): DataFrame = {
     val out = TempDirs.createTempDirectory(s"graft_sink_q02_$fmt")
-    val src = q01(s, dir)
+    val src = q01rows(s, dir)
     val w = src.write.mode("overwrite")
     val r = s.read.schema(src.schema)
     fmt match {

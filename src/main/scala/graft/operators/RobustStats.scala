@@ -507,11 +507,13 @@ object RobustStats {
     // checkpointed: the g-level and (g,bin)-level broadcasts below are
     // DIFFERENT projections, so exchange reuse cannot dedupe them — an
     // uncheckpointed hist would re-derive the two-scan cumHist lineage
-    // once per broadcast (r11, VERDICT r10 item 4)
+    // once per broadcast (r11, VERDICT r10 item 4). Eager, as in
+    // [[profile]]: a lazy checkpoint read by two broadcasts is computed
+    // by both of their jobs when AQE runs them concurrently.
     val hist = cumHist(base)
       .select(col("g"), col("bin"), col("cnt"), col("cum_before"),
         col("lo"), col("hi"), col("w"), col("n"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     sketchCdf(base.join(broadcast(hist.select(col("g"), col("lo"), col("hi"),
         col("w"), col("n")).distinct()), Seq("g")), hist)
   }

@@ -177,34 +177,26 @@ object TpchFull {
     * per year for a part-name family. ps_supplycost is schema-gone; the
     * cost leg substitutes 0.6 × p_retailprice × l_quantity (a fixed
     * margin against the part's list price), keeping the
-    * expression-over-4-table-join shape intact. */
-  /** Q106's join/aggregate kernel over EXPLICIT inputs, so a bucketed
-    * layout (catalog facts bucketed by orderkey) runs the identical
-    * computation as the registry entry's plain parquet frames. With the dims
-    * broadcast (the SessionDefaults sf100 thresholds), the lineitem ⋈
-    * orders sort-merge is the only fact shuffle left; when BOTH facts
-    * arrive bucketed by orderkey, broadcast joins preserve lineitem's
-    * bucket partitioning through the dim attachments and that SMJ runs
-    * exchange-free — the 100 TB answer for a key joined many times per
-    * day (the ingest shuffle amortizes across repeats). */
-  def q106Kernel(part: DataFrame, lineitem: DataFrame, supplier: DataFrame,
-      orders: DataFrame, nation: DataFrame): DataFrame = {
+    * expression-over-4-table-join shape intact. The red-part lines
+    * (part ⋈ lineitem ⋈ supplier, about 1/8 of lineitem) are the build
+    * side orders streams past; unhinted, the planner broadcasts all of
+    * orders (150k rows at sf0.1). The hint keys on lineitem, the table
+    * that bounds the lines. */
+  private def q106(s: SparkSession, dir: String): DataFrame = {
     val profit = (col("l_extendedprice") * (lit(1.0) - col("l_discount")) -
       col("p_retailprice") * col("l_quantity") * lit(0.6)).cast("decimal(28,4)")
-    part.where(col("p_name").like("%red%"))
-      .join(lineitem, col("p_partkey") === col("l_partkey"))
-      .join(supplier, col("l_suppkey") === col("s_suppkey"))
-      .join(orders, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
+    val lines = Tables.t(s, dir, "part").where(col("p_name").like("%red%"))
+      .join(Tables.t(s, dir, "lineitem"), col("p_partkey") === col("l_partkey"))
+      .join(Tables.t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+    Tables.t(s, dir, "orders")
+      .join(Tables.broadcastIfUnder(s, dir, "lineitem")(lines),
+        col("l_orderkey") === col("o_orderkey"))
+      .join(broadcast(Tables.t(s, dir, "nation")),
+        col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name").as("nation"), year(col("o_orderdate")).as("o_year"))
       .agg(sum(profit).cast("double").as("sum_profit"))
       .orderBy(col("nation").asc_nulls_last, col("o_year").desc_nulls_last)
   }
-
-  private def q106(s: SparkSession, dir: String): DataFrame =
-    q106Kernel(Tables.t(s, dir, "part"), Tables.t(s, dir, "lineitem"),
-      Tables.t(s, dir, "supplier"), Tables.t(s, dir, "orders"),
-      Tables.t(s, dir, "nation"))
 
   private val q106Sql =
     """SELECT n_name AS nation,
@@ -226,13 +218,17 @@ object TpchFull {
     * flag, grouped on the full customer projection, then a bounded
     * TakeOrderedAndProject (never a global sort) delivers the top-k.
     * c_address/phone/comment are schema-gone and dropped from the
-    * projection. */
+    * projection. The customer ⋈ orders(quarter) composite is the build
+    * side the returned lines stream through (unhinted, the planner
+    * broadcasts the returned lines, 200k rows at sf0.1; the composite
+    * has at most one row per order, so the hint keys on orders). */
   private def q107(s: SparkSession, dir: String): DataFrame =
-    Tables.t(s, dir, "customer")
-      .join(Tables.t(s, dir, "orders")
-          .where(col("o_orderdate") >= ts("1996-01-01") &&
-            col("o_orderdate") < ts("1996-04-01")),
-        col("c_custkey") === col("o_custkey"))
+    Tables.broadcastIfUnder(s, dir, "orders")(
+      Tables.t(s, dir, "customer")
+        .join(Tables.t(s, dir, "orders")
+            .where(col("o_orderdate") >= ts("1996-01-01") &&
+              col("o_orderdate") < ts("1996-04-01")),
+          col("c_custkey") === col("o_custkey")))
       .join(Tables.t(s, dir, "lineitem").where(col("l_returnflag") === "R"),
         col("o_orderkey") === col("l_orderkey"))
       .join(broadcast(Tables.t(s, dir, "nation")),
@@ -289,13 +285,16 @@ object TpchFull {
     * aggregation over a DERIVED category. l_shipmode and
     * commit/receipt dates are schema-gone; the category becomes the
     * shipping-latency tier (days from order to ship), preserving the
-    * CASE-inside-SUM over CASE-derived-group shape. */
+    * CASE-inside-SUM over CASE-derived-group shape. The 1996 lines
+    * (about 1/7 of lineitem) are the build side orders streams past;
+    * unhinted, the planner broadcasts all of orders. */
   private def q109(s: SparkSession, dir: String): DataFrame = {
     val hi = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     Tables.t(s, dir, "orders")
-      .join(Tables.t(s, dir, "lineitem")
-          .where(col("l_shipdate") >= ts("1996-01-01") &&
-            col("l_shipdate") < ts("1997-01-01")),
+      .join(Tables.broadcastIfUnder(s, dir, "lineitem")(
+          Tables.t(s, dir, "lineitem")
+            .where(col("l_shipdate") >= ts("1996-01-01") &&
+              col("l_shipdate") < ts("1997-01-01"))),
         col("o_orderkey") === col("l_orderkey"))
       .withColumn("ship_speed",
         when(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"), "SLOW")

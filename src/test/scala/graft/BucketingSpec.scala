@@ -11,22 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class BucketingSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def countExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int = {
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def walk(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-      val self = p match {
-        case _: ShuffleExchangeLike => 1
-        case _ => 0
-      }
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case _ => 0
-      }
-      self + inner + p.children.map(walk).sum
-    }
-    walk(plan)
-  }
+  private def countExchanges(plan: org.apache.spark.sql.execution.SparkPlan): Int =
+    Metrics.planNodes(plan).count(
+      _.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike])
 
   test("bucketed join plans zero shuffle exchanges; plain join needs them") {
     val bucketed = operators.Bucketing.bucketedJoin(spark, sf)

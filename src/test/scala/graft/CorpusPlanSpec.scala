@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,16 +16,8 @@ class CorpusPlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan
   }
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] = {
-    val inner = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case _ => Seq.empty
-    }
-    p +: (inner ++ p.children.flatMap(walk))
-  }
-
   private def shuffles(p: SparkPlan): Seq[ShuffleExchangeLike] =
-    walk(p).collect { case e: ShuffleExchangeLike => e }
+    Metrics.planNodes(p).collect { case e: ShuffleExchangeLike => e }
 
   test("q59 chunking is map-only: the one exchange is the output sort") {
     val plan = executed(SparkEntry.queries("q59_doc_chunks")(spark, sf))

@@ -24,18 +24,8 @@ class NaajSpec extends AnyFunSuite {
   }
 
   test("NOT IN over a nullable column plans the null-aware anti join") {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
     import spark.implicits._
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val inner = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-        case _ => Seq.empty
-      }
-      p +: (inner ++ p.children.flatMap(walk))
-    }
     // nullable SCHEMA (Option-typed) with no actual NULL: the planner
     // must stay null-aware (nullability is a static property), and with
     // a non-empty result AQE can't short-circuit the join away (a build
@@ -47,7 +37,7 @@ class NaajSpec extends AnyFunSuite {
     val df = spark.sql(
       "SELECT k FROM naaj_l2 WHERE k NOT IN (SELECT v FROM naaj_r2)")
     df.collect()
-    val nodes = walk(df.queryExecution.executedPlan)
+    val nodes = Metrics.planNodes(df.queryExecution.executedPlan)
     // SPARK-32290: single-column NOT IN over a nullable build side →
     // BroadcastHashJoin LeftAnti with the null-aware flag (a pre-32290
     // planner degenerates to BroadcastNestedLoopJoin)

@@ -1,8 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanLike, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
@@ -135,19 +134,6 @@ class PlanContractSpec extends AnyFunSuite {
   private val ContractPath =
     java.nio.file.Paths.get("src/test/resources/plan-contracts.tsv")
 
-  /** Walk the FINAL adaptive plan, descending through the AQE wrappers
-    * (QueryStageExec is a leaf node whose real subtree hangs off
-    * `.plan`). ReusedExchangeExec is NOT descended — its shared subtree
-    * is already walked at its original site; reuse is its own count. */
-  private def walk(p: SparkPlan): Seq[SparkPlan] = {
-    val inner = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case _ => Seq.empty
-    }
-    p +: (inner ++ p.children.flatMap(walk))
-  }
-
   private final case class Shape(shuffles: Int, broadcasts: Int, reuses: Int,
       smj: Int, bhj: Int, bnlj: Int, codegen: Int, scans: Int, dpp: Boolean,
       bloom: Boolean, gwin: Int, prejobs: Int) {
@@ -179,9 +165,10 @@ class PlanContractSpec extends AnyFunSuite {
     df.sparkSession.catalog.clearCache()
     // collect() executes the DataFrame's OWN QueryExecution (a noop
     // write would build a separate command QE and leave this one
-    // unfinalized), so the walk below sees the post-AQE final plan
+    // unfinalized), so the walk below sees the post-AQE final plan; a
+    // ReusedExchangeExec is not descended, reuse is its own count
     df.collect()
-    val nodes = walk(df.queryExecution.executedPlan)
+    val nodes = Metrics.planNodes(df.queryExecution.executedPlan)
     // codegen spans are counted from the FORMATTED executed plan: under
     // AQE the WholeStageCodegen wrappers live in the materialized stage
     // clones, not in the `QueryStageExec.plan` subtrees the node walk
